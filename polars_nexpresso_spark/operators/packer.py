@@ -8,17 +8,22 @@ API. Design notes for scale (SURVEY §4):
   first(ignorenulls))`` — a plain shuffled hash aggregation that Catalyst
   plans with partial/final phases and spill; an N-level pack to root is N
   chained shuffles on progressively coarser keys. No global sort anywhere:
-  child-list order is established *inside* the aggregation via
-  ``array_sort`` with a key-only comparator, and the minimum child row-id is
-  carried upward per group so multi-level packs keep nested order without a
-  pipeline-breaking sort (reference ``:2641-2693``).
+  child-list order is established *inside* the aggregation by sorting
+  ``struct(sort keys, payload)`` wrappers with the native ``sort_array``
+  (``array_sort`` with a key-only comparator only for payloads Spark cannot
+  order, e.g. maps), and the minimum child row-id is carried upward per
+  group so multi-level packs keep nested order without a pipeline-breaking
+  sort (reference ``:2641-2693``).
 - Top-level row order after pack is explicitly NOT guaranteed (reference
   ``README.md:251-254``) — Spark's unordered shuffle matches the contract
   as-is.
 - ``pack_streaming``'s hash-bucketing (reference ``:1103-1211``) exists to
   bound peak memory in a single-process engine; Spark's shuffle already hash
   partitions and spills, so the parity wrapper is ``repartition(K, root_keys)``
-  (+ optional parquet checkpoint for the disk-to-disk mode).
+  (+ optional parquet checkpoint for the disk-to-disk mode). ``bounded=True``
+  keeps the reference's K sequential bucket jobs, each re-reading a
+  reproducible source through a root-key hash filter; only a source that
+  must be evaluated once is staged to parquet first.
 - ``parent_strategy="split_join"`` (reference ``:1033-1072``) factors heavy
   root attributes into a per-root-key dim table before the aggregation and
   joins them back after — a shuffle-volume optimization Catalyst cannot infer
@@ -32,6 +37,7 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 import tempfile
 import uuid
 from collections.abc import Callable, Mapping, Sequence
@@ -39,7 +45,8 @@ from typing import Literal
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StructType
+from pyspark.sql import types as T
+from pyspark.sql.types import ArrayType, DataType, StructType, UserDefinedType
 
 from polars_nexpresso_spark.columns import (
     DEFAULT_ESCAPE_CHAR,
@@ -69,13 +76,13 @@ from polars_nexpresso_spark.plans.stats import plan_size_bytes as _plan_size_byt
 
 
 def _struct_key_comparator(key_fields: Sequence[str]) -> Callable[[Column, Column], Column]:
-    """Comparator over wrapper structs that compares ONLY the sort-key fields.
-
-    ``F.array_sort`` without a comparator compares every struct field — which
-    would (a) tie-break on the payload, unlike the reference's stable
-    ``sort_by``, and (b) fail outright if the payload contains a non-orderable
-    type (e.g. a map). The comparator restricts comparison to the key fields,
+    """Comparator over wrapper structs that compares ONLY the sort-key fields,
     with nulls ordered first (the reference's ``sort_by`` default).
+
+    The fallback of :func:`sort_by_keys` for payloads ``sort_array`` cannot
+    order (e.g. a map): restricting comparison to the key fields keeps the
+    sort legal, and ties keep arrival order. Spark evaluates the lambda
+    interpreted, so it costs several times the native sort.
     """
 
     def cmp(left: Column, right: Column) -> Column:
@@ -95,6 +102,67 @@ def _struct_key_comparator(key_fields: Sequence[str]) -> Callable[[Column, Colum
     return cmp
 
 
+# Leaf types Spark can order (``RowOrdering.isOrderable``). A whitelist, so
+# types Spark cannot order (map, variant, calendar interval, geometry) and
+# any type this list does not know take the comparator fallback.
+_ORDERABLE_LEAVES = tuple(
+    t
+    for t in (
+        getattr(T, name, None)
+        for name in (
+            "NullType", "BooleanType", "NumericType", "StringType", "CharType",
+            "VarcharType", "BinaryType", "DateType", "TimestampType",
+            "TimestampNTZType", "TimeType", "DayTimeIntervalType",
+            "YearMonthIntervalType",
+        )
+    )
+    if t is not None
+)
+
+
+def orderable(*dtypes: DataType) -> bool:
+    """Whether Spark can order values of every one of ``dtypes``."""
+    for dtype in dtypes:
+        if isinstance(dtype, StructType):
+            ok = orderable(*[f.dataType for f in dtype.fields])
+        elif isinstance(dtype, ArrayType):
+            ok = orderable(dtype.elementType)
+        elif isinstance(dtype, UserDefinedType):
+            ok = orderable(dtype.sqlType())
+        else:
+            ok = isinstance(dtype, _ORDERABLE_LEAVES)
+        if not ok:
+            return False
+    return True
+
+
+def key_wrapper(keys: Sequence[Column], payload: Column) -> Column:
+    """``struct(__k0, …, __v)``: sort keys ahead of the payload they order."""
+    return F.struct(
+        *[k.alias(f"__k{i}") for i, k in enumerate(keys)], payload.alias("__v")
+    )
+
+
+def sort_by_keys(wrappers: Column, n_keys: int, is_orderable: bool) -> Column:
+    """Sort an array of :func:`key_wrapper` structs by their keys (nulls
+    first) and project the payloads back out — the one child-list sort.
+
+    When the wrapper is orderable (``is_orderable``, see :func:`orderable`)
+    this is ``sort_array(wrappers).__v``: ``SortArray`` and
+    ``GetArrayStructFields`` are both codegen'd. Keys that tie fall through
+    to the payload; the packer's row-id key never ties, so with
+    ``preserve_child_order`` the order is exactly the key order.
+    ``sort_array`` rejects a non-orderable payload at analysis, so those
+    take ``array_sort`` with a key-only comparator instead.
+    """
+    if is_orderable:
+        return F.sort_array(wrappers)["__v"]
+    keys = [f"__k{i}" for i in range(n_keys)]
+    return F.transform(
+        F.array_sort(wrappers, _struct_key_comparator(keys)), lambda x: x["__v"]
+    )
+
+
 class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
     """Pack/unpack nested hierarchies on Spark DataFrames.
 
@@ -112,7 +180,8 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
             this uses ``monotonically_increasing_id()``, which follows file /
             partition read order in practice (stable for Parquet scans) but is
             only *guaranteed* deterministic when a level declares ``order_by``
-            (SURVEY §7.3 item 2).
+            (SURVEY §7.3 item 2). When False, children that tie on
+            ``order_by`` are ordered by their payload (when orderable).
         validate_on_pack: Run the group-uniformity data check during pack.
             Default False: the check costs one extra aggregation job per
             packed level. (The reference defaults True but silently skips it
@@ -692,12 +761,17 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
         order, exactly as the reference documents for its scan mode.
 
         ``bounded=True`` reproduces the reference's memory shape literally:
-        one hash-bucketed staging write (``partitionBy(__bucket)``), then
-        ``partitions`` SEQUENTIAL per-bucket pack jobs appending to the sink.
-        Peak state is one bucket's aggregation + scan buffers, regardless of
-        total input size — the trade the reference documents as 5.8× time for
-        0.42× RSS. On a real cluster the default mode's executor-spill
-        already bounds memory per task; ``bounded`` exists for environments
+        ``partitions`` SEQUENTIAL per-bucket pack jobs appending to the sink,
+        each packing ``source.filter(pmod(xxhash64(root_keys), K) == i)``
+        (the reference's K re-reads). A source that would not re-evaluate
+        to the same rows (a nondeterministic expression, a limit or offset)
+        is instead staged once, hash-partitioned by bucket
+        (``partitionBy(__bucket)``), and each bucket reads its directory;
+        the staging copy is deleted when the loop ends. Peak state is one
+        bucket's aggregation + scan buffers, regardless of total input size
+        — the trade the reference documents as 5.8× time for 0.42× RSS. On
+        a real cluster the default mode's executor-spill already bounds
+        memory per task; ``bounded`` exists for environments
         where the whole job shares one memory budget (local mode, one
         executor, or a sink that must never hold two buckets at once).
         """
@@ -751,10 +825,16 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
         spark: SparkSession | None,
     ) -> DataFrame:
         """K sequential per-bucket pack jobs — the reference's RSS shape
-        (``:1103-1211``): stage the input hash-partitioned by root key, pack
-        one bucket at a time, append each to the sink, stream the result
-        from disk. Peak memory is one bucket, at the cost of K job launches
-        (the one staging pass replaces the reference's K re-reads)."""
+        (``:1103-1211``): pack one root-key hash bucket at a time, append
+        each to the sink, stream the result from disk. Peak memory is one
+        bucket, at the cost of K job launches.
+
+        A source that re-evaluates to the same rows is re-read per bucket
+        (``filter(bucket == i)``, the reference's K re-reads). Any other
+        source — a nondeterministic expression, or a limit/offset whose rows
+        depend on arrival order — is evaluated once into a hash-partitioned
+        staging copy that each bucket reads back, and the copy is deleted
+        once the loop ends."""
         if partitions < 1:
             raise ValueError("partitions must be >= 1")
         df = self._resolve_source(source, spark)
@@ -770,54 +850,88 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
                 f"'{self._levels_meta[0].name}' key columns [{missing}] are "
                 f"present in the input"
             )
-        # Pin the best-effort row id before the bucket shuffle/staging write
-        # (same nondeterministic-fetch-order hazard as the default mode);
-        # it persists through the stage parquet and pack() reuses it.
-        df = self._with_row_id(df)
         session = df.sparkSession
         base = tmp_dir or os.path.join(
             tempfile.gettempdir(), f"pns_bounded_{uuid.uuid4().hex}"
         )
-        stage = os.path.join(base, "stage")
         target = os.path.join(base, "packed")
-
         bucket = F.pmod(F.xxhash64(*[qcol(k) for k in root_keys]), F.lit(partitions))
-        # One staging pass: hive-partition by bucket so each per-bucket job
-        # reads ONLY its directory (partition pruning — no K full scans).
-        # Repartition ON the bucket first so every task writes exactly one
-        # bucket file — without it, dynamic partitioning holds an open
-        # parquet writer per (task × bucket), whose row-group buffers defeat
-        # the memory bounding this mode exists for.
-        (
-            df.withColumn("__bucket", bucket)
-            .repartition(partitions, F.col("__bucket"))
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(stage)
-        )
 
-        first_write = True
-        for i in range(partitions):
-            bucket_dir = os.path.join(stage, f"__bucket={i}")
-            if not glob.glob(os.path.join(bucket_dir, "*.parquet")):
-                continue  # empty bucket (hash imbalance at tiny scale)
-            part = session.read.parquet(bucket_dir)
-            packed = self.pack(part, to_level, extra_columns=extra_columns)
-            packed.write.mode("overwrite" if first_write else "append").parquet(
-                target
+        stage = None
+        if self._reproducible(df):
+            # Each bucket's rows are a filter of the source; pack() pins the
+            # row id on the filtered rows, which keeps their relative order.
+            buckets = [df.filter(bucket == i) for i in range(partitions)]
+        else:
+            # Pin the best-effort row id before the staging write (same
+            # nondeterministic-fetch-order hazard as the default mode); it
+            # persists through the stage parquet and pack() reuses it.
+            df = self._with_row_id(df)
+            stage = os.path.join(base, "stage")
+            # Hive-partition by bucket so each per-bucket job reads ONLY its
+            # directory. Repartition ON the bucket first so every task
+            # writes exactly one bucket file — without it, dynamic
+            # partitioning holds an open parquet writer per (task × bucket),
+            # whose row-group buffers defeat the memory bounding this mode
+            # exists for.
+            (
+                df.withColumn("__bucket", bucket)
+                .repartition(partitions, F.col("__bucket"))
+                .write.mode("overwrite")
+                .partitionBy("__bucket")
+                .parquet(stage)
             )
-            first_write = False
-            # Full GC between buckets: G1 (the JDK 17 default) uncommits
-            # heap back to the OS on full collections, so the process RSS
-            # watermark tracks ONE bucket's working set instead of the
-            # accumulated allocation churn of all K jobs — the measured
-            # bound this mode exists to provide. Cost: one GC per bucket,
-            # noise next to the per-bucket job launch.
-            try:
-                session.sparkContext._jvm.System.gc()
-            except Exception:  # noqa: BLE001 — Connect: no JVM handle
-                pass
+            bucket_dirs = [
+                os.path.join(stage, f"__bucket={i}") for i in range(partitions)
+            ]
+            # An empty bucket (hash imbalance at tiny scale) has no files.
+            buckets = [
+                session.read.parquet(d)
+                for d in bucket_dirs
+                if glob.glob(os.path.join(d, "*.parquet"))
+            ]
+
+        try:
+            for i, part in enumerate(buckets):
+                packed = self.pack(part, to_level, extra_columns=extra_columns)
+                packed.write.mode("append" if i else "overwrite").parquet(target)
+                # Full GC between buckets: G1 (the JDK 17 default) uncommits
+                # heap back to the OS on full collections, so the process
+                # RSS watermark tracks ONE bucket's working set instead of
+                # the accumulated allocation churn of all K jobs — the
+                # measured bound this mode exists to provide. Cost: one GC
+                # per bucket, noise next to the per-bucket job launch.
+                try:
+                    session.sparkContext._jvm.System.gc()
+                except Exception:  # noqa: BLE001 — Connect: no JVM handle
+                    pass
+        finally:
+            if stage is not None:
+                shutil.rmtree(stage, ignore_errors=True)
+        if not buckets:
+            # Every staged bucket was empty: write the empty pack so the
+            # result still carries the pack's schema.
+            self.pack(df.limit(0), to_level, extra_columns=extra_columns).write.mode(
+                "overwrite"
+            ).parquet(target)
         return session.read.parquet(target)
+
+    @staticmethod
+    def _reproducible(df: DataFrame) -> bool:
+        """Whether re-evaluating ``df`` yields the same rows: its analyzed
+        plan is deterministic and selects no rows by position (a limit or
+        offset over unordered input picks different rows per run)."""
+        try:
+            plan = df._jdf.queryExecution().analyzed()
+            jvm = df.sparkSession._jvm
+            patterns = jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+            return bool(
+                plan.deterministic()
+                and not plan.containsPattern(patterns.LIMIT())
+                and not plan.containsPattern(patterns.OFFSET())
+            )
+        except Exception:  # noqa: BLE001 — Connect: no JVM plan handle
+            return False
 
     def unpack_streaming(
         self,
@@ -1257,19 +1371,15 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
 
         if sort_by_cols:
             # Wrap (sort keys, payload) into a struct; sorting happens after
-            # collection — by keys only (stable; nulls first) — and the
-            # payload is projected back out.
-            key_aliases = [f"__k{i}" for i in range(len(sort_by_cols))]
-            collected = F.struct(
-                *[qcol(c).alias(a) for c, a in zip(sort_by_cols, key_aliases)],
-                qcol(meta.path).alias("__v"),
+            # collection (nulls first) and the payload is projected back out.
+            collected = key_wrapper([qcol(c) for c in sort_by_cols], qcol(meta.path))
+            types = {f.name: f.dataType for f in df.schema.fields}
+            wrapper_orderable = orderable(
+                *[types[c] for c in (*sort_by_cols, meta.path)]
             )
 
             def finalize(arr: Column) -> Column:
-                return F.transform(
-                    F.array_sort(arr, _struct_key_comparator(key_aliases)),
-                    lambda x: x["__v"],
-                )
+                return sort_by_keys(arr, len(sort_by_cols), wrapper_orderable)
 
         else:
             collected = qcol(meta.path)

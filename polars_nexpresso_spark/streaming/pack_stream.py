@@ -21,7 +21,20 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from polars_nexpresso_spark.columns import qcol
-from polars_nexpresso_spark.operators.packer import _struct_key_comparator
+from polars_nexpresso_spark.operators.packer import key_wrapper, orderable, sort_by_keys
+
+
+def _child_list(
+    df: DataFrame, payload_cols: Sequence[str], order_by: Sequence[str]
+) -> Column:
+    """``collect_list`` of the payload structs, sorted by ``order_by`` with
+    the packer's child-list sort when one is given."""
+    payload = F.struct(*[qcol(c).alias(c) for c in payload_cols])
+    if not order_by:
+        return F.collect_list(payload)
+    wrapper = key_wrapper([qcol(c) for c in order_by], payload)
+    is_orderable = orderable(df.select(wrapper).schema[0].dataType)
+    return sort_by_keys(F.collect_list(wrapper), len(order_by), is_orderable)
 
 
 def windowed_pack(
@@ -46,7 +59,8 @@ def windowed_pack(
         keys: Entity key columns grouped alongside the window.
         payload_cols: Columns folded into the child struct.
         order_by: Columns ordering children inside each list (event-time
-            order typically); empty keeps arrival order (nondeterministic).
+            order typically); ties are ordered by payload, and an empty
+            ``order_by`` keeps arrival order (nondeterministic).
         child_name: Name of the output list-of-struct column.
 
     Returns one row per closed (window, keys) group with ``window_start``,
@@ -57,19 +71,7 @@ def windowed_pack(
     if df.isStreaming:
         df = df.withWatermark(event_time, watermark)
 
-    payload = F.struct(*[qcol(c).alias(c) for c in payload_cols])
-    if order_by:
-        key_aliases = [f"__k{i}" for i in range(len(order_by))]
-        pair = F.struct(
-            *[qcol(c).alias(a) for c, a in zip(order_by, key_aliases)],
-            payload.alias("__v"),
-        )
-        child_list = F.transform(
-            F.array_sort(F.collect_list(pair), _struct_key_comparator(key_aliases)),
-            lambda x: x["__v"],
-        )
-    else:
-        child_list = F.collect_list(payload)
+    child_list = _child_list(df, payload_cols, order_by)
 
     agg = df.groupBy(
         F.window(qcol(event_time), window_duration).alias("__w"),
@@ -120,19 +122,7 @@ def session_pack(
     if df.isStreaming:
         df = df.withWatermark(event_time, watermark)
 
-    payload = F.struct(*[qcol(c).alias(c) for c in payload_cols])
-    if order_by:
-        key_aliases = [f"__k{i}" for i in range(len(order_by))]
-        pair = F.struct(
-            *[qcol(c).alias(a) for c, a in zip(order_by, key_aliases)],
-            payload.alias("__v"),
-        )
-        child_list = F.transform(
-            F.array_sort(F.collect_list(pair), _struct_key_comparator(key_aliases)),
-            lambda x: x["__v"],
-        )
-    else:
-        child_list = F.collect_list(payload)
+    child_list = _child_list(df, payload_cols, order_by)
 
     agg = df.groupBy(
         F.session_window(qcol(event_time), gap).alias("__w"),

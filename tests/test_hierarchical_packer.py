@@ -562,3 +562,139 @@ def test_agg_sum_empty_and_all_null_contract(spark):
         "list_sum([NULL, NULL]::BIGINT[]), list_sum([1, NULL, 2]::BIGINT[])"
     ).fetchone()
     assert list(duck) == [None, None, None, 3]
+
+
+# ---------------------------------------------------------------------------
+# Child-list sort kernel and the bounded pack
+# ---------------------------------------------------------------------------
+
+_SORT_SPEC = HierarchySpec(
+    levels=[
+        LevelSpec(name="g", id_fields=["gid"]),
+        LevelSpec(name="item", id_fields=["iid"], order_by=["g.item.score"]),
+    ]
+)
+
+
+def _sort_edge_frame(spark):
+    """Sort keys over nulls, NaN, ±0.0 and duplicates, spread over several
+    input partitions so the row-id tie-break is exercised."""
+    from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
+
+    nan = float("nan")
+    scores = [None, nan, 0.0, -0.0, 1.5, 1.5, -2.0, None, nan, 0.0, -0.0]
+    rows = [
+        (g, g * 100 + i, scores[(i * 7 + g) % len(scores)], f"t{(i * 3) % 4}")
+        for g in range(3)
+        for i in range(12)
+    ]
+    schema = StructType(
+        [
+            StructField("g.gid", LongType()),
+            StructField("g.item.iid", LongType()),
+            StructField("g.item.score", DoubleType()),
+            StructField("g.item.tag", StringType()),
+        ]
+    )
+    return spark.createDataFrame(rows, schema).repartition(3)
+
+
+def test_native_child_sort_matches_comparator(spark, monkeypatch):
+    """With preserve_child_order the native sort_array kernel yields the
+    comparator kernel's ordered child lists exactly, over nulls, NaN, ±0.0
+    and duplicate order_by keys."""
+    from polars_nexpresso_spark.operators import packer as packer_mod
+
+    df = _sort_edge_frame(spark).cache()
+    packer = HierarchicalPacker(_SORT_SPEC)
+    native = packer.pack(df, "item")
+    plan = native._jdf.queryExecution().analyzed().toString()
+    assert "sort_array" in plan and "lambdafunction" not in plan
+    native_rows = canonical_rows(native)
+
+    monkeypatch.setattr(packer_mod, "orderable", lambda *types: False)
+    fallback = packer.pack(df, "item")
+    assert "lambdafunction" in fallback._jdf.queryExecution().analyzed().toString()
+    assert canonical_rows(fallback) == native_rows
+    df.unpersist()
+
+
+def test_map_payload_packs_through_comparator(spark):
+    """sort_array cannot order a map payload; the key-only comparator
+    fallback still sorts children by order_by."""
+    rows = [(1, 3, "c"), (1, 1, "a"), (1, 2, "b"), (2, 5, "z")]
+    df = spark.createDataFrame(rows, ["g.gid", "g.item.iid", "tag"])
+    df = df.withColumn("g.item.score", qcol("g.item.iid") * 1.0).withColumn(
+        "g.item.attrs", F.create_map(F.lit("tag"), F.col("tag"))
+    ).drop("tag")
+    packed = HierarchicalPacker(_SORT_SPEC).pack(df, "item")
+    assert "lambdafunction" in packed._jdf.queryExecution().analyzed().toString()
+    got = {
+        r["g.gid"]: [(c["iid"], c["attrs"]["tag"]) for c in r["g.item"]]
+        for r in packed.collect()
+    }
+    assert got == {1: [(1, "a"), (2, "b"), (3, "c")], 2: [(5, "z")]}
+
+
+@pytest.fixture()
+def parquet_writes(monkeypatch):
+    """Record the path of every DataFrame parquet write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    paths: list[str] = []
+    write = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        paths.append(str(path))
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    return paths
+
+
+def test_bounded_pack_of_empty_input(spark, tmp_path, parquet_writes):
+    """An empty input packs to an empty frame with the pack's columns, both
+    when staged (a limit selects rows by position) and when re-read per
+    bucket (a filter)."""
+    df = _sort_edge_frame(spark)
+    packer = HierarchicalPacker(_SORT_SPEC)
+    want = packer.pack(df, "item").columns
+    for name, empty in (("limit", df.limit(0)), ("filter", df.filter(F.lit(False)))):
+        base = tmp_path / name
+        got = packer.pack_streaming(
+            empty, "item", partitions=2, bounded=True, tmp_dir=str(base)
+        )
+        assert got.columns == want
+        assert got.count() == 0
+        assert (str(base / "stage") in parquet_writes) == (name == "limit")
+
+
+def test_bounded_pack_of_cached_source_does_not_stage(spark, tmp_path, parquet_writes):
+    df = _sort_edge_frame(spark).cache()
+    packer = HierarchicalPacker(_SORT_SPEC)
+    got = packer.pack_streaming(
+        df, "item", partitions=4, bounded=True, tmp_dir=str(tmp_path)
+    )
+    assert_same_rows(got, packer.pack(df, "item"))
+    assert parquet_writes and not any("stage" in p for p in parquet_writes)
+    assert not (tmp_path / "stage").exists()
+    df.unpersist()
+
+
+def test_bounded_pack_of_nondeterministic_source_stages(spark, tmp_path, parquet_writes):
+    """A source with F.rand() is evaluated once (staged); every root appears
+    exactly once with all of its children, and the staging copy is gone."""
+    df = _sort_edge_frame(spark).withColumn("g.item.noise", F.rand())
+    packer = HierarchicalPacker(_SORT_SPEC)
+    got = packer.pack_streaming(
+        df, "item", partitions=4, bounded=True, tmp_dir=str(tmp_path)
+    ).collect()
+    assert str(tmp_path / "stage") in parquet_writes
+    assert not (tmp_path / "stage").exists()
+    want: dict[int, list[int]] = {}
+    for r in df.select("`g.gid`", "`g.item.iid`").collect():
+        want.setdefault(r[0], []).append(r[1])
+    assert sorted(r["g.gid"] for r in got) == sorted(want)
+    assert {r["g.gid"]: sorted(c["iid"] for c in r["g.item"]) for r in got} == {
+        g: sorted(iids) for g, iids in want.items()
+    }
