@@ -26,8 +26,6 @@ reproduce signatures bit-for-bit.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -39,6 +37,7 @@ from polars_nexpresso_spark.functions.text import (
     word_ngrams,
     word_ngrams_all,
 )
+from polars_nexpresso_spark.plans.stats import plan_size_bytes
 
 # Blocking tables persisted by the pair finders (minhash buckets, simhash
 # chunks, ngram shingles). Lifecycle notes and the shared registry live in
@@ -537,85 +536,40 @@ def embedding_cosine_pairs(
 
 
 _EDGE_ROW_BYTES = 32  # two 64-bit ids + per-row overhead, deliberately generous
+# Edge-loop gate of _resolve_propagation: a corpus id projection of at least
+# this size (far above any local-bench input, far below any production
+# corpus), and an edge list of at most this fraction of it.
+_EDGE_LOOP_MIN_NODES_BYTES = 256 * 1024 * 1024
+_EDGE_LOOP_MAX_FRAC = 0.25
 
 
-def _propagation_knob(spark, key: str, env: str, default: float) -> float:
-    """Scale knob: session conf first, env var second, default last —
-    the bench's local defaults stay untouched while a cluster deploy can
-    re-point the gate without code changes."""
-    try:
-        raw = spark.conf.get(key, None)
-    except Exception:  # noqa: BLE001 — Connect without conf passthrough
-        raw = None
-    if raw is None:
-        raw = os.environ.get(env)
-    try:
-        return float(raw) if raw is not None else default
-    except ValueError:
-        return default
-
-
-def _resolve_propagation(propagate: str, node_ids: DataFrame, edges: DataFrame):
+def _resolve_propagation(node_ids: DataFrame, edges: DataFrame):
     """Pick :func:`dedup_clusters`'s iteration set; returns ``(mode,
     edges)`` with ``edges`` checkpointed appropriately for the mode.
 
-    ``"adaptive"`` fires the edge-bounded loop only when BOTH driver-side
-    stats agree it pays (guide §2.1/§2.4 — shuffle corpus-sized frames as
-    few times as possible):
+    The edge-bounded loop fires only when BOTH driver-side stats agree it
+    pays (guide §2.1/§2.4 — shuffle corpus-sized frames as few times as
+    possible):
 
-    - the corpus id projection's Catalyst scan estimate exceeds
-      ``minNodesBytesForEdgeLoop`` (default 256 MiB — far above any
-      local-bench input, far below any production corpus), so the
-      per-iteration corpus-sized shuffles are worth two extra stitch
-      joins; and
-    - the MATERIALIZED edge list is small relative to it. Catalyst's
-      static estimate for the derived pairs plan is useless here (join
-      selectivities multiply: measured 4.5e22 "bytes" for a 594 KB
-      corpus), so the ratio reads the real pinned row count instead —
-      free at this point, because the loop is about to materialize
-      ``edges`` anyway and counting pinned blocks launches no recompute.
+    - the corpus id projection's Catalyst scan estimate is at least
+      ``_EDGE_LOOP_MIN_NODES_BYTES``, so the per-iteration corpus-sized
+      shuffles are worth two extra stitch joins; and
+    - the MATERIALIZED edge list is at most ``_EDGE_LOOP_MAX_FRAC`` of
+      it. Catalyst's static estimate for the derived pairs plan is
+      useless here (join selectivities multiply: measured 4.5e22 "bytes"
+      for a 594 KB corpus), so the ratio reads the real pinned row count
+      instead — free at this point, because the loop is about to
+      materialize ``edges`` anyway and counting pinned blocks launches no
+      recompute.
 
-    Everything falls back to the classic full loop (today's behavior) on
-    Spark Connect or missing stats — the probe failing must never make
-    the plan worse.
+    Unknown size (Spark Connect, stat-less leaves) keeps the classic full
+    loop — the probe failing must never make the plan worse.
     """
-    if propagate not in ("adaptive", "full", "edges"):
-        raise ValueError(
-            f"propagate must be 'adaptive', 'full' or 'edges', got "
-            f"{propagate!r}"
-        )
-    if propagate == "full":
+    nodes_bytes = plan_size_bytes(node_ids)
+    if nodes_bytes is None or nodes_bytes < _EDGE_LOOP_MIN_NODES_BYTES:
         return "full", edges.localCheckpoint(eager=False)
-    if propagate == "edges":
-        return "edges", edges.localCheckpoint(eager=True)
-    try:
-        from polars_nexpresso_spark.plans.stats import plan_size_bytes
-
-        nodes_bytes = plan_size_bytes(node_ids)
-    except Exception:  # noqa: BLE001 — Connect: no plan handle
-        return "full", edges.localCheckpoint(eager=False)
-    if nodes_bytes >= 1 << 60:
-        # Catalyst returns spark.sql.defaultSizeInBytes (Long.MaxValue)
-        # for leaves without stats (LogicalRDD, some views): that is
-        # "unknown", not "huge" — keep today's loop.
-        return "full", edges.localCheckpoint(eager=False)
-    spark = node_ids.sparkSession
-    floor = _propagation_knob(
-        spark,
-        "spark.pns.dedupClusters.minNodesBytesForEdgeLoop",
-        "PNS_DEDUP_EDGE_MIN_NODES_BYTES",
-        256.0 * 1024 * 1024,
-    )
-    if nodes_bytes < floor:
-        return "full", edges.localCheckpoint(eager=False)
-    frac = _propagation_knob(
-        spark,
-        "spark.pns.dedupClusters.maxEdgesFracForEdgeLoop",
-        "PNS_DEDUP_EDGE_MAX_FRAC",
-        0.25,
-    )
     edges = edges.localCheckpoint(eager=True)
-    if edges.count() * _EDGE_ROW_BYTES <= nodes_bytes * frac:
+    if edges.count() * _EDGE_ROW_BYTES <= nodes_bytes * _EDGE_LOOP_MAX_FRAC:
         return "edges", edges
     return "full", edges
 
@@ -626,7 +580,6 @@ def dedup_clusters(
     id_col: str,
     *,
     max_iter: int = 25,
-    propagate: str = "adaptive",
 ) -> DataFrame:
     """Canonicalize near-duplicate PAIRS into connected-component clusters.
 
@@ -662,20 +615,15 @@ def dedup_clusters(
     first reached this round has no self row → NULL ``__old`` → excluded,
     exactly like the old inner join).
 
-    ``propagate`` selects the iteration set: ``"full"`` loops over every
-    node (the classic loop), ``"edges"`` loops only over nodes incident to
-    at least one pair — bounded by 2·|pairs| rows; untouched nodes can
-    never change label, so they are stitched back as self-label singletons
-    at the end and the results are identical — and ``"adaptive"``
-    (default) picks per input via :func:`_resolve_propagation`: the edge
-    loop when the corpus is large and the edge list is relatively small
+    Iteration set, picked per input by :func:`_resolve_propagation`: the
+    classic loop runs over every node; the edge loop runs only over nodes
+    incident to at least one pair — bounded by 2·|pairs| rows; untouched
+    nodes can never change label, so they are stitched back as self-label
+    singletons at the end and the results are identical. The edge loop
+    fires when the corpus is large and the edge list is relatively small
     (per-iteration exchanges become pair-bounded — the 100 TB shape), the
     classic loop otherwise (locally the two extra stitch joins cost more
-    than the tiny iterations save — measured 1.10× at sf0.1, r13). Knobs:
-    ``spark.pns.dedupClusters.minNodesBytesForEdgeLoop`` (env
-    ``PNS_DEDUP_EDGE_MIN_NODES_BYTES``, default 256 MiB) and
-    ``spark.pns.dedupClusters.maxEdgesFracForEdgeLoop`` (env
-    ``PNS_DEDUP_EDGE_MAX_FRAC``, default 0.25).
+    than the tiny iterations save — measured 1.10× at sf0.1, r13).
     """
     # Undirected edge list, both directions.
     ab = pairs.select(F.col("id_a").alias("__src"), F.col("id_b").alias("__dst"))
@@ -684,7 +632,7 @@ def dedup_clusters(
     ).distinct()
 
     node_ids = nodes.select(F.col(id_col).alias("__id"))
-    mode, edges = _resolve_propagation(propagate, node_ids, edges)
+    mode, edges = _resolve_propagation(node_ids, edges)
     rest = None
     if mode == "edges":
         touched = (

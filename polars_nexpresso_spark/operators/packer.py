@@ -70,9 +70,7 @@ from polars_nexpresso_spark.plans.spec import (
     ParentStrategy,
     build_metadata,
 )
-
-
-from polars_nexpresso_spark.plans.stats import plan_size_bytes as _plan_size_bytes
+from polars_nexpresso_spark.plans.stats import plan_size_bytes
 
 
 def _struct_key_comparator(key_fields: Sequence[str]) -> Callable[[Column, Column], Column]:
@@ -212,9 +210,6 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
             spec, granularity_separator, escape_char
         )
         self._computed_exprs: dict[str, Column] = self._collect_computed_exprs()
-        # split_join gate memo: {(input semanticHash, root keys): small rep
-        # DataFrame or None}. Bounded FIFO (8) — see _pack_split_join.
-        self._sj_gate_cache: dict[tuple, DataFrame | None] = {}
 
     # ===== Separator escaping (instance-configured wrappers) =====
 
@@ -451,14 +446,13 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
         aggregations — it scales the child's size, so a heavy pre-dedup
         input keeps the hint off and AQE remains the fallback, which is the
         safe direction at 100 TB (never broadcast on an under-estimate).
+        An unknown size (Connect, stat-less leaves) gets no hint.
         """
-        try:
-            conf = dim.sparkSession._jsparkSession.sessionState().conf()
-            threshold = int(conf.autoBroadcastJoinThreshold())
-            size = _plan_size_bytes(dim)
-        except Exception:  # noqa: BLE001 — Connect / stats unavailable
+        size = plan_size_bytes(dim)
+        if size is None:
             return dim
-        if 0 < size <= threshold:
+        conf = dim.sparkSession._jsparkSession.sessionState().conf()
+        if 0 < size <= int(conf.autoBroadcastJoinThreshold()):
             return F.broadcast(dim)
         return dim
 
@@ -480,7 +474,8 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
            ever issuing a gate job on a 100 TB input (the fallback there
            is dropDuplicates; no wasted pass). The multiplier is a
            heuristic band: it exists only to skip pointless gate jobs on
-           obviously-huge inputs; the EXACT count below decides.
+           obviously-huge inputs; the EXACT count below decides. An
+           unknown size (Connect, stat-less leaves) is treated as huge.
         2. EXACT eager count over a ``localCheckpoint(eager=True)`` of the
            rep: the checkpoint job IS the narrow hash agg (keys + one long
            — map-side combined), the count on the materialized partitions
@@ -498,18 +493,15 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
         instead of recomputing — acceptable for a gate-passed (tiny) rep
         in batch jobs, same trade ``dedup_clusters`` makes.
         """
-        try:
-            conf = rep.sparkSession._jsparkSession.sessionState().conf()
-            threshold = int(conf.autoBroadcastJoinThreshold())
-            if threshold <= 0:
-                return None
-            est = _plan_size_bytes(rep)
-            if est > 1024 * threshold:
-                return None
-            rep = rep.localCheckpoint(eager=True)
-            n = rep.count()
-        except Exception:  # noqa: BLE001 — Connect / stats unavailable
+        est = plan_size_bytes(rep)
+        if est is None:
             return None
+        conf = rep.sparkSession._jsparkSession.sessionState().conf()
+        threshold = int(conf.autoBroadcastJoinThreshold())
+        if threshold <= 0 or est > 1024 * threshold:
+            return None
+        rep = rep.localCheckpoint(eager=True)
+        n = rep.count()
         from pyspark.sql.types import (
             BinaryType,
             MapType,
@@ -641,26 +633,7 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
             rep = df.groupBy(*[qcol(k) for k in root_keys]).agg(
                 F.min(fingerprint).alias(rep_col)
             )
-            # Memoize the gate per (input plan, keys): repeated packs of
-            # the same frame (iterative sessions, benchmarks) pay the gate
-            # job once. Safe because the fingerprint is a pure function of
-            # row content, identical across re-evaluations of the same
-            # deterministic input plan.
-            gate_key = None
-            try:
-                gate_key = (df.semanticHash(), tuple(root_keys))
-            except Exception:  # noqa: BLE001 — Connect or hash failure
-                gate_key = None
-            if gate_key is not None and gate_key in self._sj_gate_cache:
-                small_rep = self._sj_gate_cache[gate_key]
-            else:
-                small_rep = self._checkpoint_small_rep(rep)
-                if gate_key is not None:
-                    if len(self._sj_gate_cache) >= 8:
-                        self._sj_gate_cache.pop(
-                            next(iter(self._sj_gate_cache))
-                        )
-                    self._sj_gate_cache[gate_key] = small_rep
+            small_rep = self._checkpoint_small_rep(rep)
             if small_rep is not None:
                 dim = (
                     df.select(

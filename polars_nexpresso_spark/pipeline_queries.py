@@ -10,6 +10,8 @@ is approximation-dependent (`lsh_ann_topk`) are rows-only checked.
 
 from __future__ import annotations
 
+import functools
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,7 +52,13 @@ from polars_nexpresso_spark.functions.text import (
     token_count,
     unique_token_ratio,
 )
+from polars_nexpresso_spark.plans.stats import plan_size_bytes
 from polars_nexpresso_spark.sources.io import read_table, spread
+
+# Corpus size from which duplicated corpus-bound consumers get pinned: far
+# above any local-bench input, far below any production corpus.
+_SCALE_PIN_MIN_BYTES = 256 * 1024 * 1024
+
 
 def _checkpoint_at_scale(df: DataFrame, corpus: DataFrame) -> DataFrame:
     """Pin a shared subtree with ``localCheckpoint`` only when the
@@ -61,41 +69,20 @@ def _checkpoint_at_scale(df: DataFrame, corpus: DataFrame) -> DataFrame:
     subtree IN PARALLEL inside one job, so serializing an extra eager
     checkpoint job costs more than it saves — while at 100 TB each
     duplicated consumer re-runs a corpus-bound scan and the pin is the
-    only sane shape. Gate on the corpus scan's Catalyst estimate (the
-    ``spread()`` driver-side plan-stat pattern — no job): floor default
-    256 MiB, overridable via conf
-    ``spark.pns.scalePin.minCorpusBytes`` / env
-    ``PNS_SCALE_PIN_MIN_CORPUS_BYTES``. Unknown stats (Connect, stat-less
-    leaves reporting defaultSizeInBytes) skip the pin — the unpinned
-    plan is never worse than the pre-r13 shape.
+    only sane shape. Gate on the corpus scan's Catalyst estimate
+    (:func:`plan_size_bytes` — no job) against ``_SCALE_PIN_MIN_BYTES``.
+    Unknown size (Connect, stat-less leaves) skips the pin — the
+    unpinned plan is never worse than the pre-r13 shape.
     """
-    import os
-
-    try:
-        from polars_nexpresso_spark.plans.stats import plan_size_bytes
-
-        corpus_bytes = plan_size_bytes(corpus)
-    except Exception:  # noqa: BLE001 — Connect: no plan handle
-        return df
-    if corpus_bytes >= 1 << 60:  # defaultSizeInBytes == "unknown"
-        return df
-    raw = None
-    try:
-        raw = df.sparkSession.conf.get(
-            "spark.pns.scalePin.minCorpusBytes", None
-        )
-    except Exception:  # noqa: BLE001
-        raw = None
-    if raw is None:
-        raw = os.environ.get("PNS_SCALE_PIN_MIN_CORPUS_BYTES")
-    try:
-        floor = float(raw) if raw is not None else 256.0 * 1024 * 1024
-    except ValueError:
-        floor = 256.0 * 1024 * 1024
-    if corpus_bytes < floor:
+    corpus_bytes = plan_size_bytes(corpus)
+    if corpus_bytes is None or corpus_bytes < _SCALE_PIN_MIN_BYTES:
         return df
     return df.localCheckpoint(eager=True)
 
+
+# Testdata the data-derived oracles (centroid and codebook literals) are
+# generated from at import; override for local checks at other scales.
+_ORACLE_SF_DIR = os.environ.get("PNS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 # DuckDB fragments shared by several oracles.
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -126,14 +113,29 @@ def _oracle_dim() -> int | None:
     queries degrade to the driver's rows-only check, mirroring the IVF
     oracle's pattern, instead of registering a wrong-dimension oracle
     that would produce spurious correctness failures."""
-    import os
-
-    sf_dir = os.environ.get("PNS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
     try:
-        return _embedding_dim(sf_dir)
+        return _embedding_dim(_ORACLE_SF_DIR)
     except Exception:  # noqa: BLE001 — import must survive missing testdata
         return None
 
+
+@functools.cache
+def _oracle_centroids() -> tuple[tuple[float, ...], ...] | None:
+    """The 16 IVF centroids of the oracle testdata's embeddings, trained
+    Spark-free once per process and shared (immutable) by every
+    centroid-literal oracle; None when the testdata is unreadable at
+    import (those queries then fall back to the rows-only check)."""
+    try:
+        from polars_nexpresso_spark.functions.similarity import (
+            kmeans_centroids_local,
+        )
+
+        cents = kmeans_centroids_local(
+            f"{_ORACLE_SF_DIR}/embeddings.parquet", n_centroids=16
+        )
+    except Exception:  # noqa: BLE001 — import must survive missing testdata
+        return None
+    return tuple(map(tuple, cents))
 
 
 _TOKS = f"string_split({_NORM}, ' ')"
@@ -1320,18 +1322,8 @@ def _ivf_ann_oracle() -> str | None:
     (``PNS_ORACLE_SF_DIR`` overrides for local checks at other SFs);
     returns None (rows-only check) if that testdata is unreadable.
     """
-    import os
-
-    sf_dir = os.environ.get("PNS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        from polars_nexpresso_spark.functions.similarity import (
-            kmeans_centroids_local,
-        )
-
-        cents = kmeans_centroids_local(
-            f"{sf_dir}/embeddings.parquet", n_centroids=16
-        )
-    except Exception:  # noqa: BLE001 — import must survive missing testdata
+    cents = _oracle_centroids()
+    if cents is None:
         return None
     values = ",\n                 ".join(
         f"({i}, [{', '.join(repr(x) for x in c)}]::DOUBLE[])"
@@ -1379,18 +1371,8 @@ def _distill_pairs_oracle() -> str | None:
     and two ROW_NUMBER windows elect the positive (ce DESC, id ASC)
     and the 4 hardest negatives (margin ASC, id ASC). None (rows-only)
     when the oracle-SF testdata is unreadable at import."""
-    import os
-
-    sf_dir = os.environ.get("PNS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        from polars_nexpresso_spark.functions.similarity import (
-            kmeans_centroids_local,
-        )
-
-        cents = kmeans_centroids_local(
-            f"{sf_dir}/embeddings.parquet", n_centroids=16
-        )
-    except Exception:  # noqa: BLE001 — import must survive missing testdata
+    cents = _oracle_centroids()
+    if cents is None:
         return None
     values = ",\n                 ".join(
         f"({i}, [{', '.join(repr(x) for x in c)}]::DOUBLE[])"
@@ -2570,18 +2552,8 @@ def _hard_negatives_ann_oracle() -> str | None:
     an over-fetch rank <= k + max_positives (5 + 64), then the
     same-label positive filter and the bounded re-rank — replaying the
     IVF engine of ``mine_hard_negatives`` step for step."""
-    import os
-
-    sf_dir = os.environ.get("PNS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        from polars_nexpresso_spark.functions.similarity import (
-            kmeans_centroids_local,
-        )
-
-        cents = kmeans_centroids_local(
-            f"{sf_dir}/embeddings.parquet", n_centroids=16
-        )
-    except Exception:  # noqa: BLE001 — import must survive missing testdata
+    cents = _oracle_centroids()
+    if cents is None:
         return None
     values = ",\n                 ".join(
         f"({i}, [{', '.join(repr(x) for x in c)}]::DOUBLE[])"
@@ -3044,18 +3016,8 @@ def _semantic_dedup_oracle() -> str | None:
     ``_ivf_ann_oracle``) and embed as literal VALUES; cell assignment
     (nearest centroid, ties to the lowest index) and the
     drop-if-smaller-id-neighbor rule replay in SQL."""
-    import os
-
-    sf_dir = os.environ.get("PNS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        from polars_nexpresso_spark.functions.similarity import (
-            kmeans_centroids_local,
-        )
-
-        cents = kmeans_centroids_local(
-            f"{sf_dir}/embeddings.parquet", n_centroids=16
-        )
-    except Exception:  # noqa: BLE001 — import must survive missing testdata
+    cents = _oracle_centroids()
+    if cents is None:
         return None
     values = ",\n             ".join(
         f"({i}, [{', '.join(repr(x) for x in c)}]::DOUBLE[])"
@@ -3744,16 +3706,13 @@ def _pq_oracle():
     normalization, per-subspace nearest-codeword assignment (ties to
     the lowest index), query LUTs, and the m-ordered ADC sum replay in
     SQL. None (rows-only) if the testdata is unreadable at import."""
-    import os
-
-    sf_dir = os.environ.get("PNS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
     try:
         from polars_nexpresso_spark.functions.similarity import (
             pq_codebooks_local,
         )
 
         cbs = pq_codebooks_local(
-            f"{sf_dir}/embeddings.parquet", m=8, n_codes=16
+            f"{_ORACLE_SF_DIR}/embeddings.parquet", m=8, n_codes=16
         )
     except Exception:  # noqa: BLE001 — import must survive missing testdata
         return None
@@ -3884,9 +3843,6 @@ def _ivfpq_with_body():
     cell assignment, unit-space residual vs the normalized centroid,
     residual-trained codebooks (``pq_codebooks_local(residual_cents=
     ...)``), ADC = exact ``<q, ĉ_cell>`` + LUT sum."""
-    import os
-
-    sf_dir = os.environ.get("PNS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
     try:
         from polars_nexpresso_spark.functions.similarity import (
             _chat,
@@ -3895,10 +3851,10 @@ def _ivfpq_with_body():
         )
 
         cents = kmeans_centroids_local(
-            f"{sf_dir}/embeddings.parquet", n_centroids=16
+            f"{_ORACLE_SF_DIR}/embeddings.parquet", n_centroids=16
         )
         cbs = pq_codebooks_local(
-            f"{sf_dir}/embeddings.parquet",
+            f"{_ORACLE_SF_DIR}/embeddings.parquet",
             m=8,
             n_codes=16,
             residual_cents=cents,
@@ -4540,18 +4496,8 @@ def _embedding_outliers_oracle() -> str | None:
     (distance, index) row_number, euclidean distance rounded to 6, then
     the same mean/stddev_pop z-score arithmetic. Returns None (rows-only
     check) when the testdata is unreadable at import."""
-    import os
-
-    sf_dir = os.environ.get("PNS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        from polars_nexpresso_spark.functions.similarity import (
-            kmeans_centroids_local,
-        )
-
-        cents = kmeans_centroids_local(
-            f"{sf_dir}/embeddings.parquet", n_centroids=16
-        )
-    except Exception:  # noqa: BLE001 — import must survive missing testdata
+    cents = _oracle_centroids()
+    if cents is None:
         return None
     values = ",\n                 ".join(
         f"({i}, [{', '.join(repr(x) for x in c)}]::DOUBLE[])"
@@ -4795,18 +4741,8 @@ def _cluster_purity_oracle() -> str | None:
     """DuckDB replica of ``q_cluster_purity``: re-derived centroid
     VALUES, nearest-cell election, (cell, label) counts, and the
     majority election by (count desc, label asc) row_number."""
-    import os
-
-    sf_dir = os.environ.get("PNS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        from polars_nexpresso_spark.functions.similarity import (
-            kmeans_centroids_local,
-        )
-
-        cents = kmeans_centroids_local(
-            f"{sf_dir}/embeddings.parquet", n_centroids=16
-        )
-    except Exception:  # noqa: BLE001 — import must survive missing testdata
+    cents = _oracle_centroids()
+    if cents is None:
         return None
     values = ",\n                 ".join(
         f"({i}, [{', '.join(repr(x) for x in c)}]::DOUBLE[])"
@@ -5111,18 +5047,8 @@ def _diversity_sample_oracle() -> str | None:
     """Exact replica: the embedding_outliers oracle's centroid VALUES +
     nearest-cell election, then cap_per_source's md5 row_number capped
     at 40 per cell. Returns None (rows-only) without readable testdata."""
-    import os
-
-    sf_dir = os.environ.get("PNS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        from polars_nexpresso_spark.functions.similarity import (
-            kmeans_centroids_local,
-        )
-
-        cents = kmeans_centroids_local(
-            f"{sf_dir}/embeddings.parquet", n_centroids=16
-        )
-    except Exception:  # noqa: BLE001 — import must survive missing testdata
+    cents = _oracle_centroids()
+    if cents is None:
         return None
     values = ",\n                 ".join(
         f"({i}, [{', '.join(repr(x) for x in c)}]::DOUBLE[])"
@@ -5419,16 +5345,13 @@ def _knn_label_ann_oracle() -> str | None:
     LABELED slice (id_filter replica), candidates restricted to the
     split, then the knn_label vote/election. Rows-only without
     readable testdata."""
-    import os
-
-    sf_dir = os.environ.get("PNS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
     try:
         from polars_nexpresso_spark.functions.similarity import (
             kmeans_centroids_local,
         )
 
         cents = kmeans_centroids_local(
-            f"{sf_dir}/embeddings.parquet",
+            f"{_ORACLE_SF_DIR}/embeddings.parquet",
             n_centroids=16,
             id_filter=lambda i: i % 5 != 0,
         )
@@ -5607,7 +5530,6 @@ def q_curriculum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     processes on the same sf (parallel CI, overlapping bench/driver
     runs) get disjoint paths instead of racing reader-vs-overwriter
     (r10 advice)."""
-    import os
     import tempfile
     import time
     from pathlib import Path as _P
@@ -5944,18 +5866,8 @@ def _mmr_retrieval_eval_oracle() -> str | None:
     kernel over them (k=8, lam=0.5), and each side's mean pairwise
     cosine is the intra-list self-join. None (rows-only) if the
     oracle-SF testdata is unreadable at import."""
-    import os
-
-    sf_dir = os.environ.get("PNS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        from polars_nexpresso_spark.functions.similarity import (
-            kmeans_centroids_local,
-        )
-
-        cents = kmeans_centroids_local(
-            f"{sf_dir}/embeddings.parquet", n_centroids=16
-        )
-    except Exception:  # noqa: BLE001 — import must survive missing testdata
+    cents = _oracle_centroids()
+    if cents is None:
         return None
     values = ",\n                 ".join(
         f"({i}, [{', '.join(repr(x) for x in c)}]::DOUBLE[])"

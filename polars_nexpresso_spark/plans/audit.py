@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from polars_nexpresso_spark.plans.stats import plan_size_bytes
+
 # (warning id, plan substring, why it matters at scale)
 _ANTIPATTERNS: list[tuple[str, str, str]] = [
     (
@@ -274,7 +276,8 @@ def scale_report(df: DataFrame) -> dict:
     Keys: ``warnings`` (the :func:`audit_plan` findings), ``exchanges``
     (hash-partitioned shuffle count), ``broadcasts`` (broadcast-exchange
     count), ``estimated_input_bytes`` (Catalyst's static estimate — an
-    upper-bound-ish planning number, None on Connect), ``codegen_spans``
+    upper-bound-ish planning number, None when the size is unknown:
+    on Connect or for a stat-less leaf), ``codegen_spans``
     (WholeStageCodegen regions: more/wider spans = more of the plan runs
     fused JVM code — under AQE this reads 0 until the plan has actually
     executed, since the adaptive plan finalizes at runtime), and
@@ -282,18 +285,11 @@ def scale_report(df: DataFrame) -> dict:
     mapInPandas operators, a smell elsewhere).
     """
     plan = df._jdf.queryExecution().executedPlan().toString()
-    est: int | None
-    try:
-        from polars_nexpresso_spark.plans.stats import plan_size_bytes
-
-        est = plan_size_bytes(df)
-    except Exception:  # noqa: BLE001 — Connect / stats unavailable
-        est = None
     return {
         "warnings": audit_plan(df),
         "exchanges": plan.count("Exchange hashpartitioning"),
         "broadcasts": plan.count("BroadcastExchange"),
-        "estimated_input_bytes": est,
+        "estimated_input_bytes": plan_size_bytes(df),
         "codegen_spans": plan.count("WholeStageCodegen"),
         "python_stages": sum(
             plan.count(t)

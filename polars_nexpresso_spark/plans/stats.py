@@ -4,17 +4,30 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# Catalyst reports spark.sql.defaultSizeInBytes (Long.MaxValue by default)
+# for a leaf without statistics; no real plan estimate comes near 2^60.
+_UNKNOWN_SIZE = 1 << 60
 
-def plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's static size estimate for a DataFrame's optimized plan.
 
-    Driver-side plan stat — no job. py4j returns ``stats().sizeInBytes()``
-    as a plain int when the scala BigInt fits a long, and as a JavaObject
-    otherwise; normalize both. Raises on Spark Connect (no ``_jdf``) —
-    callers treat that as "unknown" via their own try/except.
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's static size estimate for a DataFrame's optimized plan, or
+    None when the size is unknown.
+
+    Driver-side plan stat — no job. Unknown covers Spark Connect (no
+    ``_jdf`` plan handle) and leaves without statistics (LogicalRDD, local
+    relations, some views), for which Catalyst reports
+    ``spark.sql.defaultSizeInBytes`` (Long.MaxValue) — "no idea", not
+    "huge". This is the one place that tells the two apart: every size
+    gate takes None as "unknown" and keeps its small-input shape. py4j
+    returns ``stats().sizeInBytes()`` as a plain int when the scala BigInt
+    fits a long, and as a JavaObject otherwise; normalize both.
     """
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    return size if isinstance(size, int) else int(size.toString())
+    jdf = getattr(df, "_jdf", None)
+    if jdf is None:
+        return None
+    size = jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    size = size if isinstance(size, int) else int(size.toString())
+    return None if size >= _UNKNOWN_SIZE else size
 
 
 def key_skew_stats(df: DataFrame, keys: list[str], *, top_n: int = 10):

@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from polars_nexpresso_spark.plans.stats import plan_size_bytes
+
 TABLES = (
     "region",
     "nation",
@@ -165,29 +167,27 @@ def spread(df: DataFrame) -> DataFrame:
     larger already splits at least that wide (parquet splits big files at
     maxPartitionBytes). Intended for scan inputs: applying it to an
     already-shuffled frame may add one (tiny) extra exchange where the
-    partition-count check would have skipped it.
+    partition-count check would have skipped it. An input of unknown size
+    (Connect, stat-less leaves such as ``createDataFrame`` frames) passes
+    through unchanged.
     """
+    est = plan_size_bytes(df)
+    if est is None:
+        return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    try:
-        from polars_nexpresso_spark.plans.stats import plan_size_bytes
-
-        est = plan_size_bytes(df)
-        raw = str(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        ).lower().strip()
-        mult = 1
-        for suffix, m in (("k", 1024), ("m", 1024**2), ("g", 1024**3)):
-            if raw.rstrip("b").endswith(suffix):
-                mult = m
-                break
-        digits = "".join(ch for ch in raw if ch.isdigit())
-        mpb = int(digits) * mult if digits else 134217728
-    except Exception:  # noqa: BLE001 — Connect/stats unavailable: be safe
-        return df.repartition(target)
-    if est < target * mpb:
+    conf = spark._jsparkSession.sessionState().conf()
+    if est < target * int(conf.filesMaxPartitionBytes()):
         return df.repartition(target)
     return df
+
+
+def _file_count(df: DataFrame, bytes_per_file: int) -> int:
+    """Output file count for writing ``df`` at ~``bytes_per_file`` per
+    file, from Catalyst's driver-side size estimate (no job); one file
+    when the size is unknown (Connect, stat-less leaves)."""
+    est = plan_size_bytes(df)
+    return 1 if est is None else est // bytes_per_file + 1
 
 
 def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
@@ -524,15 +524,9 @@ def compact_files(
             "compact_files: src and dest must be disjoint paths "
             f"(got src={src!r}, dest={dest!r})"
         )
-    from polars_nexpresso_spark.plans.stats import plan_size_bytes
-
     df = spark.read.format(format).load(src)
-    try:
-        est = plan_size_bytes(df)
-    except Exception:  # noqa: BLE001 — Connect: fall back to one file/core
-        est = 0
-    n = max(1, est // (target_file_mb * 1024 * 1024) + (1 if est else 0))
-    df.repartition(int(n)).write.mode("overwrite").format(format).save(dest)
+    n = _file_count(df, target_file_mb * 1024 * 1024)
+    df.repartition(n).write.mode("overwrite").format(format).save(dest)
     out = spark.read.format(format).load(dest)
     # File count from the read-back frame itself (input_file_name), not
     # os.listdir — correct on any filesystem Spark can read, not just
@@ -591,13 +585,7 @@ def write_ordered(
         if c not in df.columns:
             raise ValueError(f"column {c!r} not in DataFrame")
     if n_files is None:
-        from polars_nexpresso_spark.plans.stats import plan_size_bytes
-
-        try:
-            est = plan_size_bytes(df)
-        except Exception:  # noqa: BLE001 — Connect: one file per core
-            est = 0
-        n_files = max(1, est // (128 * 1024 * 1024) + (1 if est else 0))
+        n_files = _file_count(df, 128 * 1024 * 1024)
     if n_files < 1:
         raise ValueError(f"n_files must be >= 1: {n_files}")
     keys = (
@@ -694,13 +682,7 @@ def write_zordered(
             "use bucketing='uniform' for finer grids"
         )
     if n_files is None:
-        from polars_nexpresso_spark.plans.stats import plan_size_bytes
-
-        try:
-            est = plan_size_bytes(df)
-        except Exception:  # noqa: BLE001 — Connect: one file per core
-            est = 0
-        n_files = max(1, est // (128 * 1024 * 1024) + (1 if est else 0))
+        n_files = _file_count(df, 128 * 1024 * 1024)
     if n_files < 1:
         raise ValueError(f"n_files must be >= 1: {n_files}")
 

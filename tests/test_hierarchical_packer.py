@@ -698,3 +698,24 @@ def test_bounded_pack_of_nondeterministic_source_stages(spark, tmp_path, parquet
     assert {r["g.gid"]: sorted(c["iid"] for c in r["g.item"]) for r in got} == {
         g: sorted(iids) for g, iids in want.items()
     }
+
+
+def test_split_join_rereads_overwritten_input(spark, tmp_path):
+    """A packer reused across an in-place overwrite of its parquet input
+    attaches every new root's attributes: the rep gate runs on each call,
+    so roots that were absent from the earlier input are not lost."""
+    path = str(tmp_path / "roots.parquet")
+    packer = HierarchicalPacker(_SORT_SPEC)
+
+    def write_and_pack(gids):
+        rows = [(g, g * 10 + i, float(i), [g, g]) for g in gids for i in range(2)]
+        spark.createDataFrame(
+            rows, "`g.gid` bigint, `g.item.iid` bigint, `g.item.score` double, `g.tags` array<bigint>"
+        ).write.mode("overwrite").parquet(path)
+        packed = packer.pack(
+            spark.read.parquet(path), "item", parent_strategy="split_join"
+        )
+        return {r["g.gid"]: r["g.tags"] for r in packed.collect()}
+
+    assert write_and_pack(range(0, 5)) == {g: [g, g] for g in range(0, 5)}
+    assert write_and_pack(range(3, 8)) == {g: [g, g] for g in range(3, 8)}

@@ -335,37 +335,64 @@ def test_dedup_clusters_long_chain_converges(spark):
     assert got == {i: 0 for i in range(n)}
 
 
-def test_dedup_clusters_edge_loop_matches_full(spark):
+def _parquet_nodes(spark, tmp_path, n):
+    """A parquet-backed nodes frame: its scan has Catalyst size stats."""
+    path = str(tmp_path / "nodes.parquet")
+    spark.range(n).selectExpr("id AS doc_id").write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def _force_edge_loop(monkeypatch):
+    from polars_nexpresso_spark.functions import dedup
+
+    monkeypatch.setattr(dedup, "_EDGE_LOOP_MIN_NODES_BYTES", 0)
+    monkeypatch.setattr(dedup, "_EDGE_LOOP_MAX_FRAC", 1e18)
+
+
+def test_dedup_clusters_edge_loop_matches_full(spark, tmp_path, monkeypatch):
     """The edge-bounded propagation (r14, the 100 TB shape) is result-
     identical to the classic full loop: singletons, a pair, and a
     multi-round chain all land on the same (id, cluster_id) rows."""
-    from polars_nexpresso_spark.functions.dedup import dedup_clusters
+    from polars_nexpresso_spark.functions import dedup
 
-    nodes = spark.createDataFrame([(i,) for i in range(12)], ["doc_id"])
+    nodes = _parquet_nodes(spark, tmp_path, 12)
     pairs = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (5, 6), (7, 8), (8, 9), (9, 10), (10, 11)],
         ["id_a", "id_b"],
     )
     expected = {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 5, 6: 5,
                 7: 7, 8: 7, 9: 7, 10: 7, 11: 7}
-    for mode in ("full", "edges", "adaptive"):
+    modes: list[str] = []
+    resolve = dedup._resolve_propagation
+
+    def recording(node_ids, edges):
+        mode, edges = resolve(node_ids, edges)
+        modes.append(mode)
+        return mode, edges
+
+    monkeypatch.setattr(dedup, "_resolve_propagation", recording)
+    for force_edges in (False, True):
+        if force_edges:
+            _force_edge_loop(monkeypatch)
         got = {
             r["doc_id"]: r["cluster_id"]
-            for r in dedup_clusters(
-                nodes, pairs, "doc_id", propagate=mode
-            ).collect()
+            for r in dedup.dedup_clusters(nodes, pairs, "doc_id").collect()
         }
-        assert got == expected, mode
+        assert got == expected, modes
+    assert modes == ["full", "edges"]
 
 
-def test_dedup_clusters_edge_loop_iterations_are_pair_bounded(spark):
+def test_dedup_clusters_edge_loop_iterations_are_pair_bounded(
+    spark, tmp_path, monkeypatch
+):
     """Plan pin for the edge mode: from the second round on, every
     checkpointed iteration frame derives ONLY from pinned (bounded)
     blocks — the corpus never re-enters the loop, so per-iteration
     exchanges carry ≤ 2·|pairs| rows at any scale."""
     from polars_nexpresso_spark.functions.dedup import dedup_clusters
 
-    nodes = spark.createDataFrame([(i,) for i in range(10)], ["doc_id"])
+    nodes = _parquet_nodes(spark, tmp_path, 10)
+    _force_edge_loop(monkeypatch)
     cls = type(nodes)  # the concrete (classic) DataFrame class
     plans: list[str] = []
     orig = cls.localCheckpoint
@@ -374,57 +401,46 @@ def test_dedup_clusters_edge_loop_iterations_are_pair_bounded(spark):
         plans.append(self._jdf.queryExecution().optimizedPlan().toString())
         return orig(self, eager=eager)
 
-    cls.localCheckpoint = recording
-    try:
-        pairs = spark.createDataFrame(
-            [(0, 1), (1, 2), (2, 3), (3, 4)], ["id_a", "id_b"]
-        )
-        dedup_clusters(nodes, pairs, "doc_id", propagate="edges").collect()
-    finally:
-        cls.localCheckpoint = orig
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (3, 4)], ["id_a", "id_b"]
+    )
+    dedup_clusters(nodes, pairs, "doc_id").collect()
     # edges pin + touched pin + one pin per iteration (chain of 5 nodes
     # needs several rounds); the first iteration seeds from the corpus,
     # later ones must read only LogicalRDD (checkpointed) leaves.
     iteration_plans = [p for p in plans if "min(" in p]
     assert len(iteration_plans) >= 2
+    assert "parquet" in iteration_plans[0]
     for p in iteration_plans[1:]:
         for marker in ("LocalRelation", "Scan", "parquet"):
             assert marker not in p, p
 
 
-def test_dedup_clusters_adaptive_gate_reads_plan_stats(spark, tmp_path):
+def test_dedup_clusters_adaptive_gate_reads_plan_stats(
+    spark, tmp_path, monkeypatch
+):
     """The adaptive gate (r14): a KB-scale corpus keeps the classic
-    loop; with the knobs pointed at zero floor the edge loop fires on
-    the pairs-vs-corpus size ratio; stat-less inputs (LogicalRDD
-    reports defaultSizeInBytes) never fire."""
-    from polars_nexpresso_spark.functions.dedup import _resolve_propagation
+    loop; with a zero size floor the edge loop fires on the
+    pairs-vs-corpus size ratio; stat-less inputs (LogicalRDD reports
+    defaultSizeInBytes) never fire."""
+    from polars_nexpresso_spark.functions import dedup
 
-    path = str(tmp_path / "gate_nodes.parquet")
-    spark.range(200).selectExpr("id AS doc_id").write.mode(
-        "overwrite"
-    ).parquet(path)
-    ids = spark.read.parquet(path).selectExpr("doc_id AS __id")
+    ids = _parquet_nodes(spark, tmp_path, 200).selectExpr("doc_id AS __id")
     edges = spark.createDataFrame(
         [(0, 1), (1, 2)], ["id_a", "id_b"]
     ).selectExpr("id_a AS __src", "id_b AS __dst")
 
-    assert _resolve_propagation("adaptive", ids, edges)[0] == "full"
-    floor_key = "spark.pns.dedupClusters.minNodesBytesForEdgeLoop"
-    frac_key = "spark.pns.dedupClusters.maxEdgesFracForEdgeLoop"
-    try:
-        spark.conf.set(floor_key, "0")
-        spark.conf.set(frac_key, "1e18")
-        assert _resolve_propagation("adaptive", ids, edges)[0] == "edges"
-        spark.conf.set(frac_key, "0")
-        assert _resolve_propagation("adaptive", ids, edges)[0] == "full"
-        spark.conf.set(frac_key, "1e18")
-        local_ids = spark.createDataFrame(
-            [(i,) for i in range(5)], ["doc_id"]
-        ).selectExpr("doc_id AS __id")
-        assert _resolve_propagation("adaptive", local_ids, edges)[0] == "full"
-    finally:
-        spark.conf.unset(floor_key)
-        spark.conf.unset(frac_key)
+    assert dedup._resolve_propagation(ids, edges)[0] == "full"
+    _force_edge_loop(monkeypatch)
+    assert dedup._resolve_propagation(ids, edges)[0] == "edges"
+    monkeypatch.setattr(dedup, "_EDGE_LOOP_MAX_FRAC", 0)
+    assert dedup._resolve_propagation(ids, edges)[0] == "full"
+    monkeypatch.setattr(dedup, "_EDGE_LOOP_MAX_FRAC", 1e18)
+    local_ids = spark.createDataFrame(
+        [(i,) for i in range(5)], ["doc_id"]
+    ).selectExpr("doc_id AS __id")
+    assert dedup._resolve_propagation(local_ids, edges)[0] == "full"
 
 
 def test_dedup_clusters_end_to_end_with_jaccard(docs):

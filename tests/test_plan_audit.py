@@ -330,3 +330,18 @@ def test_hof_sweep_flags_truncated_plan(monkeypatch):
 
     risks = audit.hof_reeval_risks(_FakeDF())
     assert any("plan-truncated" in r for r in risks), risks
+
+
+def test_plan_size_bytes_unknown_is_none(spark, tmp_path):
+    """A createDataFrame frame has no size statistics (Catalyst reports
+    defaultSizeInBytes) and reads as None; a parquet scan has a size."""
+    from polars_nexpresso_spark.plans.audit import scale_report
+    from polars_nexpresso_spark.plans.stats import plan_size_bytes
+
+    local = spark.createDataFrame([(1, 2.0)], "a bigint, b double")
+    assert plan_size_bytes(local) is None
+    assert scale_report(local)["estimated_input_bytes"] is None
+    path = str(tmp_path / "t.parquet")
+    spark.range(100).write.parquet(path)
+    size = plan_size_bytes(spark.read.parquet(path))
+    assert isinstance(size, int) and 0 < size < 1 << 60

@@ -309,6 +309,70 @@ def test_write_ordered_default_runs_no_post_write_jobs(spark, tmp_path):
     assert jobs_verify >= jobs_default + 3
 
 
+def _statless_frame(spark):
+    """An RDD-backed frame: Catalyst has no size statistics for it."""
+    return spark.sparkContext.parallelize(
+        [(i, float(i % 7)) for i in range(50)], 2
+    ).toDF("doc_id bigint, score double")
+
+
+def test_write_ordered_accepts_statless_input(spark, tmp_path):
+    """With no size statistics the default file count falls back to one
+    range partition instead of overflowing the repartition count."""
+    from polars_nexpresso_spark.sources.io import write_ordered
+
+    dest = str(tmp_path / "ordered")
+    assert write_ordered(_statless_frame(spark), dest, "score", tiebreak_col="doc_id") == 1
+    assert spark.read.parquet(dest).count() == 50
+
+
+def test_write_zordered_accepts_statless_input(spark, tmp_path):
+    from polars_nexpresso_spark.sources.io import write_zordered
+
+    dest = str(tmp_path / "zordered")
+    assert write_zordered(_statless_frame(spark), dest, ["doc_id", "score"], bits=3) == 1
+    assert spark.read.parquet(dest).count() == 50
+
+
+def test_file_count_from_plan_size(spark, tmp_path):
+    """compact_files / write_ordered / write_zordered share one file-count
+    rule: ~one file per bytes_per_file of Catalyst estimate, and one file
+    when the size is unknown."""
+    from polars_nexpresso_spark.plans.stats import plan_size_bytes
+    from polars_nexpresso_spark.sources.io import _file_count
+
+    assert _file_count(_statless_frame(spark), 1) == 1
+    path = str(tmp_path / "sized.parquet")
+    spark.range(1000).write.parquet(path)
+    scan = spark.read.parquet(path)
+    est = plan_size_bytes(scan)
+    assert _file_count(scan, 128 * 1024 * 1024) == 1
+    assert _file_count(scan, est) == 2
+    assert _file_count(scan, est + 1) == 1
+
+
+def test_spread_reads_size_suffixed_max_partition_bytes(spark):
+    """maxPartitionBytes="1t" is 2^40 bytes, so a 1-partition 100-row
+    range is under target x maxPartitionBytes and gets spread."""
+    from polars_nexpresso_spark.sources.io import spread
+
+    key = "spark.sql.files.maxPartitionBytes"
+    target = spark.sparkContext.defaultParallelism
+    df = spark.range(0, 100, 1, 1)
+    spark.conf.set(key, "1t")
+    try:
+        assert spread(df).rdd.getNumPartitions() == target
+    finally:
+        spark.conf.unset(key)
+
+
+def test_spread_passes_statless_input_through(spark):
+    from polars_nexpresso_spark.sources.io import spread
+
+    df = _statless_frame(spark)
+    assert spread(df) is df
+
+
 def test_write_ordered_plan_is_range_partitioned(spark):
     from pyspark.sql import functions as F
 
