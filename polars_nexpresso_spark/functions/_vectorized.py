@@ -10,52 +10,12 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
 
-def pandas_lsh_bucket(planes):
-    """Bucket-id UDF: one BLAS matmul per Arrow batch (vs ``num_planes``
-    interpreted array-lambda dots per row in the expression form)."""
-    plane_mat = np.asarray(planes, dtype=np.float64).T  # (dim, n_planes)
-    weights = 1 << np.arange(plane_mat.shape[1], dtype=np.int64)
-
-    @pandas_udf("long")
-    def bucket(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_list()).astype(np.float64)
-        return pd.Series(((mat @ plane_mat) >= 0) @ weights)
-
-    return bucket
-
-
-@pandas_udf("double")
-def pandas_pair_dot(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Row-wise dot product of two array columns, one vectorized multiply
-    per Arrow batch — replaces the interpreted zip_with/aggregate dot in
-    candidate scoring hot loops."""
-    am = np.stack(a.to_list()).astype(np.float64)
-    bm = np.stack(b.to_list()).astype(np.float64)
-    return pd.Series((am * bm).sum(axis=1))
-
-
-def pandas_nearest_cells(centroids, n):
-    """UDF returning the ``n`` nearest centroid indices per vector, one
-    vectorized distance computation per Arrow batch."""
-    cent = np.asarray(centroids, dtype=np.float64)  # (k, dim)
-
-    @pandas_udf("array<int>")
-    def cells(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_list()).astype(np.float64)
-        d = ((mat[:, None, :] - cent[None, :, :]) ** 2).sum(axis=-1)
-        order = np.argsort(d, axis=1, kind="stable")[:, :n].astype(np.int32)
-        return pd.Series(list(order))
-
-    return cells
-
-
 def pandas_nearest_cell_dist(centroids):
     """UDF returning ``struct<cell:int, dist:double>`` — the nearest
     centroid index AND the euclidean distance to it — in one vectorized
-    distance computation per Arrow batch. The outlier gate needs the
-    distance value itself, which the cells-only kernel discards; ties
-    resolve to the lowest index (stable argmin), matching the expression
-    form's (distance, index) struct sort."""
+    distance computation per Arrow batch. Ties resolve to the lowest
+    index (first-occurrence argmin), matching the SQL form's (distance,
+    index) struct sort."""
     cent = np.asarray(centroids, dtype=np.float64)  # (k, dim)
 
     @pandas_udf("struct<cell:int, dist:double>")
@@ -409,7 +369,7 @@ def pandas_pq_codes(codebooks):
     nearest-codeword index per subspace (m-entry int array). The vector
     is L2-normalized and sub-sliced in numpy; one vectorized distance
     computation per (batch, subspace). Ties take the lowest index
-    (stable argsort), matching the expression/oracle tie-break."""
+    (stable argsort), matching the SQL/oracle tie-break."""
     cbs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
 
     @pandas_udf("array<int>")
@@ -439,7 +399,7 @@ def pandas_ivfpq_residual_codes(centroids, chat, codebooks):
     nearest coarse cell AND the per-subspace nearest codeword of the
     UNIT-space residual ``u - ĉ[cell]`` (standard IVF-PQ). One
     vectorized distance computation per (batch, subspace); ties take
-    the lowest index, matching the expression/oracle tie-break."""
+    the lowest index, matching the SQL/oracle tie-break."""
     cent = np.asarray(centroids, dtype=np.float64)  # (k, dim) raw
     ch = np.asarray(chat, dtype=np.float64)  # (k, dim) unit
     cbs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]

@@ -18,10 +18,13 @@ from __future__ import annotations
 
 import hashlib
 import math
+import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from polars_nexpresso_spark.plans.stats import plan_size_bytes
 
 
 def _dot(a, b):
@@ -36,15 +39,6 @@ def _norm(v):
     return F.sqrt(
         F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x)
     )
-
-
-def _pair_dot(a, b, assign: str):
-    """Candidate-scoring dot: vectorized Arrow kernel or interpreted expr."""
-    if assign == "pandas":
-        from polars_nexpresso_spark.functions._vectorized import pandas_pair_dot
-
-        return pandas_pair_dot(a, b)
-    return _dot(a, b)
 
 
 def _two_phase_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -233,25 +227,13 @@ def _hyperplanes(num_planes: int, dim: int, seed: int = 42) -> list[list[float]]
     return planes
 
 
-def lsh_bucket_expr(vec_col, planes: list[list[float]]):
-    """Sign bit-vector bucket id of a vector under the given hyperplanes."""
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        dot = _dot(vec_col, lit_plane)
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
-
-
 def _lsh_bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:
-    """One parsed SQL expression for the sign bit-vector bucket id —
-    r13 (guide §3.3) replacement for :func:`lsh_bucket_expr`'s
-    per-plane Column loop, which cost hundreds of py4j round trips per
-    call site (num_planes × dim ``F.lit`` calls, twice per query). The
-    per-plane dot is the same ``_sql_dot`` fold over the same doubles
-    (``_json_arr2``), the bucket is the same left-to-right integer sum
-    of ``1 << i`` sign terms, and a NULL vector folds to the same
-    bucket the Column form produced (NULL dot → the 0 branch)."""
+    """One parsed SQL expression for the sign bit-vector bucket id of
+    the vector column ``vec_sql`` under ``planes``: bit ``i`` is set when
+    the ``_sql_dot`` fold against plane ``i`` is >= 0, summed left to
+    right as ``1 << i`` terms (a NULL vector lands in bucket 0). One
+    string per call site instead of num_planes × dim ``F.lit`` py4j
+    round trips."""
     dot = _sql_dot(
         vec_sql, f"element_at({_json_arr2(planes)}, i + 1)"
     )
@@ -259,41 +241,6 @@ def _lsh_bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:
         f"aggregate(sequence(0, {len(planes) - 1}), 0, "
         f"(acc, i) -> acc + IF({dot} >= 0, shiftleft(1, i), 0))"
     )
-
-
-def _sqdist(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _pandas_lsh_bucket(planes: list[list[float]]):
-    """Arrow-batched LSH bucket assignment: one BLAS matmul per batch.
-
-    The expression form (:func:`lsh_bucket_expr`) evaluates ``num_planes``
-    interpreted array-lambda dots per row — fine for blocking keys used
-    once, but the map-side hot loop of :func:`lsh_ann_topk` at corpus
-    scale. Sign decisions may differ from the expression form only when a
-    dot is within float rounding of zero (a measure-zero tie on real data,
-    and immaterial to an approximate index).
-    """
-    from polars_nexpresso_spark.functions._vectorized import pandas_lsh_bucket
-
-    return pandas_lsh_bucket(planes)
-
-
-def _pandas_nearest_cells(centroids: list[list[float]], n: int):
-    """Arrow-batched IVF cell ranking: the ``n`` nearest centroid indices
-    per vector via one vectorized distance computation per batch (the
-    expression form evaluates ``n_centroids`` interpreted array-lambda
-    squared distances per row)."""
-    from polars_nexpresso_spark.functions._vectorized import (
-        pandas_nearest_cells,
-    )
-
-    return pandas_nearest_cells(centroids, n)
 
 
 def _sample_key_expr(id_col, seed: int = 42):
@@ -330,25 +277,55 @@ def _lloyd(X, n_centroids: int, *, iters: int = 8, seed: int = 42):
     return C.tolist()
 
 
-# Trained-centroid memo: {(corpus plan hash, id/vec cols, k, sample,
-# iters, seed): centroids}. Training is DETERMINISTIC (md5-ordered
-# sample + seeded Lloyd's), so a hit returns bit-identical centroids —
-# the memo only removes the per-call full-corpus TakeOrdered + collect
-# (~0.7s of the 2.5s q_ivf_ann_topk at sf0.1) for repeated searches over
-# the same corpus, the common batch-of-query-batches pattern. Bounded
-# FIFO; keyed by the ANALYZED plan, so a changed corpus retrains.
+# Training memos: {(corpus version, params): result}. Training is
+# DETERMINISTIC (md5-ordered sample + seeded Lloyd's), so a hit returns
+# bit-identical centroids; it only skips the per-call full-corpus
+# TakeOrdered + collect for repeated searches over the same corpus (the
+# batch-of-query-batches pattern). The coarse quantizer and the PQ
+# codebooks train on the same sample, so one sample memo feeds both.
+# The corpus version (``_corpus_version``) is the analyzed plan's hash
+# plus the length and modification time of every input file: the plan
+# hash alone ignores file contents, and a parquet overwritten in place
+# must retrain. Bounded FIFO; one lock guards both memos, since
+# operators built on concurrent threads reach them at once (training
+# itself runs outside the lock).
+_MEMO_LOCK = threading.Lock()
 _CENTROID_MEMO: dict[tuple, list[list[float]]] = {}
+_SAMPLE_MEMO: dict[tuple, object] = {}
 
-# Shared training-sample memo (r14): the coarse quantizer and the PQ
-# codebooks train on the SAME md5-ordered bounded sample (identical
-# orderBy+limit query), yet each ran its own full-corpus TakeOrdered +
-# collect — two corpus passes per cold JVM for ivfpq constructors. One
-# memoized sample stage feeds both Lloyd's calls bit-identically (the
-# trainings consume the collected array exactly as before). Same
-# disclosure as _CENTROID_MEMO: deterministic, keyed on the analyzed
-# plan + params, bounded FIFO; only the per-call sampling action is
-# skipped on a warm repeat, never any result.
-_SAMPLE_MEMO: dict[tuple, "object"] = {}
+
+def _corpus_version(corpus: DataFrame) -> tuple | None:
+    """``(semanticHash, ((path, length, mtime), ...))`` over the corpus's
+    input files, read through the Hadoop ``FileSystem`` so any scheme
+    works; None when it cannot be read (Spark Connect, a vanished file),
+    which disables the memos for that call."""
+    try:
+        spark = corpus.sparkSession
+        conf = spark._jsc.hadoopConfiguration()
+        files = []
+        for name in corpus.inputFiles():
+            path = spark._jvm.org.apache.hadoop.fs.Path(name)
+            st = path.getFileSystem(conf).getFileStatus(path)
+            files.append((name, st.getLen(), st.getModificationTime()))
+        return corpus.semanticHash(), tuple(files)
+    except Exception:  # noqa: BLE001 — Connect, missing file, hash failure
+        return None
+
+
+def _memo_get(memo: dict, key: tuple | None):
+    if key is None:
+        return None
+    with _MEMO_LOCK:
+        return memo.get(key)
+
+
+def _memo_put(memo: dict, key: tuple | None, value) -> None:
+    if key is None:
+        return
+    with _MEMO_LOCK:
+        if key not in memo and len(memo) >= 8:
+            memo.pop(next(iter(memo)))
+        memo[key] = value
 
 
 def _training_sample(
@@ -359,22 +336,15 @@ def _training_sample(
     seed: int,
 ):
     """The ≤ ``sample_size`` float64 training matrix: pseudo-random but
-    reproducible in any engine (md5-derived order key, id tie-break)."""
+    reproducible in any engine (md5-derived order key, id tie-break).
+    Memoized per corpus version — see ``_SAMPLE_MEMO``."""
     import numpy as np
 
-    memo_key = None
-    try:
-        memo_key = (
-            corpus.semanticHash(),
-            id_col,
-            vec_col,
-            sample_size,
-            seed,
-        )
-    except Exception:  # noqa: BLE001 — Connect or hash failure
-        memo_key = None
-    if memo_key is not None and memo_key in _SAMPLE_MEMO:
-        return _SAMPLE_MEMO[memo_key]
+    version = _corpus_version(corpus)
+    key = None if version is None else (version, id_col, vec_col, sample_size, seed)
+    X = _memo_get(_SAMPLE_MEMO, key)
+    if X is not None:
+        return X
     rows = (
         corpus.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
         .orderBy(_sample_key_expr(F.col("i"), seed), F.col("i"))
@@ -382,10 +352,7 @@ def _training_sample(
         .collect()
     )
     X = np.array([r["v"] for r in rows], dtype=np.float64)
-    if memo_key is not None:
-        if len(_SAMPLE_MEMO) >= 8:
-            _SAMPLE_MEMO.pop(next(iter(_SAMPLE_MEMO)))
-        _SAMPLE_MEMO[memo_key] = X
+    _memo_put(_SAMPLE_MEMO, key, X)
     return X
 
 
@@ -407,30 +374,18 @@ def _kmeans_centroids(
     collected to the driver and iterated with numpy — the standard IVF
     training shape (even distributed k-means ends with the centroid table
     on the driver; it is O(k·dim), not O(corpus)). Results are memoized
-    per (corpus plan, params) — see ``_CENTROID_MEMO``.
+    per (corpus version, params) — see ``_CENTROID_MEMO``.
     """
-    memo_key = None
-    try:
-        memo_key = (
-            corpus.semanticHash(),
-            id_col,
-            vec_col,
-            n_centroids,
-            sample_size,
-            iters,
-            seed,
-        )
-    except Exception:  # noqa: BLE001 — Connect or hash failure
-        memo_key = None
-    if memo_key is not None and memo_key in _CENTROID_MEMO:
-        return _CENTROID_MEMO[memo_key]
-
+    version = _corpus_version(corpus)
+    key = None if version is None else (
+        version, id_col, vec_col, n_centroids, sample_size, iters, seed
+    )
+    cents = _memo_get(_CENTROID_MEMO, key)
+    if cents is not None:
+        return cents
     X = _training_sample(corpus, id_col, vec_col, sample_size, seed)
     cents = _lloyd(X, n_centroids, iters=iters, seed=seed)
-    if memo_key is not None:
-        if len(_CENTROID_MEMO) >= 8:
-            _CENTROID_MEMO.pop(next(iter(_CENTROID_MEMO)))
-        _CENTROID_MEMO[memo_key] = cents
+    _memo_put(_CENTROID_MEMO, key, cents)
     return cents
 
 
@@ -480,7 +435,6 @@ def ivf_ann_topk(
     n_probe: int = 4,
     exclude_self: bool = True,
     centroids: str = "kmeans",
-    assign: str = "pandas",
 ) -> DataFrame:
     """Approximate top-k via IVF (inverted-file) cell partitioning.
 
@@ -493,13 +447,12 @@ def ivf_ann_topk(
     corpus instead of all of it. Exact cosine ranks candidates; same output
     shape as :func:`cosine_topk`, recall < 1 by construction.
 
-    ``assign="pandas"`` (default) ranks cells and scores candidates with
-    Arrow-batched vectorized kernels; ``"expr"`` keeps the pure
-    column-expression form. Measured on an 80k-vector corpus (dim 64,
-    local[32]): pandas 3.96s vs expr 4.75s — ``n_centroids`` interpreted
-    array-lambda distances per row cost more than the Arrow transfer of
-    the vector column. The crossover is ops-per-row: the LSH analog (8
-    cheap dots) goes the other way, see :func:`lsh_ann_topk`.
+    The corpus-side cell assignment runs as one parsed SQL expression
+    below a planned corpus size of 2 MiB (or when the size is unknown)
+    and as an Arrow-batched numpy kernel above it (:func:`_assign`; the
+    two engines cross over at about 1.8 MB on 4 cores). Query-side probe
+    ranking is always SQL and candidates are always scored with the
+    column-expression dot.
     """
     if centroids == "kmeans":
         cent_vecs = _kmeans_centroids(corpus, id_col, vec_col, n_centroids)
@@ -516,53 +469,24 @@ def ivf_ann_topk(
     else:
         raise ValueError(f"centroids must be 'kmeans' or 'sample', got {centroids!r}")
 
-    if assign == "pandas":
-
-        def nearest_cells(vec, n):
-            return _pandas_nearest_cells(cent_vecs, n)(vec)
-
-    elif assign == "expr":
-        # r13: built only on the branch that uses it — the n_centroids
-        # × dim F.lit loop cost ~1.5 s of py4j round trips per call
-        # even when the pandas kernels did the assignment.
-        cent_lits = [
-            F.array(*[F.lit(float(x)) for x in cv]) for cv in cent_vecs
-        ]
-
-        def nearest_cells(vec, n):
-            ranked = F.array_sort(
-                F.array(
-                    *[
-                        F.struct(_sqdist(vec, cl).alias("d"), F.lit(i).alias("i"))
-                        for i, cl in enumerate(cent_lits)
-                    ]
-                )
-            )
-            return F.slice(F.transform(ranked, lambda s: s["i"]), 1, n)
-
-    else:
-        raise ValueError(f"assign must be 'pandas' or 'expr', got {assign!r}")
-
-    c = corpus.select(
+    c = _assign(corpus, vec_col, cents=cent_vecs).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cv"),
         _norm(F.col(vec_col)).alias("__cn"),
-        F.get(nearest_cells(F.col(vec_col), 1), 0).alias("__cell"),
+        "__cell",
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qv"),
         _norm(F.col(vec_col)).alias("__qn"),
-        F.explode(nearest_cells(F.col(vec_col), n_probe)).alias("__cell"),
-    )
+    ).withColumn("__cell", F.explode(F.expr(_probe_sql(cent_vecs, "__qv", n_probe))))
     joined = c.join(F.broadcast(q), on="__cell")
     if exclude_self:
         joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
     scored = joined.withColumn(
         "cosine",
         F.round(
-            _pair_dot(F.col("__cv"), F.col("__qv"), assign)
-            / (F.col("__cn") * F.col("__qn")),
+            _dot(F.col("__cv"), F.col("__qv")) / (F.col("__cn") * F.col("__qn")),
             6,
         ),
     )
@@ -587,7 +511,6 @@ def lsh_ann_topk(
     multiprobe: int = 4,
     seed: int = 42,
     exclude_self: bool = True,
-    assign: str = "expr",
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k via random-hyperplane LSH bucketing.
@@ -602,57 +525,31 @@ def lsh_ann_topk(
     less but drops uniform recall to 0.62, the dial-curve numbers live
     in ``BENCH_DETAILS.json:ann_recall_at_k``.
 
-    ``assign="expr"`` (default) keeps bucketing and scoring as pure column
-    expressions; ``"pandas"`` swaps both for Arrow-batched kernels.
-    Measured on an 80k-vector corpus (dim 64, local[32]): expr 2.90s vs
-    pandas 3.77s — 8 interpreted dots per row are cheaper than shipping
-    the vector column through Arrow twice (bucketing + candidate scoring).
-    The IVF analog (16 squared distances per row) crosses over the other
-    way, see :func:`ivf_ann_topk`.
+    Bucketing is one parsed SQL expression (:func:`_lsh_bucket_sql`) and
+    scoring the column-expression dot: ``num_planes`` cheap dots per row
+    beat shipping the vector column through Arrow at both 2k and 20k
+    vectors (dim 64, 4 cores).
     """
     if dim is None:
         # Fallback probe: one driver-side job just to learn the vector
         # dimension. Callers that know it should pass ``dim`` so plan
         # construction stays action-free.
         dim = len(queries.select(vec_col).first()[0])
-    planes = _hyperplanes(num_planes, dim, seed)
-    if assign == "pandas":
-        bucket_of = _pandas_lsh_bucket(planes)
-    elif assign == "expr":
-        # r13: one parsed SQL string per call site instead of the
-        # num_planes × dim F.lit Column loop (same doubles, same
-        # folds — see _lsh_bucket_sql). The vector stages in its own
-        # projection so the SQL references a plain column.
-        bucket_sql = _lsh_bucket_sql("__pns_bvec", planes)
-    else:
-        raise ValueError(f"assign must be 'pandas' or 'expr', got {assign!r}")
-
-    if assign == "expr":
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            _norm(F.col(vec_col)).alias("__cn"),
-            F.col(vec_col).alias("__pns_bvec"),
-        ).withColumn("__bucket", F.expr(bucket_sql)).drop("__pns_bvec")
-        q_base = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            _norm(F.col(vec_col)).alias("__qn"),
-            F.col(vec_col).alias("__pns_bvec"),
-        ).withColumn("__qbucket", F.expr(bucket_sql)).drop("__pns_bvec")
-    else:
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            _norm(F.col(vec_col)).alias("__cn"),
-            bucket_of(F.col(vec_col)).alias("__bucket"),
-        )
-        q_base = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            _norm(F.col(vec_col)).alias("__qn"),
-            bucket_of(F.col(vec_col)).alias("__qbucket"),
-        )
+    # The vector stages in its own projection so the bucket SQL
+    # references a plain column.
+    bucket_sql = _lsh_bucket_sql("__pns_bvec", _hyperplanes(num_planes, dim, seed))
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("__cv"),
+        _norm(F.col(vec_col)).alias("__cn"),
+        F.col(vec_col).alias("__pns_bvec"),
+    ).withColumn("__bucket", F.expr(bucket_sql)).drop("__pns_bvec")
+    q_base = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("__qv"),
+        _norm(F.col(vec_col)).alias("__qn"),
+        F.col(vec_col).alias("__pns_bvec"),
+    ).withColumn("__qbucket", F.expr(bucket_sql)).drop("__pns_bvec")
     # Multi-probe: each query also probes every bucket within Hamming
     # distance ``multiprobe`` of its own. r13: the probe list is one
     # parsed transform over a literal mask array (mask 0 first — XOR
@@ -679,8 +576,7 @@ def lsh_ann_topk(
     scored = joined.withColumn(
         "cosine",
         F.round(
-            _pair_dot(F.col("__cv"), F.col("__qv"), assign)
-            / (F.col("__cn") * F.col("__qn")),
+            _dot(F.col("__cv"), F.col("__qv")) / (F.col("__cn") * F.col("__qn")),
             6,
         ),
     ).dropDuplicates(["query_id", "neighbor_id"])
@@ -957,7 +853,6 @@ def semantic_dedup(
     n_centroids: int | None = None,
     threshold: float = 0.95,
     centroids: str = "kmeans",
-    assign: str = "expr",
     persist_assignment: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
@@ -968,11 +863,13 @@ def semantic_dedup(
     order-free, so a brute-force SQL oracle replays it row-for-row.
 
     Scale shape: centroid training is the same bounded deterministic
-    sample as :func:`ivf_ann_topk`; cell assignment is map-side; the
-    quadratic similarity test is CONFINED to within-cluster pairs by an
-    equi-join on the cell id — the SemDeDup trick — so cost is
-    sum(cluster_size^2), not corpus^2. Grow ``n_centroids`` with the
-    corpus (clusters of ~1-10k vectors keep the pair stage linear-ish);
+    sample as :func:`ivf_ann_topk`; cell assignment is map-side (parsed
+    SQL below a planned corpus size of 2 MiB, the Arrow kernel above it,
+    see :func:`_assign`); the quadratic similarity test is CONFINED to
+    within-cluster pairs by an equi-join on the cell id — the SemDeDup
+    trick — so cost is sum(cluster_size^2), not corpus^2. Grow
+    ``n_centroids`` with the corpus (clusters of ~1-10k vectors keep the
+    pair stage linear-ish);
     no driver-side loop, no global sort. A pathologically hot cluster
     (many near-identical vectors collapsing into one cell — exactly the
     data this operator targets) is the skew case: measure with
@@ -1039,37 +936,11 @@ def semantic_dedup(
         raise ValueError(
             f"centroids must be 'kmeans' or 'sample', got {centroids!r}"
         )
-    # r13: the centroid literal arrays are built only on the expr
-    # branch — the n_centroids × dim F.lit py4j loop is pure waste when
-    # the pandas kernel does the assignment (the default).
-    cent_lits = (
-        [F.array(*[F.lit(float(x)) for x in cv]) for cv in cent_vecs]
-        if assign == "expr"
-        else None
-    )
-
-    def nearest_cell(vec):
-        if assign == "pandas":
-            return F.get(_pandas_nearest_cells(cent_vecs, 1)(vec), 0)
-        if assign == "expr":
-            ranked = F.array_sort(
-                F.array(
-                    *[
-                        F.struct(
-                            _sqdist(vec, cl).alias("d"), F.lit(i).alias("i")
-                        )
-                        for i, cl in enumerate(cent_lits)
-                    ]
-                )
-            )
-            return F.get(F.transform(ranked, lambda s: s["i"]), 0)
-        raise ValueError(f"assign must be 'pandas' or 'expr', got {assign!r}")
-
-    assigned = corpus.select(
+    assigned = _assign(corpus, vec_col, cents=cent_vecs).select(
         F.col(id_col),
         F.col(vec_col).alias("__v"),
         _norm(F.col(vec_col)).alias("__n"),
-        nearest_cell(F.col(vec_col)).alias("cluster_id"),
+        F.col("__cell").alias("cluster_id"),
     )
     if persist_assignment:
         from polars_nexpresso_spark.functions.dedup import _persist_blocking
@@ -1095,8 +966,7 @@ def semantic_dedup(
         "cluster_id",
     )
     cos = F.round(
-        _pair_dot(F.col("__va"), F.col("__vb"), assign)
-        / (F.col("__na") * F.col("__nb")),
+        _dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
         6,
     )
     dropped = (
@@ -1551,17 +1421,102 @@ def _pq_luts_sql(codebooks) -> str:
     return f"array({', '.join(luts)})"
 
 
-def _cells_ranked_sql(cent_vecs) -> str:
+def _cells_ranked_sql(cent_vecs, col: str) -> str:
     """SQL text ranking every coarse-quantizer cell by squared distance
-    to the raw vector column ``__v`` (ties to the lowest index) —
-    the same ordering the IVF oracle replays via ``list_distance``."""
+    to the raw vector column ``col``: an array of ``named_struct('d',
+    distance, 'i', cell)`` sorted by (d asc, i asc), so ties go to the
+    lowest index — the same ordering the IVF oracle replays via
+    ``list_distance``."""
     k = len(cent_vecs)
     cw_sql = f"element_at({_json_arr2(cent_vecs)}, i + 1)"
-    structs = (
-        f"transform(sequence(0, {k - 1}), i -> "
-        f"named_struct('d', {_sql_sqdist('__v', cw_sql)}, 'i', i))"
+    return (
+        f"array_sort(transform(sequence(0, {k - 1}), i -> "
+        f"named_struct('d', {_sql_sqdist(col, cw_sql)}, 'i', i)))"
     )
-    return f"transform(array_sort({structs}), s -> s.i)"
+
+
+def _probe_sql(cent_vecs, col: str, n_probe: int) -> str:
+    """SQL text for the ``n_probe`` nearest cell ids of ``col``."""
+    ranked = _cells_ranked_sql(cent_vecs, col)
+    return f"slice(transform({ranked}, s -> s.i), 1, {n_probe})"
+
+
+# Planned corpus size at which corpus-side quantizer assignment moves
+# from parsed SQL to the Arrow kernels (see _assign).
+_ARROW_ASSIGN_MIN_BYTES = 2 << 20
+
+
+def _assign(
+    corpus: DataFrame,
+    vec_col: str,
+    *,
+    cents=None,
+    dist: bool = False,
+    codebooks=None,
+    chat=None,
+    arrow: bool | None = None,
+) -> DataFrame:
+    """``corpus`` with its corpus-side quantizer assignment appended:
+    ``__cell`` (nearest of the raw-space centroids ``cents``, ties to the
+    lowest index) when ``cents`` is given, plus ``__dist`` (euclidean
+    distance to it) with ``dist``; ``__codes`` (per-subspace nearest
+    codeword of the unit vector, or of the unit-space residual
+    ``unit - chat[__cell]`` when ``chat`` is given) when ``codebooks``
+    is given.
+
+    The one engine gate for this work. Below a planned corpus size
+    (``plan_size_bytes``) of ``_ARROW_ASSIGN_MIN_BYTES``, or when the
+    size is unknown, the assignment is parsed SQL: sequential folds the
+    oracles replay bit for bit, and no Python worker round trip. Above
+    it, one Arrow-batched numpy kernel computes all distances per batch,
+    which pays for the Arrow transfer of the vector column once the
+    corpus is larger. Measured on 4 cores with dim-64 vectors (CPU per
+    call, straight lines through 0.58 and 5.8 MB cached corpora): cell
+    assignment against 16 centroids crosses over at about 1.75-1.8 MB,
+    PQ codes (m=8 x 16 codewords) at about 0.6 MB; the threshold sits at
+    the cell crossover. ``arrow`` pins the engine instead (True = Arrow,
+    False = SQL).
+    """
+    if arrow is None:
+        size = plan_size_bytes(corpus)
+        arrow = size is not None and size >= _ARROW_ASSIGN_MIN_BYTES
+    vec = F.col(vec_col)
+    out, picks = corpus, []
+    if arrow:
+        from polars_nexpresso_spark.functions import _vectorized as vz
+
+        if chat is not None:
+            best = vz.pandas_ivfpq_residual_codes(cents, chat, codebooks)(vec)
+            picks = [F.col("__best.cell").alias("__cell"),
+                     F.col("__best.codes").alias("__codes")]
+        elif cents is not None:
+            best = vz.pandas_nearest_cell_dist(cents)(vec)
+            picks = [F.col("__best.cell").alias("__cell")]
+            picks += [F.col("__best.dist").alias("__dist")] if dist else []
+    elif cents is not None:
+        best = F.expr(f"{_cells_ranked_sql(cents, f'`{vec_col}`')}[0]")
+        picks = [F.col("__best.i").alias("__cell")]
+        picks += [F.sqrt("__best.d").alias("__dist")] if dist else []
+    if picks:
+        # The best-cell struct stages in its own projection, so the kernel
+        # (or the cell sort) runs once per row when several fields are read.
+        out = out.select("*", best.alias("__best")).select("*", *picks).drop("__best")
+    if codebooks is None or (arrow and chat is not None):
+        return out
+    if arrow:
+        return out.withColumn("__codes", vz.pandas_pq_codes(codebooks)(vec))
+    # The unit vector (and the residual) materialize in their own
+    # projections: the codes SQL reads each subspace slice n_codes times,
+    # and CollapseProject keeps non-cheap expressions referenced more than
+    # once split, so each row normalizes once.
+    staged = out.withColumn("__unit", _pq_unit(vec))
+    src = "__unit"
+    if chat is not None:
+        staged = staged.withColumn("__res", F.expr(_residual_sql(chat)))
+        src = "__res"
+    return staged.withColumn(
+        "__codes", F.expr(_pq_codes_sql(codebooks, src))
+    ).drop("__unit", "__res")
 
 
 def _adc_sum():
@@ -1603,36 +1558,19 @@ def pq_encode(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign: str = "pandas",
     out_col: str = "codes",
 ) -> DataFrame:
     """Encode each vector as its per-subspace nearest-codeword indices:
     ``m`` small ints instead of ``dim`` floats (with the catalog's
     dim-64 float corpus and m=8, a 32x smaller representation to
     shuffle, store, or hold in memory at 100 TB). Assignment is
-    map-side; ``assign="pandas"`` is one Arrow stage for all subspaces,
-    ``"expr"`` the interpreted column-expression form (ties to the
-    lowest index either way)."""
-    if assign == "pandas":
-        from polars_nexpresso_spark.functions._vectorized import (
-            pandas_pq_codes,
-        )
-
-        code_expr = pandas_pq_codes(codebooks)(F.col(vec_col))
-        return corpus.select(F.col(id_col), code_expr.alias(out_col))
-    if assign != "expr":
-        raise ValueError(f"assign must be 'pandas' or 'expr': {assign!r}")
-    # Interpreted-expression form, built as ONE parsed SQL string: the
-    # Column-API equivalent registers 2 py4j lambdas per codeword
-    # (m*n_codes*2 round trips — seconds of driver latency before any
-    # data moves), while parsing one string server-side yields the same
-    # analyzed tree. The unit vector materializes in its own projection
-    # first so each row normalizes ONCE, not once per codeword
-    # (CollapseProject keeps the split — it refuses to duplicate
-    # non-cheap exprs referenced more than once).
-    return corpus.select(
-        F.col(id_col), _pq_unit(F.col(vec_col)).alias("__unit")
-    ).select(F.col(id_col), F.expr(_pq_codes_sql(codebooks)).alias(out_col))
+    map-side, ties to the lowest index: one parsed SQL expression below
+    a planned corpus size of 2 MiB (or when the size is unknown), one
+    Arrow stage for all subspaces above it (:func:`_assign`; for codes
+    alone the engines cross over at about 0.6 MB on 4 cores)."""
+    return _assign(corpus, vec_col, codebooks=codebooks).select(
+        F.col(id_col), F.col("__codes").alias(out_col)
+    )
 
 
 def pq_ann_topk(
@@ -1645,7 +1583,6 @@ def pq_ann_topk(
     m: int = 8,
     n_codes: int = 16,
     exclude_self: bool = True,
-    assign: str = "pandas",
 ) -> DataFrame:
     """Approximate top-k cosine via product quantization with
     asymmetric distance computation (Jégou et al. 2011): the corpus is
@@ -1655,7 +1592,8 @@ def pq_ann_topk(
     per-candidate float vector ever moves or multiplies.
 
     Scale shape: codebooks train on a bounded sample (driver-sized);
-    encoding is map-side; queries (with their LUTs) broadcast; scoring
+    encoding is map-side (SQL or Arrow kernel by corpus size, see
+    :func:`pq_encode`); queries (with their LUTs) broadcast; scoring
     is a per-row m-lookup expression and the top-k is the bounded
     per-query window. Recall < 1 by construction (quantization error);
     compose with the IVF cell filter for the 100 TB path exactly as
@@ -1692,12 +1630,12 @@ def pq_ann_topk(
         n_codes=n_codes,
     )
     encoded = pq_encode(
-        corpus, codebooks, id_col=id_col, vec_col=vec_col, assign=assign
+        corpus, codebooks, id_col=id_col, vec_col=vec_col
     ).select(
         F.col(id_col).alias("neighbor_id"), F.col("codes").alias("__codes")
     )
-    # One parsed SQL string for the full m x n_codes LUT (see pq_encode:
-    # the Column form costs 2 py4j lambda registrations per codeword);
+    # One parsed SQL string for the full m x n_codes LUT (the Column
+    # form costs 2 py4j lambda registrations per codeword);
     # the query unit vector materializes once per row in its own
     # projection before the per-codeword dots reference it.
     q = queries.select(
@@ -1723,7 +1661,7 @@ def ivfpq_ann_topk(
     m: int = 8,
     n_codes: int = 16,
     exclude_self: bool = True,
-    assign: str = "expr",
+    assign: str | None = None,
     residual: bool = True,
 ) -> DataFrame:
     """IVF+PQ composed index (the FAISS IVFPQ shape, Jégou et al. 2011):
@@ -1764,11 +1702,16 @@ def ivfpq_ann_topk(
     variant; the chooser table in docs/api/pipeline.md keys the
     recommendation to the sealed grid.
 
-    ``assign="expr"`` (default) keeps cell ranking and code assignment
-    as sequential-arithmetic parsed expressions — deterministic
-    training makes the whole index replayable in SQL, so the oracle is
-    hash-exact like the standalone PQ/IVF oracles; ``"pandas"`` swaps
-    both assignments for Arrow-batched numpy kernels.
+    Corpus-side cell and code assignment runs as sequential-arithmetic
+    parsed SQL below a planned corpus size of 2 MiB (or when the size is
+    unknown) — deterministic training makes the whole index replayable
+    in SQL, so the oracle is hash-exact like the standalone PQ/IVF
+    oracles — and as one Arrow-batched numpy kernel above it
+    (:func:`_assign`). With the PQ codes in the kernel the engines cross
+    over lower, at about 0.6 MB on 4 cores, so between that and 2 MiB
+    the SQL form costs up to ~2x. Query-side probe ranking is always
+    SQL. ``assign="expr"`` or ``"pandas"`` pins the SQL or the Arrow
+    engine instead of the size gate.
 
     Returns ``(query_id, neighbor_id, score, rank)`` — ``score`` is
     the ADC cosine approximation (rounded to 6), desc, id tie-break.
@@ -1783,70 +1726,17 @@ def ivfpq_ann_topk(
         residual_cents=cent_vecs if residual else None,
     )
     chat_vecs = _chat(cent_vecs) if residual else None
-    ranked_sql = _cells_ranked_sql(cent_vecs)
-    if assign == "pandas":
-        from polars_nexpresso_spark.functions._vectorized import (
-            pandas_ivfpq_residual_codes,
-            pandas_pq_codes,
-        )
-
-        if residual:
-            cc = pandas_ivfpq_residual_codes(cent_vecs, chat_vecs, codebooks)
-            c = corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                cc(F.col(vec_col)).alias("__cc"),
-            ).select(
-                "neighbor_id",
-                F.col("__cc.cell").alias("__cell"),
-                F.col("__cc.codes").alias("__codes"),
-            )
-        else:
-            c = corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.get(
-                    _pandas_nearest_cells(cent_vecs, 1)(F.col(vec_col)), 0
-                ).alias("__cell"),
-                pandas_pq_codes(codebooks)(F.col(vec_col)).alias("__codes"),
-            )
-        probe = _pandas_nearest_cells(cent_vecs, n_probe)(F.col("__v"))
-    elif assign == "expr":
-        staged = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__v"),
-            _pq_unit(F.col(vec_col)).alias("__unit"),
-        )
-        if residual:
-            # The residual stages in its OWN projection (the codes SQL
-            # references each subspace slice n_codes times; CollapseProject
-            # keeps the split for non-cheap exprs).
-            c = (
-                staged.select(
-                    "neighbor_id",
-                    "__unit",
-                    F.expr(f"{ranked_sql}[0]").alias("__cell"),
-                )
-                .select(
-                    "neighbor_id",
-                    "__cell",
-                    F.expr(_residual_sql(chat_vecs)).alias("__res"),
-                )
-                .select(
-                    "neighbor_id",
-                    "__cell",
-                    F.expr(_pq_codes_sql(codebooks, "__res")).alias(
-                        "__codes"
-                    ),
-                )
-            )
-        else:
-            c = staged.select(
-                "neighbor_id",
-                F.expr(f"{ranked_sql}[0]").alias("__cell"),
-                F.expr(_pq_codes_sql(codebooks)).alias("__codes"),
-            )
-        probe = F.expr(f"slice({ranked_sql}, 1, {n_probe})")
-    else:
-        raise ValueError(f"assign must be 'pandas' or 'expr': {assign!r}")
+    if assign not in (None, "expr", "pandas"):
+        raise ValueError(f"assign must be None, 'expr' or 'pandas': {assign!r}")
+    c = _assign(
+        corpus,
+        vec_col,
+        cents=cent_vecs,
+        codebooks=codebooks,
+        chat=chat_vecs,
+        arrow=None if assign is None else assign == "pandas",
+    ).select(F.col(id_col).alias("neighbor_id"), "__cell", "__codes")
+    probe = F.expr(_probe_sql(cent_vecs, "__v", n_probe))
     q_cols = [
         probe.alias("__probe"),
         F.expr(_pq_luts_sql(codebooks)).alias("__luts"),
@@ -2009,7 +1899,6 @@ def embedding_outliers(
     vec_col: str = "embedding",
     n_centroids: int = 16,
     z_threshold: float = 2.0,
-    assign: str = "pandas",
 ) -> DataFrame:
     """Embedding-space outlier gate: flag vectors unusually FAR from
     every cluster center — corrupt embeddings, out-of-domain content,
@@ -2030,11 +1919,10 @@ def embedding_outliers(
 
     Scale shape: centroid training is a ≤1024-row driver sample
     (O(k·dim), never corpus-sized); assignment + distance is one
-    projection over the scan — ``assign="pandas"`` (default) computes
-    it as one vectorized distance matrix per Arrow batch,
-    ``assign="expr"`` as ``n_centroids`` interpreted array-lambda dots
-    per row (the same crossover as ``ivf_ann_topk``: pandas wins at the
-    16-centroid catalog dial); no shuffle either way. The two
+    projection over the scan — parsed SQL below a planned corpus size
+    of 2 MiB (or when the size is unknown), one vectorized distance
+    matrix per Arrow batch above it (:func:`_assign`; the engines cross
+    over at about 1.75 MB on 4 cores); no shuffle either way. The two
     distribution scalars (mean, population stddev) ride ONE broadcast
     1-row aggregate back into the scoring projection. The vectors
     themselves never shuffle — the only exchange in the whole plan
@@ -2047,34 +1935,10 @@ def embedding_outliers(
             f"columns {id_col!r}/{vec_col!r} not both in {corpus.columns}"
         )
     cent_vecs = _kmeans_centroids(corpus, id_col, vec_col, n_centroids)
-    vec = F.col(vec_col)
-    if assign == "pandas":
-        from polars_nexpresso_spark.functions._vectorized import (
-            pandas_nearest_cell_dist,
-        )
-
-        best = pandas_nearest_cell_dist(cent_vecs)(vec)
-        cell_expr, dist_expr = best["cell"], best["dist"]
-    elif assign == "expr":
-        cent_lits = [
-            F.array(*[F.lit(float(x)) for x in cv]) for cv in cent_vecs
-        ]
-        ranked = F.array_sort(
-            F.array(
-                *[
-                    F.struct(_sqdist(vec, cl).alias("d"), F.lit(i).alias("i"))
-                    for i, cl in enumerate(cent_lits)
-                ]
-            )
-        )
-        best = F.get(ranked, 0)
-        cell_expr, dist_expr = best["i"], F.sqrt(best["d"])
-    else:
-        raise ValueError(f"assign must be 'pandas' or 'expr', got {assign!r}")
-    assigned = corpus.select(
+    assigned = _assign(corpus, vec_col, cents=cent_vecs, dist=True).select(
         F.col(id_col),
-        cell_expr.alias("cell"),
-        F.round(dist_expr, 6).alias("centroid_dist"),
+        F.col("__cell").alias("cell"),
+        F.round("__dist", 6).alias("centroid_dist"),
     )
     stats = assigned.agg(
         F.avg("centroid_dist").alias("__m"),
@@ -2103,7 +1967,6 @@ def cluster_purity(
     vec_col: str = "embedding",
     label_col: str = "label",
     n_centroids: int = 16,
-    assign: str = "pandas",
 ) -> DataFrame:
     """Per-cell purity of the k-means clustering against a label column
     — the standard external clustering eval, here as the quality dial
@@ -2120,8 +1983,8 @@ def cluster_purity(
     majority ties break to the smallest label.
 
     Scale shape: assignment is the map-side projection shared with
-    ``embedding_outliers`` (Arrow kernel or expression per ``assign``);
-    then ONE hash aggregation on (cell, label) — at most
+    ``embedding_outliers`` (SQL or Arrow kernel by corpus size, see
+    :func:`_assign`); then ONE hash aggregation on (cell, label) — at most
     ``n_centroids × n_labels`` rows — and a second tiny aggregation per
     cell with a ``min_by`` majority election (map-side partials, no
     window). Vectors never shuffle; the exchanges carry count rows.
@@ -2132,30 +1995,9 @@ def cluster_purity(
         if c not in corpus.columns:
             raise ValueError(f"column {c!r} not in {corpus.columns}")
     cent_vecs = _kmeans_centroids(corpus, id_col, vec_col, n_centroids)
-    vec = F.col(vec_col)
-    if assign == "pandas":
-        from polars_nexpresso_spark.functions._vectorized import (
-            pandas_nearest_cell_dist,
-        )
-
-        cell_expr = pandas_nearest_cell_dist(cent_vecs)(vec)["cell"]
-    elif assign == "expr":
-        cent_lits = [
-            F.array(*[F.lit(float(x)) for x in cv]) for cv in cent_vecs
-        ]
-        ranked = F.array_sort(
-            F.array(
-                *[
-                    F.struct(_sqdist(vec, cl).alias("d"), F.lit(i).alias("i"))
-                    for i, cl in enumerate(cent_lits)
-                ]
-            )
-        )
-        cell_expr = F.get(ranked, 0)["i"]
-    else:
-        raise ValueError(f"assign must be 'pandas' or 'expr', got {assign!r}")
     by_label = (
-        corpus.select(cell_expr.alias("cell"), F.col(label_col))
+        _assign(corpus, vec_col, cents=cent_vecs)
+        .select(F.col("__cell").alias("cell"), F.col(label_col))
         .groupBy("cell", label_col)
         .agg(F.count("*").alias("__cnt"))
     )
@@ -2260,7 +2102,6 @@ def diversity_sample(
     per_cell: int = 100,
     seed: int = 42,
     skew_salt: int | None = None,
-    assign: str = "pandas",
 ) -> DataFrame:
     """Coverage-preserving subsample in embedding space: cap every
     k-means cell at ``per_cell`` rows, so downsampling removes mass
@@ -2270,9 +2111,9 @@ def diversity_sample(
 
     Same deterministic k-means as ``ivf_ann_topk``/``embedding_outliers``
     (bounded driver-side training, so an oracle can re-derive the exact
-    centroids), nearest-cell assignment MAP-SIDE (one vectorized Arrow
-    distance matrix per batch with ``assign="pandas"``, interpreted
-    array-lambda dots with ``"expr"``), then
+    centroids), nearest-cell assignment MAP-SIDE (parsed SQL below a
+    planned corpus size of 2 MiB, one vectorized Arrow distance matrix
+    per batch above it, see :func:`_assign`), then
     :func:`~polars_nexpresso_spark.functions.sampling.cap_per_group`
     on the cell id — survivors are picked by the md5 id-hash total
     order, deterministic across runs, partitionings, and engines.
@@ -2296,29 +2137,11 @@ def diversity_sample(
             f"columns {id_col!r}/{vec_col!r} not both in {corpus.columns}"
         )
     cent_vecs = _kmeans_centroids(corpus, id_col, vec_col, n_centroids)
-    vec = F.col(vec_col)
-    if assign == "pandas":
-        from polars_nexpresso_spark.functions._vectorized import (
-            pandas_nearest_cell_dist,
-        )
-
-        cell_expr = pandas_nearest_cell_dist(cent_vecs)(vec)["cell"]
-    elif assign == "expr":
-        cent_lits = [
-            F.array(*[F.lit(float(x)) for x in cv]) for cv in cent_vecs
-        ]
-        ranked = F.array_sort(
-            F.array(
-                *[
-                    F.struct(_sqdist(vec, cl).alias("d"), F.lit(i).alias("i"))
-                    for i, cl in enumerate(cent_lits)
-                ]
-            )
-        )
-        cell_expr = F.get(ranked, 0)["i"]
-    else:
-        raise ValueError(f"assign must be 'pandas' or 'expr', got {assign!r}")
-    assigned = corpus.withColumn("cell", cell_expr)
+    assigned = (
+        _assign(corpus, vec_col, cents=cent_vecs)
+        .withColumn("cell", F.col("__cell"))
+        .drop("__cell")
+    )
     return cap_per_group(
         assigned, "cell", id_col, max_n=per_cell, seed=seed,
         skew_salt=skew_salt,

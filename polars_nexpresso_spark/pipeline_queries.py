@@ -3685,17 +3685,16 @@ PIPELINE_ORACLE_SQL["apply_mix"] = f"""
 
 def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ/ADC approximate top-k (m=8 subspaces x 16 codes over the
-    dim-64 corpus, queries = vec_id < 10). assign="expr" keeps BOTH
-    engines' normalization/assignment arithmetic sequential, so the
-    deterministic codebooks (re-derived Spark-free in the oracle, the
-    IVF pattern) yield a hash-exact oracle for an approximate index."""
+    dim-64 corpus, queries = vec_id < 10). The corpus plans below
+    ``pq_encode``'s 2 MiB engine gate, so normalization and code
+    assignment run as sequential SQL arithmetic and the deterministic
+    codebooks (re-derived Spark-free in the oracle, the IVF pattern)
+    yield a hash-exact oracle for an approximate index."""
     from polars_nexpresso_spark.functions.similarity import pq_ann_topk
 
     emb = spread(read_table(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 10)
-    return pq_ann_topk(
-        emb, queries, k=5, m=8, n_codes=16, assign="expr"
-    )
+    return pq_ann_topk(emb, queries, k=5, m=8, n_codes=16)
 
 
 PIPELINE_QUERIES["pq_ann_topk"] = q_pq_ann_topk
@@ -3794,9 +3793,10 @@ if _pq_oracle_sql is not None:
 def q_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF+PQ composed index (n_centroids=16, 6-cell probe; m=8 x 16
     codes; queries = vec_id < 10): IVF bounds the candidates, PQ bounds
-    the bytes per candidate. assign="expr" keeps cell ranking and code
-    assignment sequential, so both deterministic trainings replay
-    Spark-free in the oracle and the composed index is hash-exact."""
+    the bytes per candidate. The corpus plans below the 2 MiB engine
+    gate, so cell ranking and code assignment run as sequential SQL
+    arithmetic; both deterministic trainings replay Spark-free in the
+    oracle and the composed index is hash-exact."""
     from polars_nexpresso_spark.functions.similarity import ivfpq_ann_topk
 
     emb = spread(read_table(spark, sf_dir, "embeddings"))
@@ -3809,7 +3809,6 @@ def q_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_probe=6,
         m=8,
         n_codes=16,
-        assign="expr",
     )
 
 
@@ -3836,23 +3835,24 @@ def _ivfpq_oracle():
     )
 
 
+@functools.cache
 def _ivfpq_with_body():
     """Shared WITH-clause body for the residual IVF+PQ oracles, ending
-    at the ADC-``scored`` CTE; None if the testdata is unreadable at
-    import. Replays the full residual cascade Spark-free: raw-space
-    cell assignment, unit-space residual vs the normalized centroid,
-    residual-trained codebooks (``pq_codebooks_local(residual_cents=
-    ...)``), ADC = exact ``<q, ĉ_cell>`` + LUT sum."""
+    at the ADC-``scored`` CTE, built once per process; None if the
+    testdata is unreadable at import. Replays the full residual cascade
+    Spark-free: raw-space cell assignment against the shared
+    ``_oracle_centroids()``, unit-space residual vs the normalized
+    centroid, residual-trained codebooks (``pq_codebooks_local(
+    residual_cents=...)``), ADC = exact ``<q, ĉ_cell>`` + LUT sum."""
+    cents = _oracle_centroids()
+    if cents is None:
+        return None
     try:
         from polars_nexpresso_spark.functions.similarity import (
             _chat,
-            kmeans_centroids_local,
             pq_codebooks_local,
         )
 
-        cents = kmeans_centroids_local(
-            f"{_ORACLE_SF_DIR}/embeddings.parquet", n_centroids=16
-        )
         cbs = pq_codebooks_local(
             f"{_ORACLE_SF_DIR}/embeddings.parquet",
             m=8,
@@ -4001,7 +4001,6 @@ def q_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_probe=6,
         m=8,
         n_codes=16,
-        assign="expr",
     )
     return exact_rerank(cand, emb, queries, k=5)
 

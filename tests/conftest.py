@@ -10,6 +10,7 @@ child-list order IS verified because JSON preserves list order.
 from __future__ import annotations
 
 import datetime
+import itertools
 import json
 import math
 
@@ -57,3 +58,30 @@ def canonical_rows(df: DataFrame) -> list[str]:
 
 def assert_same_rows(left: DataFrame, right: DataFrame) -> None:
     assert canonical_rows(left) == canonical_rows(right)
+
+
+@pytest.fixture
+def parquet_copy(tmp_path):
+    """``copy(df)``: a parquet-backed copy of ``df``. Its scan carries
+    Catalyst size statistics, which a ``createDataFrame`` frame lacks."""
+    n = itertools.count()
+
+    def copy(df: DataFrame) -> DataFrame:
+        path = str(tmp_path / f"copy{next(n)}.parquet")
+        df.write.mode("overwrite").parquet(path)
+        return df.sparkSession.read.parquet(path)
+
+    return copy
+
+
+@pytest.fixture
+def force_arrow_assign(monkeypatch):
+    """``force()``: move every known corpus size onto the Arrow side of
+    the similarity module's assignment gate (unknown sizes stay SQL)."""
+
+    def force() -> None:
+        from polars_nexpresso_spark.functions import similarity
+
+        monkeypatch.setattr(similarity, "_ARROW_ASSIGN_MIN_BYTES", 0)
+
+    return force

@@ -68,18 +68,42 @@ def test_ivf_ann_recall_floor(emb_and_exact):
     assert recall >= 0.60, f"IVF recall@{K} regressed: {recall:.3f} < 0.60"
 
 
-def test_ann_assign_modes_agree(emb_and_exact):
-    """The Arrow-batched and expression assignment/scoring engines produce
-    the same buckets/cells and hence the same results (float-rounding sign
-    flips at exact zero dots are measure-zero on real data)."""
-    emb, queries, _ = emb_and_exact
-    lsh_e = lsh_ann_topk(emb, queries, k=K, num_planes=8, multiprobe=2, assign="expr")
-    lsh_p = lsh_ann_topk(emb, queries, k=K, num_planes=8, multiprobe=2, assign="pandas")
-    assert {tuple(r) for r in lsh_e.collect()} == {tuple(r) for r in lsh_p.collect()}
+def _uses_arrow(df) -> bool:
+    return "ArrowEvalPython" in df._jdf.queryExecution().optimizedPlan().toString()
 
-    ivf_e = ivf_ann_topk(emb, queries, k=K, n_centroids=8, n_probe=3, assign="expr")
-    ivf_p = ivf_ann_topk(emb, queries, k=K, n_centroids=8, n_probe=3, assign="pandas")
-    assert {tuple(r) for r in ivf_e.collect()} == {tuple(r) for r in ivf_p.collect()}
+
+def test_ann_assign_modes_agree(emb_and_exact, force_arrow_assign):
+    """Both sides of the corpus-size engine gate — parsed-SQL and
+    Arrow-kernel cell assignment — produce the same cells and hence the
+    same IVF results."""
+    emb, queries, _ = emb_and_exact
+
+    def run():
+        df = ivf_ann_topk(emb, queries, k=K, n_centroids=8, n_probe=3)
+        return _uses_arrow(df), {tuple(r) for r in df.collect()}
+
+    sql = run()
+    force_arrow_assign()
+    arrow = run()
+    assert (sql[0], arrow[0]) == (False, True)
+    assert sql[1] == arrow[1]
+
+
+def test_assign_engine_follows_planned_corpus_size(
+    spark, parquet_copy, force_arrow_assign
+):
+    """The gate reads Catalyst's size estimate: a small parquet corpus
+    plans with no Python stage, the same corpus past the (lowered)
+    threshold plans with the Arrow kernel, and a stat-less
+    ``createDataFrame`` corpus stays on SQL whatever the threshold."""
+    from polars_nexpresso_spark.functions.similarity import embedding_outliers
+
+    local = _clustered_corpus(spark, n_per=10, dim=8)
+    parquet = parquet_copy(local)
+    assert not _uses_arrow(embedding_outliers(parquet, n_centroids=4))
+    force_arrow_assign()
+    assert _uses_arrow(embedding_outliers(parquet, n_centroids=4))
+    assert not _uses_arrow(embedding_outliers(local, n_centroids=4))
 
 
 def test_lsh_dim_param_keeps_plan_action_free(spark):
@@ -267,29 +291,30 @@ def _clustered_corpus(spark, *, n_per: int, dim: int, n_clusters: int = 5):
     )
 
 
-def test_pq_encode_shapes_and_engine_equivalence(spark):
-    from pyspark.sql import functions as F
-
+def test_pq_encode_shapes_and_engine_equivalence(
+    spark, parquet_copy, force_arrow_assign
+):
     from polars_nexpresso_spark.functions.similarity import (
         pq_codebooks,
         pq_encode,
     )
 
-    corpus = _clustered_corpus(spark, n_per=40, dim=16)
+    corpus = parquet_copy(_clustered_corpus(spark, n_per=40, dim=16))
     cbs = pq_codebooks(corpus, m=4, n_codes=8)
     assert len(cbs) == 4 and all(len(cb) == 8 for cb in cbs)
     assert all(len(cw) == 4 for cb in cbs for cw in cb)
-    a = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq_encode(corpus, cbs, assign="pandas").collect()
-    }
-    b = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq_encode(corpus, cbs, assign="expr").collect()
-    }
-    assert a == b
+
+    def codes():
+        df = pq_encode(corpus, cbs)
+        return _uses_arrow(df), {r["vec_id"]: list(r["codes"]) for r in df.collect()}
+
+    sql = codes()
+    force_arrow_assign()
+    arrow = codes()
+    assert (sql[0], arrow[0]) == (False, True)
+    assert sql[1] == arrow[1]
     assert all(
-        len(c) == 4 and all(0 <= x < 8 for x in c) for c in a.values()
+        len(c) == 4 and all(0 <= x < 8 for x in c) for c in sql[1].values()
     )
 
 
@@ -343,40 +368,48 @@ def test_pq_validation(spark):
         pq_codebooks(corpus, m=4, n_codes=4)
 
 
-def test_ivfpq_cluster_precision_and_engine_equivalence(spark):
+def test_ivfpq_cluster_precision_and_engine_equivalence(
+    spark, parquet_copy, force_arrow_assign
+):
     """The composed index keeps PQ's cluster-level precision (candidates
     can only come from probed IVF cells, and ADC ties resolve by id
-    inside the query's own tight cluster) and the expr/pandas
-    assignment engines agree row-for-row."""
+    inside the query's own tight cluster), and both sides of the
+    corpus-size engine gate agree row-for-row."""
     from collections import Counter
 
     from polars_nexpresso_spark.functions.similarity import ivfpq_ann_topk
 
-    corpus = _clustered_corpus(spark, n_per=40, dim=16)
+    corpus = parquet_copy(_clustered_corpus(spark, n_per=40, dim=16))
     queries = corpus.filter((F.col("vec_id") % 40) < 2)
     kwargs = dict(k=5, n_centroids=8, n_probe=3, m=4, n_codes=16)
-    rows_e = ivfpq_ann_topk(corpus, queries, assign="expr", **kwargs).collect()
-    for r in rows_e:
-        assert r["query_id"] // 40 == r["neighbor_id"] // 40, (
-            r["query_id"], r["neighbor_id"],
-        )
-    per_q = Counter(r["query_id"] for r in rows_e)
+
+    def run():
+        df = ivfpq_ann_topk(corpus, queries, **kwargs)
+        return _uses_arrow(df), sorted(map(tuple, df.collect()))
+
+    sql = run()
+    for r in sql[1]:
+        assert r[0] // 40 == r[1] // 40, r
+    per_q = Counter(r[0] for r in sql[1])
     assert all(v == 5 for v in per_q.values())
     assert len(per_q) == queries.count()
 
-    rows_p = ivfpq_ann_topk(
-        corpus, queries, assign="pandas", **kwargs
-    ).collect()
-    assert sorted(map(tuple, rows_e)) == sorted(map(tuple, rows_p))
+    force_arrow_assign()
+    arrow = run()
+    assert (sql[0], arrow[0]) == (False, True)
+    assert sql[1] == arrow[1]
 
 
 def test_ivfpq_candidates_bounded_by_probed_cells(spark):
     """Every (query, neighbor) the composed index scores shares a probed
     IVF cell — the candidate bound that makes the join touch
-    ~n_probe/n_centroids of the corpus instead of all of it."""
+    ~n_probe/n_centroids of the corpus instead of all of it. Cells are
+    re-derived here in numpy (nearest centroids, ties to the lowest
+    index)."""
+    import numpy as np
+
     from polars_nexpresso_spark.functions.similarity import (
         _kmeans_centroids,
-        _pandas_nearest_cells,
         ivfpq_ann_topk,
     )
 
@@ -386,17 +419,17 @@ def test_ivfpq_candidates_bounded_by_probed_cells(spark):
         corpus, queries, k=50, n_centroids=8, n_probe=2, m=4, n_codes=16,
         exclude_self=False,
     ).collect()
-    cents = _kmeans_centroids(corpus, "vec_id", "embedding", 8)
-    cell1 = _pandas_nearest_cells(cents, 1)(F.col("embedding"))
-    cell2 = _pandas_nearest_cells(cents, 2)(F.col("embedding"))
-    corpus_cell = {
-        r["vec_id"]: r["c"][0]
-        for r in corpus.select("vec_id", cell1.alias("c")).collect()
-    }
-    probe = {
-        r["vec_id"]: set(r["c"])
-        for r in queries.select("vec_id", cell2.alias("c")).collect()
-    }
+    cents = np.asarray(_kmeans_centroids(corpus, "vec_id", "embedding", 8))
+    rows = corpus.collect()
+    ids = [r["vec_id"] for r in rows]
+    vecs = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+    ranked = np.argsort(
+        ((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=-1),
+        axis=1,
+        kind="stable",
+    )
+    corpus_cell = dict(zip(ids, ranked[:, 0]))
+    probe = {i: set(ranked[j, :2]) for j, i in enumerate(ids) if i < 3}
     assert res, "composed index returned no candidates"
     for r in res:
         assert corpus_cell[r["neighbor_id"]] in probe[r["query_id"]], (

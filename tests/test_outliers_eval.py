@@ -123,25 +123,27 @@ def test_dedup_pair_recall_validation(spark):
         dedup_pair_recall(bad, good)
 
 
-def test_embedding_outliers_pandas_expr_equivalence(spark):
-    """The Arrow kernel and the expression form agree row-for-row —
-    cell election (ties to lowest index) and the rounded distances."""
+def test_embedding_outliers_pandas_expr_equivalence(
+    spark, parquet_copy, force_arrow_assign
+):
+    """Both sides of the corpus-size engine gate — parsed SQL and the
+    Arrow kernel — agree row-for-row: cell election (ties to lowest
+    index) and the rounded distances."""
     rows = [
         (i, [float((7 * i) % 11) / 3, float((5 * i) % 13) / 4, 0.25 * i % 2])
         for i in range(80)
     ]
-    df = _corpus(spark, rows)
-    a = {
-        r["vec_id"]: (r["cell"], r["centroid_dist"], r["dist_z"])
-        for r in embedding_outliers(df, n_centroids=5, assign="pandas").collect()
-    }
-    b = {
-        r["vec_id"]: (r["cell"], r["centroid_dist"], r["dist_z"])
-        for r in embedding_outliers(df, n_centroids=5, assign="expr").collect()
-    }
-    assert a == b
-    with pytest.raises(ValueError, match="assign"):
-        embedding_outliers(df, assign="bogus")
+    df = parquet_copy(_corpus(spark, rows))
+
+    def run():
+        return {
+            r["vec_id"]: (r["cell"], r["centroid_dist"], r["dist_z"])
+            for r in embedding_outliers(df, n_centroids=5).collect()
+        }
+
+    a = run()
+    force_arrow_assign()
+    assert run() == a
 
 
 # ----------------------------------------------------------- cluster purity
@@ -183,18 +185,20 @@ def test_cluster_purity_tie_breaks_to_smaller_label(spark):
     assert got[0]["majority_label"] == 3 and got[0]["purity"] == 0.5
 
 
-def test_cluster_purity_engines_agree_and_validate(spark):
+def test_cluster_purity_engines_agree_and_validate(
+    spark, parquet_copy, force_arrow_assign
+):
     from polars_nexpresso_spark.functions.similarity import cluster_purity
 
     rows = [
         (i, [float(i % 5), float((3 * i) % 7)], i % 3) for i in range(60)
     ]
-    df = spark.createDataFrame(
+    df = parquet_copy(spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
-    )
+    ))
     a = sorted(map(tuple, cluster_purity(df, n_centroids=4).collect()))
-    b = sorted(map(tuple, cluster_purity(
-        df, n_centroids=4, assign="expr").collect()))
+    force_arrow_assign()
+    b = sorted(map(tuple, cluster_purity(df, n_centroids=4).collect()))
     assert a == b
     with pytest.raises(ValueError, match="not in"):
         cluster_purity(df, label_col="missing")

@@ -873,6 +873,90 @@ def test_ivf_centroid_methods_and_validation(spark):
         ivf_ann_topk(vectors, q, k=2, centroids="bogus")
 
 
+def test_kmeans_memo_retrains_on_overwritten_parquet(spark, tmp_path, monkeypatch):
+    """The centroid and sample memos key on the input files' length and
+    modification time, not only the plan: rewriting the corpus parquet
+    in place (same path, same plan hash) with different vectors must
+    train fresh centroids, while an untouched corpus keeps its memo hit."""
+    import time
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from polars_nexpresso_spark.functions import similarity as S
+
+    path = str(tmp_path / "emb.parquet")
+
+    def write(n, seed):
+        vecs = np.random.default_rng(seed).normal(size=(n, 4)).astype(np.float32)
+        pq.write_table(
+            pa.table({
+                "vec_id": np.arange(n, dtype=np.int64),
+                "embedding": [list(map(float, v)) for v in vecs],
+            }),
+            path,
+        )
+
+    def centroids():
+        return S._kmeans_centroids(spark.read.parquet(path), "vec_id", "embedding", 3)
+
+    write(40, 1)
+    first = centroids()
+    asks = []
+    orig = S._training_sample
+
+    def counting(*args, **kwargs):
+        asks.append(args[3:])
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(S, "_training_sample", counting)
+    assert centroids() == first and not asks  # unchanged corpus: memo hit
+    time.sleep(1.1)  # a coarse-grained filesystem clock must still move
+    write(60, 2)
+    fresh = centroids()
+    assert asks, "overwritten corpus did not retrain"
+    assert fresh != first
+    assert fresh == S.kmeans_centroids_local(path, n_centroids=3)
+
+
+def test_training_memos_stay_bounded_under_concurrent_writers():
+    """The bounded FIFO memos are shared by operators built on
+    concurrent threads: many threads inserting at once (with a shortened
+    switch interval) must neither raise from the evict-then-insert
+    sequence nor grow a memo past its bound."""
+    import sys
+    import threading
+
+    from polars_nexpresso_spark.functions import similarity as S
+
+    memo: dict = {}
+    errors: list = []
+
+    def writer(t):
+        try:
+            for i in range(2000):
+                S._memo_put(memo, (t, i), i)
+                S._memo_get(memo, (t, i))
+                assert len(memo) <= 8
+        except Exception as e:  # noqa: BLE001 — surfaced by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=writer, args=(t,)) for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors[:3]
+    assert len(memo) == 8
+
+
 def test_lsh_multiprobe_exhaustive_equals_exact(spark):
     """multiprobe == num_planes probes every bucket (all Hamming distances),
     so the LSH search degenerates to exhaustive and must equal the exact
