@@ -13,13 +13,67 @@ This module exists (rather than living in ``dedup``) so ``text`` and
 other modules that ``dedup`` itself imports can share the registry
 without an import cycle. ``dedup.release_blocking_caches`` remains the
 public alias.
+
+It also holds the bounded memos the similarity operators keep per
+corpus version (trained quantizers, training samples, persisted search
+indexes): one lock and one FIFO bound for all of them, since operators
+built on concurrent driver threads reach them at once.
 """
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 _TRACKED_CACHES: list[DataFrame] = []
+
+_MEMO_LOCK = threading.Lock()
+_MEMO_BOUND = 8
+# {(session, corpus version, kind, params): persisted corpus frame} —
+# the similarity search indexes; emptied by release_tracked_caches.
+_INDEX_MEMO: dict[tuple, DataFrame] = {}
+
+
+def _unpersist(value) -> None:
+    if isinstance(value, DataFrame):
+        try:
+            value.unpersist()
+        except Exception:  # noqa: BLE001 — session may already be gone
+            pass
+
+
+def _memo_get(memo: dict, key: tuple | None):
+    if key is None:
+        return None
+    with _MEMO_LOCK:
+        return memo.get(key)
+
+
+def _memo_put(memo: dict, key: tuple | None, value):
+    """Store ``value`` under ``key`` and return what the memo now holds
+    there: an entry a concurrent builder stored first wins (values are
+    deterministic per key). Past the bound the oldest entry goes; an
+    evicted DataFrame is unpersisted."""
+    if key is None:
+        return value
+    evicted = None
+    with _MEMO_LOCK:
+        if key in memo:
+            return memo[key]
+        if len(memo) >= _MEMO_BOUND:
+            evicted = memo.pop(next(iter(memo)))
+        memo[key] = value
+    _unpersist(evicted)
+    return value
+
+
+def _memo_evict(memo: dict, stale) -> None:
+    """Drop (and unpersist) every entry whose key satisfies ``stale``."""
+    with _MEMO_LOCK:
+        gone = [memo.pop(k) for k in [k for k in memo if stale(k)]]
+    for value in gone:
+        _unpersist(value)
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
@@ -32,18 +86,17 @@ def persist_tracked(df: DataFrame) -> DataFrame:
 
 
 def release_tracked_caches() -> int:
-    """Unpersist every tracked intermediate cached in this process and
-    return how many were released.
+    """Unpersist every tracked intermediate and every similarity search
+    index cached in this process and return how many were released.
 
     Call between corpora in a long-lived session; safe while earlier
     result DataFrames are still alive (Spark recomputes on next action).
     """
-    released = 0
+    with _MEMO_LOCK:
+        released = list(_INDEX_MEMO.values())
+        _INDEX_MEMO.clear()
     while _TRACKED_CACHES:
-        df = _TRACKED_CACHES.pop()
-        try:
-            df.unpersist()
-            released += 1
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-    return released
+        released.append(_TRACKED_CACHES.pop())
+    for df in released:
+        _unpersist(df)
+    return len(released)

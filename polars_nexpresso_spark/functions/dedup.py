@@ -608,8 +608,8 @@ def dedup_clusters(
 
     r14 convergence read (guide §2.4): each round's self rows carry the
     previous label into the min-aggregation as ``__old`` (``min`` ignores
-    the NULLs on neighbor rows), so "did anything change" is a
-    filter+limit over the round's OWN checkpointed blocks instead of the
+    the NULLs on neighbor rows), so "did anything change" is one
+    ``isEmpty`` job over the round's OWN checkpointed blocks instead of the
     old corpus-wide ``combined ⋈ labels`` re-join — one join and one
     corpus-sized shuffle fewer per iteration, identical decision (an id
     first reached this round has no self row → NULL ``__old`` → excluded,
@@ -665,13 +665,9 @@ def dedup_clusters(
             )
         )
         combined = combined.localCheckpoint(eager=True)
-        changed = (
-            combined.filter(F.col("__label") < F.col("__old"))
-            .limit(1)
-            .count()
-        )
+        converged = combined.filter(F.col("__label") < F.col("__old")).isEmpty()
         labels = combined.drop("__old")
-        if changed == 0:
+        if converged:
             break
     out = labels
     if rest is not None:

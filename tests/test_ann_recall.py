@@ -512,26 +512,42 @@ def test_ivfpq_trainings_share_one_sample_collect(spark, monkeypatch):
     shared md5-ordered sample — both ask, but only one corpus
     TakeOrdered+collect runs (the second request memo-hits the same
     key), halving the cold-JVM training passes of every ivfpq
-    constructor."""
+    constructor. A repeat call trains nothing and reuses the index."""
     from polars_nexpresso_spark.functions import similarity as S
+
+    from polars_nexpresso_spark.functions._caching import release_tracked_caches
 
     corpus = _clustered_corpus(spark, n_per=30, dim=16)
     queries = corpus.filter(F.col("vec_id") < 3)
     S._SAMPLE_MEMO.clear()
     S._CENTROID_MEMO.clear()
-    asks = []
-    orig = S._training_sample
+    release_tracked_caches()
+    asks, trains = [], []
+    orig, orig_train = S._training_sample, S._pq_train_sample
 
     def counting(*args, **kwargs):
         asks.append(args[3:])  # (sample_size, seed)
         return orig(*args, **kwargs)
 
+    def training(*args, **kwargs):
+        trains.append(kwargs["m"])
+        return orig_train(*args, **kwargs)
+
     monkeypatch.setattr(S, "_training_sample", counting)
-    S.ivfpq_ann_topk(
-        corpus, queries, k=5, n_centroids=8, n_probe=2, m=4, n_codes=8
-    )
-    assert len(asks) == 2  # coarse + PQ both request the sample
+    monkeypatch.setattr(S, "_pq_train_sample", training)
+    for _ in range(2):
+        S.ivfpq_ann_topk(
+            corpus, queries, k=5, n_centroids=8, n_probe=2, m=4, n_codes=8
+        )
+    assert len(asks) == 2  # coarse + PQ both request the sample, once
     assert len(S._SAMPLE_MEMO) == 1  # one key -> one collect fed both
+    # The repeat call reuses the codebooks (next to the centroids) and
+    # the persisted (id, cell, codes) index: no second PQ training.
+    assert trains == [4]
+    assert len(S._CENTROID_MEMO) == 2
+    assert len(S._INDEX_MEMO) == 1
+    release_tracked_caches()
+    assert not S._INDEX_MEMO
 
 
 def test_ann_recall_table_counts_hits(spark):

@@ -873,6 +873,24 @@ def test_ivf_centroid_methods_and_validation(spark):
         ivf_ann_topk(vectors, q, k=2, centroids="bogus")
 
 
+def _write_vectors(path, vecs):
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({
+            "vec_id": np.arange(len(vecs), dtype=np.int64),
+            "embedding": [list(map(float, v)) for v in vecs.astype(np.float32)],
+        }),
+        path,
+    )
+
+
+def _top_pairs(df):
+    return sorted((r["query_id"], r["neighbor_id"]) for r in df.collect())
+
+
 def test_kmeans_memo_retrains_on_overwritten_parquet(spark, tmp_path, monkeypatch):
     """The centroid and sample memos key on the input files' length and
     modification time, not only the plan: rewriting the corpus parquet
@@ -881,22 +899,13 @@ def test_kmeans_memo_retrains_on_overwritten_parquet(spark, tmp_path, monkeypatc
     import time
 
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from polars_nexpresso_spark.functions import similarity as S
 
     path = str(tmp_path / "emb.parquet")
 
     def write(n, seed):
-        vecs = np.random.default_rng(seed).normal(size=(n, 4)).astype(np.float32)
-        pq.write_table(
-            pa.table({
-                "vec_id": np.arange(n, dtype=np.int64),
-                "embedding": [list(map(float, v)) for v in vecs],
-            }),
-            path,
-        )
+        _write_vectors(path, np.random.default_rng(seed).normal(size=(n, 4)))
 
     def centroids():
         return S._kmeans_centroids(spark.read.parquet(path), "vec_id", "embedding", 3)
@@ -920,15 +929,151 @@ def test_kmeans_memo_retrains_on_overwritten_parquet(spark, tmp_path, monkeypatc
     assert fresh == S.kmeans_centroids_local(path, n_centroids=3)
 
 
-def test_training_memos_stay_bounded_under_concurrent_writers():
+def test_lsh_index_not_served_stale_after_in_place_overwrite(spark, tmp_path):
+    """LSH hyperplanes do not depend on the data, so the persisted index
+    plan of a parquet rewritten in place is identical to the old one and
+    Spark's cache manager would serve the old rows to it: the index store
+    must drop the old entry before building the new one. Probing every
+    bucket makes the search exhaustive, so the answer must be exact."""
+    import time
+
+    import numpy as np
+
+    from polars_nexpresso_spark.functions._caching import release_tracked_caches
+
+    path = str(tmp_path / "emb.parquet")
+
+    def search():
+        corpus = spark.read.parquet(path)
+        queries = corpus.filter(F.col("vec_id") < 4)
+        approx = lsh_ann_topk(
+            corpus, queries, k=3, num_planes=4, multiprobe=4, dim=8
+        )
+        return _top_pairs(approx), _top_pairs(cosine_topk(corpus, queries, k=3))
+
+    try:
+        _write_vectors(path, np.random.default_rng(1).uniform(-1, 1, (60, 8)))
+        old, old_exact = search()
+        assert old == old_exact
+        time.sleep(1.1)  # a coarse-grained filesystem clock must still move
+        _write_vectors(path, np.random.default_rng(2).uniform(-1, 1, (60, 8)))
+        new, new_exact = search()
+        assert new_exact != old_exact
+        assert new == new_exact
+    finally:
+        release_tracked_caches()
+
+
+def test_ivf_index_not_served_stale_when_centroids_survive_overwrite(
+    spark, tmp_path
+):
+    """Rewriting only vectors outside the k-means training sample keeps
+    the trained centroids, hence the IVF index plan, identical: the
+    search over the rewritten parquet must still read the new vectors
+    (every cell probed, so the answer must be exact). The rewritten rows
+    become near-copies of the query vectors, so only a search that reads
+    them finds them as the nearest neighbors."""
+    import time
+
+    import numpy as np
+
+    from polars_nexpresso_spark.functions import similarity as S
+    from polars_nexpresso_spark.functions._caching import release_tracked_caches
+
+    path = str(tmp_path / "emb.parquet")
+    n, sample_size = 1100, 1024
+    rng = np.random.default_rng(5)
+    vecs = rng.normal(size=(n, 4))
+    order = sorted(range(n), key=lambda i: (S._md5_sample_key(i), i))
+    probes, outside = order[:4], order[sample_size:]
+
+    def search():
+        corpus = spark.read.parquet(path)
+        queries = corpus.filter(F.col("vec_id").isin(probes))
+        approx = S.ivf_ann_topk(corpus, queries, k=3, n_centroids=4, n_probe=4)
+        cents = S._kmeans_centroids(corpus, "vec_id", "embedding", 4)
+        return _top_pairs(approx), _top_pairs(cosine_topk(corpus, queries, k=3)), cents
+
+    try:
+        _write_vectors(path, vecs)
+        old, old_exact, old_cents = search()
+        assert old == old_exact
+        time.sleep(1.1)
+        near = vecs[[probes[j % 4] for j in range(len(outside))]]
+        vecs[outside] = near + 1e-3 * rng.normal(size=near.shape)
+        _write_vectors(path, vecs)
+        new, new_exact, new_cents = search()
+        assert new_cents == old_cents
+        assert new_exact != old_exact
+        assert new == new_exact
+    finally:
+        release_tracked_caches()
+
+
+@pytest.mark.parametrize("kind", ["ivf", "lsh", "pq", "ivfpq"])
+def test_search_index_built_once_and_released(spark, monkeypatch, kind):
+    """Each search operator builds its persisted corpus index once per
+    corpus version: a repeat call gets the same frame back and plans its
+    corpus scan over the cache; release_tracked_caches() unpersists it,
+    and the next call builds a new one."""
+    import random
+
+    from pyspark import StorageLevel
+
+    from polars_nexpresso_spark.functions import similarity as S
+    from polars_nexpresso_spark.functions._caching import release_tracked_caches
+
+    rng = random.Random(7)
+    corpus = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    queries = corpus.filter(F.col("vec_id") < 3)
+    search = {
+        "ivf": lambda: S.ivf_ann_topk(corpus, queries, k=3, n_centroids=4),
+        "lsh": lambda: S.lsh_ann_topk(corpus, queries, k=3, dim=8),
+        "pq": lambda: S.pq_ann_topk(corpus, queries, k=3, m=2, n_codes=4),
+        "ivfpq": lambda: S.ivfpq_ann_topk(
+            corpus, queries, k=3, n_centroids=4, m=2, n_codes=4
+        ),
+    }[kind]
+    built = []
+    orig = S._search_index
+
+    def spy(*args):
+        built.append(orig(*args))
+        return built[-1]
+
+    monkeypatch.setattr(S, "_search_index", spy)
+    release_tracked_caches()
+    first = search().collect()
+    second = search()
+    assert built[1] is built[0]
+    assert "InMemoryRelation" in second._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(second.collect()) == sorted(first)
+    assert built[0].storageLevel == StorageLevel.MEMORY_AND_DISK
+    assert release_tracked_caches() >= 1
+    assert built[0].storageLevel == StorageLevel.NONE
+    assert sorted(search().collect()) == sorted(first)
+    assert built[2] is not built[0]
+    assert built[2].storageLevel == StorageLevel.MEMORY_AND_DISK
+    release_tracked_caches()
+
+
+def test_training_memos_stay_bounded_under_concurrent_writers(spark):
     """The bounded FIFO memos are shared by operators built on
     concurrent threads: many threads inserting at once (with a shortened
     switch interval) must neither raise from the evict-then-insert
-    sequence nor grow a memo past its bound."""
+    sequence nor grow a memo past its bound. In the search-index store
+    an evicted frame is unpersisted, and release_tracked_caches()
+    empties the store."""
     import sys
     import threading
 
+    from pyspark import StorageLevel
+
     from polars_nexpresso_spark.functions import similarity as S
+    from polars_nexpresso_spark.functions._caching import release_tracked_caches
 
     memo: dict = {}
     errors: list = []
@@ -942,10 +1087,23 @@ def test_training_memos_stay_bounded_under_concurrent_writers():
         except Exception as e:  # noqa: BLE001 — surfaced by the assert below
             errors.append(e)
 
+    release_tracked_caches()
+    frames = [spark.range(t + 1).persist() for t in range(16)]
+
+    def index_writer(t):
+        try:
+            S._memo_put(S._INDEX_MEMO, ("bound", t), frames[t])
+            assert len(S._INDEX_MEMO) <= 8
+        except Exception as e:  # noqa: BLE001 — surfaced by the assert below
+            errors.append(e)
+
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
         threads = [threading.Thread(target=writer, args=(t,)) for t in range(16)]
+        threads += [
+            threading.Thread(target=index_writer, args=(t,)) for t in range(16)
+        ]
         for th in threads:
             th.start()
         for th in threads:
@@ -955,6 +1113,14 @@ def test_training_memos_stay_bounded_under_concurrent_writers():
     assert not any(th.is_alive() for th in threads)
     assert not errors, errors[:3]
     assert len(memo) == 8
+    kept = list(S._INDEX_MEMO.values())
+    assert len(kept) == 8
+    for df in frames:  # evicted frames are unpersisted, kept ones not
+        held = any(df is k for k in kept)
+        assert (df.storageLevel != StorageLevel.NONE) == held
+    assert release_tracked_caches() >= 8
+    assert not S._INDEX_MEMO
+    assert all(df.storageLevel == StorageLevel.NONE for df in frames)
 
 
 def test_lsh_multiprobe_exhaustive_equals_exact(spark):
