@@ -26,7 +26,7 @@ reproduce signatures bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_nexpresso_spark.functions.text import (
@@ -37,7 +37,6 @@ from polars_nexpresso_spark.functions.text import (
     word_ngrams,
     word_ngrams_all,
 )
-from polars_nexpresso_spark.plans.stats import plan_size_bytes
 
 # Blocking tables persisted by the pair finders (minhash buckets, simhash
 # chunks, ngram shingles). Lifecycle notes and the shared registry live in
@@ -535,52 +534,49 @@ def embedding_cosine_pairs(
     )
 
 
-_EDGE_ROW_BYTES = 32  # two 64-bit ids + per-row overhead, deliberately generous
-# Edge-loop gate of _resolve_propagation: a corpus id projection of at least
-# this size (far above any local-bench input, far below any production
-# corpus), and an edge list of at most this fraction of it.
-_EDGE_LOOP_MIN_NODES_BYTES = 256 * 1024 * 1024
-_EDGE_LOOP_MAX_FRAC = 0.25
+# Safety net of dedup_clusters: large-star/small-star needs O(log n) rounds
+# (17 for a 10⁵-node path), so reaching this bound means a bug, never a
+# deep component.
+_MAX_ROUNDS = 64
 
 
-def _resolve_propagation(node_ids: DataFrame, edges: DataFrame):
-    """Pick :func:`dedup_clusters`'s iteration set; returns ``(mode,
-    edges)`` with ``edges`` checkpointed appropriately for the mode.
-
-    The edge-bounded loop fires only when BOTH driver-side stats agree it
-    pays (guide §2.1/§2.4 — shuffle corpus-sized frames as few times as
-    possible):
-
-    - the corpus id projection's Catalyst scan estimate is at least
-      ``_EDGE_LOOP_MIN_NODES_BYTES``, so the per-iteration corpus-sized
-      shuffles are worth two extra stitch joins; and
-    - the MATERIALIZED edge list is at most ``_EDGE_LOOP_MAX_FRAC`` of
-      it. Catalyst's static estimate for the derived pairs plan is
-      useless here (join selectivities multiply: measured 4.5e22 "bytes"
-      for a 594 KB corpus), so the ratio reads the real pinned row count
-      instead — free at this point, because the loop is about to
-      materialize ``edges`` anyway and counting pinned blocks launches no
-      recompute.
-
-    Unknown size (Spark Connect, stat-less leaves) keeps the classic full
-    loop — the probe failing must never make the plan worse.
-    """
-    nodes_bytes = plan_size_bytes(node_ids)
-    if nodes_bytes is None or nodes_bytes < _EDGE_LOOP_MIN_NODES_BYTES:
-        return "full", edges.localCheckpoint(eager=False)
-    edges = edges.localCheckpoint(eager=True)
-    if edges.count() * _EDGE_ROW_BYTES <= nodes_bytes * _EDGE_LOOP_MAX_FRAC:
-        return "edges", edges
-    return "full", edges
+def _ends(edges: DataFrame) -> DataFrame:
+    """Each ``(__hi, __lo)`` edge seen from both ends, as ``(__n, __o,
+    __up)`` rows; ``__up`` marks the row whose other end ``__o`` is larger."""
+    return edges.selectExpr("__lo AS __n", "__hi AS __o", "true AS __up").unionByName(
+        edges.selectExpr("__hi AS __n", "__lo AS __o", "false AS __up")
+    )
 
 
-def dedup_clusters(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    *,
-    max_iter: int = 25,
-) -> DataFrame:
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star then one small-star step (Kiveris et al., SoCC 2014)
+    over ``(__hi, __lo)`` edges with ``__lo < __hi``; the result never has
+    more edges than the input: two window exchanges and one distinct."""
+    # Large-star: edge (h, l) becomes (h, m), m = the least of l and its
+    # neighbors.
+    m = F.least("__n", F.min("__o").over(Window.partitionBy("__n")))
+    large = _ends(edges).select("__o", "__up", m.alias("__m")).filter("__up")
+    # Small-star: h and all its lower neighbors attach to the least of them.
+    m = F.min("__m").over(Window.partitionBy("__o"))
+    return (
+        large.select(F.array("__o", "__m").alias("__ends"), m.alias("__m"))
+        .select(F.explode("__ends").alias("__hi"), F.col("__m").alias("__lo"))
+        .filter(F.col("__hi") != F.col("__lo"))
+        .distinct()
+    )
+
+
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True once every component is a star centred on its least node:
+    every node is either only ever the smaller end (a centre) or the
+    larger end of exactly one edge (a leaf)."""
+    per_node = _ends(edges).groupBy("__n").agg(
+        F.bool_and("__up").alias("__centre"), F.count("*").alias("__deg")
+    )
+    return per_node.filter(~F.col("__centre") & (F.col("__deg") > 1)).isEmpty()
+
+
+def dedup_clusters(nodes: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     """Canonicalize near-duplicate PAIRS into connected-component clusters.
 
     The missing step between a pair finder (``ngram_jaccard_pairs``,
@@ -589,93 +585,47 @@ def dedup_clusters(
     duplicates are transitive (A≈B, B≈C ⇒ keep one of {A,B,C}), so the keep
     set is one representative per connected component of the pair graph.
 
-    Returns ``(id, cluster_id)`` for EVERY row of ``nodes`` where
-    ``cluster_id`` is the smallest id in the component (singletons map to
-    themselves) — filter ``id == cluster_id`` for the keep set.
+    Returns one ``(id, cluster_id)`` row per DISTINCT id of ``nodes``;
+    ``cluster_id`` is the smallest id reachable through the pairs
+    (singletons map to themselves) — filter ``id == cluster_id`` for the
+    keep set. Pair ends missing from ``nodes`` carry connectivity but get
+    no row; self-pairs and pairs with a NULL end are ignored.
 
-    Scale design: iterative min-label propagation (the standard
-    two-relation connected-components loop). Each round is one equi-join of
-    the edge list against the current labels plus a min-aggregation —
-    both shuffles are on ids, and the edge list is near-dup pairs, which is
-    tiny relative to the corpus. Rounds needed = component diameter (near-
-    dup clusters are shallow; ``max_iter`` is a safety bound, convergence
-    is detected exactly). Lineage is truncated per round with
-    ``localCheckpoint`` so the plan does not grow with iterations — the
-    driver loop only orchestrates; all data work is distributed. NOTE:
-    those per-round eager checkpoints mean merely CONSTRUCTING the result
-    runs Spark jobs (the loop executes during the call, the returned frame
-    is a cheap read of the last pinned round).
-
-    r14 convergence read (guide §2.4): each round's self rows carry the
-    previous label into the min-aggregation as ``__old`` (``min`` ignores
-    the NULLs on neighbor rows), so "did anything change" is one
-    ``isEmpty`` job over the round's OWN checkpointed blocks instead of the
-    old corpus-wide ``combined ⋈ labels`` re-join — one join and one
-    corpus-sized shuffle fewer per iteration, identical decision (an id
-    first reached this round has no self row → NULL ``__old`` → excluded,
-    exactly like the old inner join).
-
-    Iteration set, picked per input by :func:`_resolve_propagation`: the
-    classic loop runs over every node; the edge loop runs only over nodes
-    incident to at least one pair — bounded by 2·|pairs| rows; untouched
-    nodes can never change label, so they are stitched back as self-label
-    singletons at the end and the results are identical. The edge loop
-    fires when the corpus is large and the edge list is relatively small
-    (per-iteration exchanges become pair-bounded — the 100 TB shape), the
-    classic loop otherwise (locally the two extra stitch joins cost more
-    than the tiny iterations save — measured 1.10× at sf0.1, r13).
+    Scale design: alternating large-star/small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014) over the
+    edge list alone, as ``(greatest, least)`` pairs. It needs O(log n)
+    rounds, not one per hop of component diameter (17 for a 10⁵-node
+    path), and no round emits more edges than it reads, so every exchange
+    is bounded by 2·|pairs| at any corpus size. Each round is pinned by one
+    eager ``localCheckpoint`` (flat lineage) and followed by one
+    ``isEmpty``; the loop stops once the edges form stars centred on each
+    component's least id, and raises ``RuntimeError`` past ``_MAX_ROUNDS``
+    rather than return unconverged labels. The labels then attach to the
+    distinct node ids by one left join, pinned as well, so the returned
+    frame is a read of pinned blocks. NOTE: the eager pins mean merely
+    CONSTRUCTING the result runs Spark jobs.
     """
-    # Undirected edge list, both directions.
-    ab = pairs.select(F.col("id_a").alias("__src"), F.col("id_b").alias("__dst"))
-    edges = ab.unionByName(
-        ab.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
-    ).distinct()
-
-    node_ids = nodes.select(F.col(id_col).alias("__id"))
-    mode, edges = _resolve_propagation(node_ids, edges)
-    rest = None
-    if mode == "edges":
-        touched = (
-            edges.select(F.col("__src").alias("__id"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        rest = node_ids.join(touched, on="__id", how="left_anti")
-        seeds = node_ids.join(touched, on="__id", how="left_semi")
-    else:
-        seeds = node_ids
-    labels = seeds.select("__id", F.col("__id").alias("__label"))
-    label_type = labels.schema["__label"].dataType
-
-    for _ in range(max_iter):
-        neighbor_min = edges.join(
-            labels.withColumnRenamed("__id", "__src"), on="__src"
-        ).select(
-            F.col("__dst").alias("__id"),
-            "__label",
-            F.lit(None).cast(label_type).alias("__old"),
-        )
-        combined = (
-            labels.withColumn("__old", F.col("__label"))
-            .unionByName(neighbor_min)
-            .groupBy("__id")
-            .agg(
-                F.min("__label").alias("__label"),
-                F.min("__old").alias("__old"),
-            )
-        )
-        combined = combined.localCheckpoint(eager=True)
-        converged = combined.filter(F.col("__label") < F.col("__old")).isEmpty()
-        labels = combined.drop("__old")
-        if converged:
+    a, b = F.col("id_a"), F.col("id_b")
+    # a != b is NULL for a NULL end, so this drops those and self-pairs.
+    # The pin keeps round one from running the pair finder's plan twice.
+    edges = pairs.filter(a != b).select(
+        F.greatest(a, b).alias("__hi"), F.least(a, b).alias("__lo")
+    ).localCheckpoint(eager=False)
+    for _ in range(_MAX_ROUNDS):
+        edges = _star_round(edges).localCheckpoint(eager=True)
+        if _is_star_forest(edges):
             break
-    out = labels
-    if rest is not None:
-        out = out.unionByName(
-            rest.select("__id", F.col("__id").alias("__label"))
+    else:
+        raise RuntimeError(
+            f"dedup_clusters: no convergence within _MAX_ROUNDS={_MAX_ROUNDS} rounds"
         )
-    return out.select(
-        F.col("__id").alias(id_col), F.col("__label").alias("cluster_id")
+    ids = nodes.select(F.col(id_col).alias("__id")).distinct()
+    # cluster_id keeps the id column's type even when the pair ids are wider.
+    label = F.coalesce("__lo", "__id").cast(ids.schema["__id"].dataType)
+    return (
+        ids.join(edges.withColumnRenamed("__hi", "__id"), "__id", "left")
+        .select(F.col("__id").alias(id_col), label.alias("cluster_id"))
+        .localCheckpoint(eager=True)
     )
 
 

@@ -447,8 +447,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs → dedup decisions: connected components over the MinHash+LSH
     near-dup pairs (== brute-force Jaccard pairs on this data, see
     ``minhash_lsh``), every document labeled with the min id of its
-    component. Iterative min-label propagation; DuckDB oracle is a
-    recursive CTE over the same pair set."""
+    component. Large-star/small-star connected components; DuckDB oracle
+    is a recursive CTE over the same pair set."""
     docs = spread(read_table(spark, sf_dir, "documents"))
     pairs = minhash_lsh_pairs(
         docs, "text", "doc_id", n=3, num_hashes=32, bands=8, threshold=0.8
@@ -899,8 +899,8 @@ def q_ref_distill(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-eligible by construction and broadcasts INTO the
     corpus-sized cluster/split table — the corpus never shuffles for
     the final join. Cluster discovery itself is the banded-LSH +
-    iterative min-label machinery shared with ``dedup_clusters``
-    (near-dup pairs, never all-pairs)."""
+    connected-components machinery of ``dedup_clusters`` (near-dup
+    pairs, never all-pairs)."""
     from polars_nexpresso_spark.functions.retrieval import (
         cross_encoder_rerank,
         distillation_pairs,
@@ -914,9 +914,9 @@ def q_ref_distill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r14 (guide §2.6 — overlap independent jobs): the triplet branch
     # (IVF shortlist → CE rerank → distillation pins) and the cluster
-    # branch (MinHash pairs → label propagation) are independent until
+    # branch (MinHash pairs → connected components) are independent until
     # the final join, yet both run EAGER jobs during construction (the
-    # pins and the propagation loop). Building them from two driver
+    # pins and the star rounds). Building them from two driver
     # threads overlaps those job chains — each branch's internals and
     # results are exactly as before; failures propagate via result().
     def _build_triplets() -> DataFrame:
@@ -1941,8 +1941,8 @@ PIPELINE_ORACLE_SQL: dict[str, str] = {
         WHERE doc_id >= 25 AND doc_id NOT IN (SELECT doc_id FROM bad)
     """,
     # Connected components over the same pair set: recursive CTE computes
-    # each node's min reachable id — exactly the min-label fixpoint the
-    # Spark loop converges to.
+    # each node's min reachable id — its star's centre (or the node itself)
+    # once the Spark large-star/small-star loop converges.
     "dedup_clusters": f"""
         WITH RECURSIVE shingled AS (
           SELECT doc_id, {_SHINGLES} AS sh

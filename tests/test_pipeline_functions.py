@@ -3,7 +3,11 @@ similarity, multimodal plumbing."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -302,25 +306,64 @@ def test_stratified_sample_join_path_matches_expr_path(spark):
     assert expr_ids == join_ids
 
 
-def test_dedup_clusters_connected_components(spark):
-    """Transitive closure over pairs: chain {1-2, 2-3} is one cluster, {5-6}
-    another, 4 and 7 are singletons; cluster_id is the min id reachable."""
+def _min_reachable(nodes, pairs):
+    """Reference labels: union-find over the pairs (NULL ends and
+    self-pairs ignored), then each distinct node's least reachable id."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
+
+
+def _clusters(spark, nodes, pairs):
     from polars_nexpresso_spark.functions.dedup import dedup_clusters
 
-    nodes = spark.createDataFrame([(i,) for i in range(1, 8)], ["doc_id"])
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6)], ["id_a", "id_b"]
-    )
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup_clusters(nodes, pairs, "doc_id").collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7}
+    rows = dedup_clusters(
+        spark.createDataFrame([(n,) for n in nodes], "doc_id long"),
+        spark.createDataFrame(pairs, "id_a long, id_b long"),
+        "doc_id",
+    ).collect()
+    got = {r["doc_id"]: r["cluster_id"] for r in rows}
+    assert len(got) == len(rows), "one row per distinct node id"
+    return got
+
+
+def test_dedup_clusters_connected_components(spark):
+    """Transitive closure over pairs: cluster_id is the min id reachable.
+    Inputs: a small forest, a 40-node path (beyond the old 25-round cap), an id-permuted 1,000-node
+    path, and a star of chains whose centre has the largest id."""
+    ids = list(range(1000))
+    random.Random(7).shuffle(ids)
+    arms = [[100 * a + i for i in range(8)] for a in range(5)]
+    cases = [
+        (range(1, 8), [(1, 2), (2, 3), (5, 6)],
+         {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7}),
+        (range(40), [(i, i + 1) for i in range(39)], None),
+        (range(1000), [(ids[i], ids[i + 1]) for i in range(999)], None),
+        ([n for arm in arms for n in arm] + [10_000],
+         [(arm[i], arm[i + 1]) for arm in arms for i in range(7)]
+         + [(arm[-1], 10_000) for arm in arms], None),
+    ]
+    for nodes, pairs, expected in cases:
+        nodes = list(nodes)
+        if expected is None:
+            expected = _min_reachable(nodes, pairs)
+            assert set(expected.values()) == {min(nodes)}
+        assert _clusters(spark, nodes, pairs) == expected
 
 
 def test_dedup_clusters_long_chain_converges(spark):
-    """A 12-node path graph needs multiple propagation rounds — exercises
-    the convergence loop and localCheckpoint lineage truncation."""
+    """A 12-node path graph needs multiple rounds — exercises the
+    convergence loop and localCheckpoint lineage truncation."""
     from polars_nexpresso_spark.functions.dedup import dedup_clusters
 
     n = 12
@@ -335,64 +378,77 @@ def test_dedup_clusters_long_chain_converges(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_dedup_clusters_pair_ends_outside_nodes(spark):
+    """Pair endpoints missing from ``nodes`` carry connectivity but get no
+    row: 4 reaches 2 through 3, and exactly one row comes back per
+    distinct node id (duplicates collapse). Self-pairs and NULL ends are
+    ignored."""
+    pairs = [(2, 3), (3, 4), (1, 1), (None, 1), (4, None)]
+    assert _clusters(spark, [1, 2, 4, 2], pairs) == {1: 1, 2: 2, 4: 2}
+
+
+def test_dedup_clusters_round_bound_raises(spark, monkeypatch):
+    """The round bound is a safety net that raises: it never returns
+    unconverged labels."""
+    from polars_nexpresso_spark.functions import dedup
+
+    monkeypatch.setattr(dedup, "_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="_MAX_ROUNDS=1"):
+        _clusters(spark, range(40), [(i, i + 1) for i in range(39)])
+
+
+@given(
+    nodes=st.lists(st.integers(0, 24), min_size=20, max_size=40),
+    pairs=st.lists(
+        st.tuples(st.integers(0, 30), st.integers(0, 30)), min_size=10, max_size=40
+    ),
+    perm=st.permutations(range(31)),
+)
+@settings(max_examples=8, deadline=None)
+def test_dedup_clusters_matches_union_find(spark, nodes, pairs, perm):
+    """Random edge sets under a random id permutation, with duplicate node
+    ids and pair ends outside ``nodes`` (drawn ids 25-30 are never nodes)."""
+    nodes = [perm[n] for n in nodes]
+    pairs = [(perm[a], perm[b]) for a, b in pairs]
+    assert _clusters(spark, nodes, pairs) == _min_reachable(nodes, pairs)
+
+
 def _parquet_nodes(spark, tmp_path, n):
-    """A parquet-backed nodes frame: its scan has Catalyst size stats."""
+    """A parquet-backed nodes frame: any corpus read shows in a plan."""
     path = str(tmp_path / "nodes.parquet")
     spark.range(n).selectExpr("id AS doc_id").write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
 
-def _force_edge_loop(monkeypatch):
-    from polars_nexpresso_spark.functions import dedup
-
-    monkeypatch.setattr(dedup, "_EDGE_LOOP_MIN_NODES_BYTES", 0)
-    monkeypatch.setattr(dedup, "_EDGE_LOOP_MAX_FRAC", 1e18)
-
-
-def test_dedup_clusters_edge_loop_matches_full(spark, tmp_path, monkeypatch):
-    """The edge-bounded propagation (r14, the 100 TB shape) is result-
-    identical to the classic full loop: singletons, a pair, and a
-    multi-round chain all land on the same (id, cluster_id) rows."""
-    from polars_nexpresso_spark.functions import dedup
+def test_dedup_clusters_edge_loop_matches_full(spark, tmp_path):
+    """The edge-bounded propagation lands on the same (id, cluster_id)
+    rows as a full-graph reference (union-find over every node):
+    singletons, a pair, and a multi-round chain over a parquet-backed
+    corpus."""
+    from polars_nexpresso_spark.functions.dedup import dedup_clusters
 
     nodes = _parquet_nodes(spark, tmp_path, 12)
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (5, 6), (7, 8), (8, 9), (9, 10), (10, 11)],
-        ["id_a", "id_b"],
-    )
-    expected = {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 5, 6: 5,
-                7: 7, 8: 7, 9: 7, 10: 7, 11: 7}
-    modes: list[str] = []
-    resolve = dedup._resolve_propagation
-
-    def recording(node_ids, edges):
-        mode, edges = resolve(node_ids, edges)
-        modes.append(mode)
-        return mode, edges
-
-    monkeypatch.setattr(dedup, "_resolve_propagation", recording)
-    for force_edges in (False, True):
-        if force_edges:
-            _force_edge_loop(monkeypatch)
-        got = {
-            r["doc_id"]: r["cluster_id"]
-            for r in dedup.dedup_clusters(nodes, pairs, "doc_id").collect()
-        }
-        assert got == expected, modes
-    assert modes == ["full", "edges"]
+    edges = [(0, 1), (1, 2), (2, 3), (5, 6), (7, 8), (8, 9), (9, 10), (10, 11)]
+    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup_clusters(nodes, pairs, "doc_id").collect()
+    }
+    assert got == _min_reachable(range(12), edges)
+    assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 5, 6: 5,
+                   7: 7, 8: 7, 9: 7, 10: 7, 11: 7}
 
 
 def test_dedup_clusters_edge_loop_iterations_are_pair_bounded(
     spark, tmp_path, monkeypatch
 ):
-    """Plan pin for the edge mode: from the second round on, every
-    checkpointed iteration frame derives ONLY from pinned (bounded)
-    blocks — the corpus never re-enters the loop, so per-iteration
-    exchanges carry ≤ 2·|pairs| rows at any scale."""
+    """Plan pin: every round's checkpointed frame derives ONLY from
+    pinned (bounded) edge blocks — neither the corpus nor the raw pair
+    input re-enters the loop, so per-round exchanges carry ≤ 2·|pairs|
+    rows at any scale."""
     from polars_nexpresso_spark.functions.dedup import dedup_clusters
 
     nodes = _parquet_nodes(spark, tmp_path, 10)
-    _force_edge_loop(monkeypatch)
     cls = type(nodes)  # the concrete (classic) DataFrame class
     plans: list[str] = []
     orig = cls.localCheckpoint
@@ -405,42 +461,18 @@ def test_dedup_clusters_edge_loop_iterations_are_pair_bounded(
     pairs = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (3, 4)], ["id_a", "id_b"]
     )
-    dedup_clusters(nodes, pairs, "doc_id").collect()
-    # edges pin + touched pin + one pin per iteration (chain of 5 nodes
-    # needs several rounds); the first iteration seeds from the corpus,
-    # later ones must read only LogicalRDD (checkpointed) leaves.
-    iteration_plans = [p for p in plans if "min(" in p]
-    assert len(iteration_plans) >= 2
-    assert "parquet" in iteration_plans[0]
-    for p in iteration_plans[1:]:
+    got = dedup_clusters(nodes, pairs, "doc_id").collect()
+    assert {r["doc_id"]: r["cluster_id"] for r in got} == {
+        i: 0 if i <= 4 else i for i in range(10)
+    }
+    # edges pin + one pin per round (a 5-node path needs several) + the
+    # labelled output; only the rounds aggregate (window min).
+    round_plans = [p for p in plans if "min(" in p]
+    assert len(round_plans) >= 2
+    for p in round_plans:
+        assert "LogicalRDD" in p, p
         for marker in ("LocalRelation", "Scan", "parquet"):
             assert marker not in p, p
-
-
-def test_dedup_clusters_adaptive_gate_reads_plan_stats(
-    spark, tmp_path, monkeypatch
-):
-    """The adaptive gate (r14): a KB-scale corpus keeps the classic
-    loop; with a zero size floor the edge loop fires on the
-    pairs-vs-corpus size ratio; stat-less inputs (LogicalRDD reports
-    defaultSizeInBytes) never fire."""
-    from polars_nexpresso_spark.functions import dedup
-
-    ids = _parquet_nodes(spark, tmp_path, 200).selectExpr("doc_id AS __id")
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2)], ["id_a", "id_b"]
-    ).selectExpr("id_a AS __src", "id_b AS __dst")
-
-    assert dedup._resolve_propagation(ids, edges)[0] == "full"
-    _force_edge_loop(monkeypatch)
-    assert dedup._resolve_propagation(ids, edges)[0] == "edges"
-    monkeypatch.setattr(dedup, "_EDGE_LOOP_MAX_FRAC", 0)
-    assert dedup._resolve_propagation(ids, edges)[0] == "full"
-    monkeypatch.setattr(dedup, "_EDGE_LOOP_MAX_FRAC", 1e18)
-    local_ids = spark.createDataFrame(
-        [(i,) for i in range(5)], ["doc_id"]
-    ).selectExpr("doc_id AS __id")
-    assert dedup._resolve_propagation(local_ids, edges)[0] == "full"
 
 
 def test_dedup_clusters_end_to_end_with_jaccard(docs):
