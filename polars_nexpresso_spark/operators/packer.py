@@ -23,7 +23,10 @@ API. Design notes for scale (SURVEY §4):
   (+ optional parquet checkpoint for the disk-to-disk mode). ``bounded=True``
   keeps the reference's K sequential bucket jobs, each re-reading a
   reproducible source through a root-key hash filter; only a source that
-  must be evaluated once is staged to parquet first.
+  must be evaluated once is staged to parquet first. Between buckets it
+  runs a full GC when, and only when, the driver heap can shrink: G1
+  uncommits heap on a full collection but never below ``MinHeapSize``
+  (``-Xms``), so under a pinned heap the GC could return nothing.
 - ``parent_strategy="split_join"`` (reference ``:1033-1072``) factors heavy
   root attributes into a per-root-key dim table before the aggregation and
   joins them back after — a shuffle-volume optimization Catalyst cannot infer
@@ -35,7 +38,6 @@ API. Design notes for scale (SURVEY §4):
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 import tempfile
@@ -159,6 +161,42 @@ def sort_by_keys(wrappers: Column, n_keys: int, is_orderable: bool) -> Column:
     return F.transform(
         F.array_sort(wrappers, _struct_key_comparator(keys)), lambda x: x["__v"]
     )
+
+
+def _min_heap_bytes(session: SparkSession) -> int | None:
+    """The driver JVM's ``MinHeapSize`` (``-Xms``), read from HotSpot's
+    diagnostic bean; None when it cannot be read (Spark Connect, a
+    non-HotSpot JVM)."""
+    try:
+        jvm = session.sparkContext._jvm
+        bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+            jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+        )
+        return int(bean.getVMOption("MinHeapSize").getValue())
+    except Exception:  # noqa: BLE001 — Connect / non-HotSpot
+        return None
+
+
+def _heap_can_shrink(session: SparkSession, min_heap: int | None) -> bool:
+    """Whether a full GC could return driver heap to the OS: G1 uncommits
+    only down to ``MinHeapSize``, so the committed heap must be above it.
+    Committed heap is read on every call (a ``-Xms`` < ``-Xmx`` heap grows
+    mid-run); True when the minimum is unknown."""
+    if min_heap is None:
+        return True
+    runtime = session.sparkContext._jvm.java.lang.Runtime.getRuntime()
+    return runtime.totalMemory() > min_heap
+
+
+def _delete_path(session: SparkSession, path: str) -> None:
+    """Recursively delete ``path`` through the Hadoop ``FileSystem``, so any
+    scheme (``file://``, ``hdfs://``, ``s3a://``) works; a local path is
+    removed directly when there is no JVM handle (Spark Connect)."""
+    try:
+        p = session._jvm.org.apache.hadoop.fs.Path(path)
+        p.getFileSystem(session._jsc.hadoopConfiguration()).delete(p, True)
+    except Exception:  # noqa: BLE001 — Connect: no JVM handle
+        shutil.rmtree(path, ignore_errors=True)
 
 
 class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
@@ -807,7 +845,16 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
         source — a nondeterministic expression, or a limit/offset whose rows
         depend on arrival order — is evaluated once into a hash-partitioned
         staging copy that each bucket reads back, and the copy is deleted
-        once the loop ends."""
+        once the loop ends.
+
+        After each bucket a full GC returns the freed heap to the OS, so
+        the RSS watermark follows one bucket's working set: in fresh
+        processes (sf0.1 ``bench.py --rss-probe``) this loop peaked at
+        886-942 MB with the GC, 1,160-1,368 MB without it, and the one-shot
+        ``pack`` at 1,344-1,571 MB. G1 never uncommits below
+        ``MinHeapSize``, so the GC runs only while the committed heap is
+        above it (always, when ``MinHeapSize`` cannot be read); under a
+        pinned heap (``-Xms`` == ``-Xmx``) it is skipped."""
         if partitions < 1:
             raise ValueError("partitions must be >= 1")
         df = self._resolve_source(source, spark)
@@ -839,7 +886,7 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
             # Pin the best-effort row id before the staging write (same
             # nondeterministic-fetch-order hazard as the default mode); it
             # persists through the stage parquet and pack() reuses it.
-            df = self._with_row_id(df)
+            staged = self._with_row_id(df).withColumn("__bucket", bucket)
             stage = os.path.join(base, "stage")
             # Hive-partition by bucket so each per-bucket job reads ONLY its
             # directory. Repartition ON the bucket first so every task
@@ -848,45 +895,41 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
             # whose row-group buffers defeat the memory bounding this mode
             # exists for.
             (
-                df.withColumn("__bucket", bucket)
-                .repartition(partitions, F.col("__bucket"))
+                staged.repartition(partitions, F.col("__bucket"))
                 .write.mode("overwrite")
                 .partitionBy("__bucket")
                 .parquet(stage)
             )
-            bucket_dirs = [
-                os.path.join(stage, f"__bucket={i}") for i in range(partitions)
-            ]
-            # An empty bucket (hash imbalance at tiny scale) has no files.
+            # One read of the stage, through the Hadoop FileSystem (any
+            # scheme); the partition filter prunes each bucket's job to its
+            # own directory. The known schema lets an all-empty stage (no
+            # bucket directories) read as empty instead of failing schema
+            # inference.
+            staged = session.read.schema(staged.schema).parquet(stage)
             buckets = [
-                session.read.parquet(d)
-                for d in bucket_dirs
-                if glob.glob(os.path.join(d, "*.parquet"))
+                staged.filter(F.col("__bucket") == i).drop("__bucket")
+                for i in range(partitions)
             ]
 
+        min_heap = _min_heap_bytes(session)
         try:
             for i, part in enumerate(buckets):
                 packed = self.pack(part, to_level, extra_columns=extra_columns)
                 packed.write.mode("append" if i else "overwrite").parquet(target)
-                # Full GC between buckets: G1 (the JDK 17 default) uncommits
-                # heap back to the OS on full collections, so the process
-                # RSS watermark tracks ONE bucket's working set instead of
-                # the accumulated allocation churn of all K jobs — the
-                # measured bound this mode exists to provide. Cost: one GC
-                # per bucket, noise next to the per-bucket job launch.
-                try:
-                    session.sparkContext._jvm.System.gc()
-                except Exception:  # noqa: BLE001 — Connect: no JVM handle
-                    pass
+                # Full GC between buckets, only when it can return heap to
+                # the OS: G1 (the JDK 17 default) uncommits on full
+                # collections, but never below MinHeapSize. Under an
+                # unpinned heap this keeps the RSS watermark near ONE
+                # bucket's working set (numbers in the docstring); under a
+                # pinned heap it would return nothing for a 70-108 ms pause.
+                if _heap_can_shrink(session, min_heap):
+                    try:
+                        session.sparkContext._jvm.System.gc()
+                    except Exception:  # noqa: BLE001 — Connect: no JVM handle
+                        pass
         finally:
             if stage is not None:
-                shutil.rmtree(stage, ignore_errors=True)
-        if not buckets:
-            # Every staged bucket was empty: write the empty pack so the
-            # result still carries the pack's schema.
-            self.pack(df.limit(0), to_level, extra_columns=extra_columns).write.mode(
-                "overwrite"
-            ).parquet(target)
+                _delete_path(session, stage)
         return session.read.parquet(target)
 
     @staticmethod

@@ -700,6 +700,61 @@ def test_bounded_pack_of_nondeterministic_source_stages(spark, tmp_path, parquet
     }
 
 
+def test_bounded_pack_stages_under_a_uri_tmp_dir(spark, tmp_path, parquet_writes):
+    """A ``file://`` tmp_dir: the staged buckets are found and the stage is
+    deleted through Spark and Hadoop paths (not local globbing), so every
+    root comes back with all of its children."""
+    df = _sort_edge_frame(spark).withColumn("g.item.noise", F.rand())
+    packer = HierarchicalPacker(_SORT_SPEC)
+    uri = tmp_path.as_uri()
+    got = packer.pack_streaming(
+        df, "item", partitions=3, bounded=True, tmp_dir=uri
+    ).collect()
+    assert {r["g.gid"]: sorted(c["iid"] for c in r["g.item"]) for r in got} == {
+        g: [g * 100 + i for i in range(12)] for g in range(3)
+    }
+    assert f"{uri}/stage" in parquet_writes
+    assert not (tmp_path / "stage").exists()
+
+
+def _full_gc_count(spark) -> int:
+    management = spark.sparkContext._jvm.java.lang.management
+    beans = management.ManagementFactory.getGarbageCollectorMXBeans()
+    return {b.getName(): b.getCollectionCount() for b in beans}["G1 Old Generation"]
+
+
+@pytest.mark.parametrize(
+    "gate", [False, True, None], ids=["forced_false", "forced_true", "unforced"]
+)
+def test_bounded_pack_full_gc_follows_heap_gate(spark, tmp_path, monkeypatch, gate):
+    """One full GC per bucket exactly when the heap can shrink. The test
+    session starts without -Xms, so the unforced gate reads MinHeapSize
+    and the committed heap and finds the heap shrinkable. A minimum at the
+    max heap (a pinned heap) reads not shrinkable; an unreadable one reads
+    shrinkable, so the GC runs."""
+    from polars_nexpresso_spark.operators import packer as packer_mod
+
+    if gate is None:
+        min_heap = packer_mod._min_heap_bytes(spark)
+        assert min_heap is not None
+        assert packer_mod._heap_can_shrink(spark, min_heap)
+        runtime = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
+        assert not packer_mod._heap_can_shrink(spark, runtime.maxMemory())
+        assert packer_mod._heap_can_shrink(spark, None)
+    else:
+        monkeypatch.setattr(packer_mod, "_heap_can_shrink", lambda session, min_heap: gate)
+    df = _sort_edge_frame(spark).cache()
+    packer = HierarchicalPacker(_SORT_SPEC)
+    want = packer.pack(df, "item")
+    before = _full_gc_count(spark)
+    got = packer.pack_streaming(
+        df, "item", partitions=3, bounded=True, tmp_dir=str(tmp_path)
+    )
+    assert _full_gc_count(spark) - before == (0 if gate is False else 3)
+    assert_same_rows(got, want)
+    df.unpersist()
+
+
 def test_split_join_rereads_overwritten_input(spark, tmp_path):
     """A packer reused across an in-place overwrite of its parquet input
     attaches every new root's attributes: the rep gate runs on each call,
