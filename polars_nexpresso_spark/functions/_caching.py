@@ -17,12 +17,16 @@ public alias.
 It also holds the bounded memos the similarity operators keep per
 corpus version (trained quantizers, training samples, persisted search
 indexes): one lock and one FIFO bound for all of them, since operators
-built on concurrent driver threads reach them at once.
+built on concurrent driver threads reach them at once — and
+:func:`overlap`, the one way the package runs independent builders on
+concurrent driver threads.
 """
 
 from __future__ import annotations
 
 import threading
+import uuid
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame
 
@@ -100,3 +104,43 @@ def release_tracked_caches() -> int:
     for df in released:
         _unpersist(df)
     return len(released)
+
+
+def overlap(session, *builders):
+    """Call the zero-argument ``builders`` on concurrent driver threads and
+    return their results in order — independent eager job chains overlap
+    instead of paying each job tail in turn.
+
+    Each branch inherits the caller's job group, description, pool and
+    tags, so the caller's ``cancelJobGroup`` reaches every job, and tags
+    its jobs with one tag per call. On the first failure the jobs still
+    running under that tag are cancelled (again while the other branches
+    wind down, in case one submits another job), and the first error is
+    raised. Without a SparkContext (Spark Connect) the branches run
+    untagged and a failure waits for the others to finish.
+    """
+    from pyspark import inheritable_thread_target
+
+    sc = getattr(session, "sparkContext", None)  # None under Spark Connect
+    tag = f"pns-overlap-{uuid.uuid4().hex}"
+
+    def tagged(build):
+        def run():
+            if sc is not None:
+                sc.addJobTag(tag)
+            return build()
+
+        # Wrapped on the caller's thread: the wrapper copies the caller's
+        # local properties when it is made, one copy per branch.
+        return inheritable_thread_target(session)(run)
+
+    with ThreadPoolExecutor(max_workers=max(len(builders), 1)) as pool:
+        futures = [pool.submit(tagged(b)) for b in builders]
+        done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+        errors = [f.exception() for f in done if f.exception() is not None]
+        while errors and pending and sc is not None:
+            sc.cancelJobsWithTag(tag)
+            _, pending = wait(pending, timeout=0.2)
+        if errors:
+            raise errors[0]
+    return [f.result() for f in futures]

@@ -41,9 +41,10 @@ from polars_nexpresso_spark.functions.text import (
 # Blocking tables persisted by the pair finders (minhash buckets, simhash
 # chunks, ngram shingles). Lifecycle notes and the shared registry live in
 # functions/_caching.py (shared with text.oov_rate — text can't import
-# dedup without a cycle); these names stay as the public surface.
+# dedup without a cycle); release_blocking_caches stays the public name.
 from polars_nexpresso_spark.functions._caching import (  # noqa: E402
-    persist_tracked as _persist_blocking,
+    overlap,
+    persist_tracked,
     release_tracked_caches as release_blocking_caches,
 )
 
@@ -114,7 +115,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_df: int | None = None,
-    persist_shingles: bool = False,
 ) -> DataFrame:
     """All document pairs with word-``n``-gram Jaccard ≥ ``threshold``.
 
@@ -127,13 +127,13 @@ def ngram_jaccard_pairs(
     internally consistent rather than a silent underestimate.
 
     The exploded shingle set feeds three consumers (per-doc sizes and both
-    join sides), each needing a different shuffle, so the scan + explode
-    (+ df-cap anti-join) subtree evaluates up to three times.
-    ``persist_shingles=True`` caches it (``MEMORY_AND_DISK``, spills) —
-    worth it when the corpus scan is expensive or the df-cap is on; the
-    cache is the tokenized corpus, so budget executor storage for roughly
-    input size. The cache is retained until released — in a long-lived
-    session over many corpora call :func:`release_blocking_caches`.
+    join sides), each needing a different shuffle, so uncached the scan +
+    explode (+ df-cap anti-join) subtree would evaluate three times; it
+    is cached (``MEMORY_AND_DISK``, spills — measured 1.72 s vs 2.11 s
+    cold-cache at sf0.1). The cache is the tokenized corpus, so budget
+    executor storage for roughly input size. It is retained until
+    released — in a long-lived session over many corpora call
+    :func:`release_blocking_caches`.
 
     Returns ``(id_a, id_b, jaccard)`` with ``id_a < id_b``.
     """
@@ -154,8 +154,7 @@ def ngram_jaccard_pairs(
         )
         exploded = exploded.join(hot, on="__shingle", how="left_anti")
 
-    if persist_shingles:
-        exploded = _persist_blocking(exploded)
+    exploded = persist_tracked(exploded)
 
     # Sizes AFTER the df-cap filter: numerator (shared counts) and
     # denominator (per-doc sizes) must agree on the same shingle universe.
@@ -285,7 +284,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.8,
-    persist_buckets: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding, verified with exact Jaccard.
 
@@ -294,14 +292,14 @@ def minhash_lsh_pairs(
     1-(1-j^r)^bands), then candidates are verified with exact shingle
     Jaccard so every emitted pair truly satisfies ``jaccard ≥ threshold``.
 
-    ``persist_buckets`` (default on) caches the banded bucket table before
-    the candidate self-join: both join sides read it, Catalyst's exchange
-    reuse does NOT unify them (the per-side aliases break canonicalized
-    matching), so without the cache the whole shingle+signature pipeline —
-    the expensive half of this operator — evaluates twice. The cached table
-    is O(docs × bands) longs (``MEMORY_AND_DISK``, spills): ≪ corpus text,
-    and strictly cheaper than recomputing signatures at any scale. Measured
-    cold-cache at sf0.1: 1.04 s vs 2.42 s.
+    The banded bucket table is cached before the candidate self-join:
+    both join sides read it, Catalyst's exchange reuse does NOT unify them
+    (the per-side aliases break canonicalized matching), so without the
+    cache the whole shingle+signature pipeline — the expensive half of
+    this operator — evaluates twice. The cached table is O(docs × bands)
+    longs (``MEMORY_AND_DISK``, spills): ≪ corpus text, and strictly
+    cheaper than recomputing signatures at any scale. Measured cold-cache
+    at sf0.1: 1.04 s vs 2.42 s.
 
     Returns ``(id_a, id_b, jaccard)`` with ``id_a < id_b``.
     """
@@ -326,8 +324,7 @@ def minhash_lsh_pairs(
     buckets = sigs.selectExpr(
         "__id", f"posexplode(array({band_sql})) AS (__band, __bucket)"
     )
-    if persist_buckets:
-        buckets = _persist_blocking(buckets)
+    buckets = persist_tracked(buckets)
 
     left = buckets.select(
         F.col("__id").alias("id_a"), "__band", "__bucket"
@@ -379,7 +376,6 @@ def simhash_pairs(
     id_col: str,
     *,
     max_hamming: int = 3,
-    persist_chunks: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance ≤ ``max_hamming``.
 
@@ -390,14 +386,7 @@ def simhash_pairs(
     Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b``.
     """
     hashed = simhash_table(df, text_col, id_col, bits=60)
-    return hamming_pairs(
-        hashed,
-        "simhash",
-        id_col,
-        bits=60,
-        max_hamming=max_hamming,
-        persist_chunks=persist_chunks,
-    )
+    return hamming_pairs(hashed, "simhash", id_col, bits=60, max_hamming=max_hamming)
 
 
 def hamming_pairs(
@@ -407,7 +396,6 @@ def hamming_pairs(
     *,
     bits: int = 60,
     max_hamming: int = 3,
-    persist_chunks: bool = True,
 ) -> DataFrame:
     """All id pairs whose ``bits``-wide integer hashes are within
     Hamming distance ``max_hamming`` — the generic fingerprint-dedup
@@ -422,12 +410,11 @@ def hamming_pairs(
     are then verified with the true bit_count of the XOR. Larger radii
     mean narrower chunks → more candidates: the usual recall/cost dial.
 
-    ``persist_chunks`` (default on) caches the O(rows × chunks) blocking
-    table before the self-join — both sides read it and exchange reuse
-    does not unify the differently-aliased branches, so uncached the
-    upstream hash computation runs twice (for simhash, the expensive
-    explode + 60 grouped bit counts; measured cold-cache at sf0.1:
-    1.01 s vs 1.82 s).
+    The O(rows × chunks) blocking table is cached before the self-join —
+    both sides read it and exchange reuse does not unify the
+    differently-aliased branches, so uncached the upstream hash
+    computation runs twice (for simhash, the expensive explode + 60
+    grouped bit counts; measured cold-cache at sf0.1: 1.01 s vs 1.82 s).
 
     Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b``.
     """
@@ -456,8 +443,7 @@ def hamming_pairs(
         "__sim",
         F.posexplode(F.array(*chunk_exprs)).alias("__chunk", "__val"),
     )
-    if persist_chunks:
-        chunks = _persist_blocking(chunks)
+    chunks = persist_tracked(chunks)
 
     left = chunks.select(
         F.col("__id").alias("id_a"), F.col("__sim").alias("__sim_a"), "__chunk", "__val"
@@ -764,7 +750,6 @@ def duplicated_window_fraction(
     *,
     window: int = 8,
     min_df: int = 2,
-    persist_windows: bool = True,
 ) -> DataFrame:
     """Per-document fraction of token windows whose content also appears
     in at least ``min_df`` distinct documents — the exact-substring
@@ -783,7 +768,8 @@ def duplicated_window_fraction(
     distinct-doc count per hash, a co-partitioned left join back on the
     hash (both sides arrive hash-partitioned on it — no extra exchange),
     and a per-doc aggregation. No pairwise anything: cost is linear in
-    total windows. Windowing uses ``word_ngrams_all`` (multiset,
+    total windows. The (id, window-hash) table is cached, since the
+    aggregation and the join both read it. Windowing uses ``word_ngrams_all`` (multiset,
     position-ordered), so documents shorter than ``window`` tokens
     contribute one window holding their whole token sequence.
 
@@ -797,12 +783,11 @@ def duplicated_window_fraction(
         F.col(id_col),
         F.explode(word_ngrams_all(F.col(text_col), window)).alias("__win"),
     ).select(F.col(id_col), F.xxhash64(F.col("__win")).alias("__h"))
-    if persist_windows:
-        # r14: both the duplicated-hash aggregation and the marked join
-        # side read `exploded`; uncached the corpus window explode runs
-        # twice (aliasing breaks exchange reuse — the minhash buckets
-        # discipline). Narrow (id, hash) rows, MEMORY_AND_DISK.
-        exploded = _persist_blocking(exploded)
+    # Both the duplicated-hash aggregation and the marked join side read
+    # `exploded`; uncached the corpus window explode runs twice (aliasing
+    # breaks exchange reuse — the minhash buckets discipline). Narrow
+    # (id, hash) rows, MEMORY_AND_DISK.
+    exploded = persist_tracked(exploded)
     dup = (
         exploded.groupBy("__h")
         .agg(F.countDistinct(F.col(id_col)).alias("__df"))
@@ -1243,7 +1228,7 @@ def remove_duplicated_windows(
         F.col(id_col), F.posexplode(win_hashes).alias("__pos", "__h")
     )
     # NOTE (r14): `occ` feeds three consumers under keep_first and the
-    # per-side aliases break exchange reuse, but a _persist_blocking
+    # per-side aliases break exchange reuse, but a persist_tracked
     # cache here measured 1.22× in the interleaved A/B and was
     # REVERTED: occ is one row per token position (corpus-token-sized,
     # unlike the distinct-shingle/bucket tables the discipline caches
@@ -1418,7 +1403,6 @@ def source_overlap(
     source_col: str,
     *,
     n: int = 13,
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """Pairwise n-gram overlap between corpus SOURCES: for every source
     pair, the Jaccard of their distinct word-``n``-gram hash sets — the
@@ -1435,8 +1419,7 @@ def source_overlap(
     #sources-row table). Source pairs sharing NO shingle emit no row
     (documented — a dense matrix would be #sources^2 mostly-zero).
 
-    ``persist_shingles`` (default on) caches the distinct
-    (source, hash) table: it feeds THREE consumers (per-source sizes
+    The distinct (source, hash) table is cached: it feeds THREE consumers (per-source sizes
     and both intersection-join sides) whose per-side aliases break
     Catalyst's exchange reuse, so uncached the full corpus shingling
     runs three times (r14; the minhash_lsh_pairs buckets discipline —
@@ -1457,8 +1440,7 @@ def source_overlap(
         .select("__src", F.xxhash64(F.col("__s")).alias("__h"))
         .distinct()
     )
-    if persist_shingles:
-        sh = _persist_blocking(sh)
+    sh = persist_tracked(sh)
     sizes = sh.groupBy("__src").agg(F.count("*").alias("__sz"))
     a = sh.select(F.col("__src").alias("source_a"), "__h")
     b = sh.select(F.col("__src").alias("source_b"), "__h")
@@ -1770,29 +1752,31 @@ def bloom_from_hashes(
     # corpus — would execute twice ("ONE distributed pass" for real).
     distinct = hashes.select(F.col(hash_col).alias("__h")).distinct()
     distinct = distinct.persist()
-    n_items = distinct.count()
-    if num_bits is None:
-        num_bits = max(1024, int(bits_per_item * max(n_items, 1)))
-    # round up to whole 64-bit words
-    num_bits = ((num_bits + 63) // 64) * 64
+    try:
+        n_items = distinct.count()
+        if num_bits is None:
+            num_bits = max(1024, int(bits_per_item * max(n_items, 1)))
+        # round up to whole 64-bit words
+        num_bits = ((num_bits + 63) // 64) * 64
 
-    pos = distinct.select(
-        F.explode(
-            _bloom_positions(F.col("__h"), num_bits, num_hashes)
-        ).alias("__p")
-    )
-    words = (
-        # shiftleft's Python wrapper takes only a literal shift; the SQL
-        # form shifts by a column.
-        pos.selectExpr(
-            "CAST(__p / 64 AS LONG) AS __w",
-            "shiftleft(CAST(1 AS LONG), CAST(__p % 64 AS INT)) AS __bit",
+        pos = distinct.select(
+            F.explode(
+                _bloom_positions(F.col("__h"), num_bits, num_hashes)
+            ).alias("__p")
         )
-        .groupBy("__w")
-        .agg(F.bit_or("__bit").alias("__bits"))
-    )
-    pdf = words.toPandas()
-    distinct.unpersist()
+        words = (
+            # shiftleft's Python wrapper takes only a literal shift; the SQL
+            # form shifts by a column.
+            pos.selectExpr(
+                "CAST(__p / 64 AS LONG) AS __w",
+                "shiftleft(CAST(1 AS LONG), CAST(__p % 64 AS INT)) AS __bit",
+            )
+            .groupBy("__w")
+            .agg(F.bit_or("__bit").alias("__bits"))
+        )
+        pdf = words.toPandas()
+    finally:
+        distinct.unpersist()
     bits = np.zeros(num_bits // 64, dtype=np.int64)
     if len(pdf):
         bits[pdf["__w"].to_numpy(dtype=np.int64)] = pdf["__bits"].to_numpy(
@@ -1978,33 +1962,21 @@ def build_dedup_index(
         F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("sig"),
         F.explode(_band_keys(num_hashes, bands)).alias("bkey"),
     )
-    # r14 (guide §2.6 — overlap independent jobs): the two index writes
-    # share no dependency (different tables, both scan the reference),
-    # so submitting them from two driver threads lets the short _fp
-    # write back-fill executors idled by the _lsh write's task tail
-    # instead of paying both job tails sequentially. Results are
-    # unchanged (independent tables); failures propagate via result().
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_fp = pool.submit(
-            write_bucketed,
-            fps,
-            f"{table_name}_fp",
-            ["fp"],
-            num_buckets,
+    # The two index writes share no dependency (different tables, both
+    # scan the reference): overlapped, the short _fp write back-fills
+    # executors idled by the _lsh write's task tail instead of paying both
+    # job tails in turn. A failing write cancels the other.
+    overlap(
+        ref.sparkSession,
+        lambda: write_bucketed(
+            fps, f"{table_name}_fp", ["fp"], num_buckets,
             path=f"{path}_fp" if path else None,
-        )
-        f_lsh = pool.submit(
-            write_bucketed,
-            lsh,
-            f"{table_name}_lsh",
-            ["bkey"],
-            num_buckets,
+        ),
+        lambda: write_bucketed(
+            lsh, f"{table_name}_lsh", ["bkey"], num_buckets,
             path=f"{path}_lsh" if path else None,
-        )
-        f_fp.result()
-        f_lsh.result()
+        ),
+    )
     # Geometry metadata: probes and appends read (n, num_hashes, bands)
     # from the index itself instead of trusting their callers — a
     # mismatched probe would silently find zero candidates (band keys

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from polars_nexpresso_spark.functions._caching import overlap
 from polars_nexpresso_spark.functions.text import tokens
 
 
@@ -190,33 +191,22 @@ def build_text_index(
             F.count("dl").alias("n_text"),
             F.sum("dl").alias("sum_dl"),
         )
-        # r14 (guide §2.6): terms depends on the WRITTEN postings table,
-        # but the 1-row stats write is independent of it — overlap the
-        # two writes from driver threads so the stats job back-fills the
-        # terms job's tail instead of running after it. Results are
-        # unchanged (independent tables); failures propagate.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_terms = pool.submit(
-                write_bucketed,
-                terms,
-                f"{table_name}_terms",
-                ["term"],
-                num_buckets,
+        # terms depends on the WRITTEN postings table, but the 1-row stats
+        # write is independent of it: overlapped, the stats job back-fills
+        # the terms job's tail instead of running after it. A failing
+        # write cancels the other.
+        overlap(
+            spark,
+            lambda: write_bucketed(
+                terms, f"{table_name}_terms", ["term"], num_buckets,
                 sort_cols=["term"],
                 path=f"{path}_terms" if path else None,
-            )
-            f_stats = pool.submit(
-                write_bucketed,
-                stats,
-                f"{table_name}_stats",
-                ["n_docs"],
-                1,
+            ),
+            lambda: write_bucketed(
+                stats, f"{table_name}_stats", ["n_docs"], 1,
                 path=f"{path}_stats" if path else None,
-            )
-            f_terms.result()
-            f_stats.result()
+            ),
+        )
     finally:
         docs.unpersist()
 

@@ -33,6 +33,7 @@ from polars_nexpresso_spark.functions._caching import (
     _memo_evict,
     _memo_get,
     _memo_put,
+    persist_tracked,
 )
 from polars_nexpresso_spark.plans.stats import plan_size_bytes
 
@@ -900,7 +901,6 @@ def semantic_dedup(
     n_centroids: int | None = None,
     threshold: float = 0.95,
     centroids: str = "kmeans",
-    persist_assignment: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): cluster embeddings
@@ -928,12 +928,12 @@ def semantic_dedup(
     ``n_centroids=None`` (the default) derives the cell count from a
     cheap corpus count via :func:`auto_centroid_count` (~4k vectors per
     cell), so the operator stays linear-ish as the corpus grows without
-    retuning; pass an explicit value to pin it. ``persist_assignment``
-    (default on) caches the assignment table before the self-join —
-    the differently-aliased a/b branches and the final keep-join do not
-    unify under exchange reuse, so uncached the ``n_centroids``-way
-    nearest-cell sort expression evaluates ~3× per run (the same
-    recompute shape ``hamming_pairs``'s persist_chunks documents).
+    retuning; pass an explicit value to pin it. The assignment table is
+    cached before the self-join — the differently-aliased a/b branches
+    and the final keep-join do not unify under exchange reuse, so
+    uncached the ``n_centroids``-way nearest-cell sort expression would
+    evaluate ~3× per run (the same recompute shape ``hamming_pairs``
+    caches its chunk table against).
 
     Returns ``(id_col, cluster_id, keep)`` — one row per input vector;
     filter ``keep`` to materialize the deduplicated corpus.
@@ -945,18 +945,11 @@ def semantic_dedup(
         # The auto default needs a corpus count — a Spark ACTION at plan
         # construction. Persist the narrow (id, vec) projection first so
         # an expensive upstream plan computes once and the count, the
-        # centroid-training sample, and the assignment all read the cache;
-        # with persist_assignment=False the caller opted out of caching,
-        # so the count is a second upstream compute — pass n_centroids
-        # explicitly (or persist upstream) to keep construction action-free.
-        corpus = corpus.select(F.col(id_col), F.col(vec_col))
-        if persist_assignment:
-            from polars_nexpresso_spark.functions.dedup import (
-                _persist_blocking,
-            )
-
-            corpus = _persist_blocking(corpus)
-            _corpus_cache = corpus
+        # centroid-training sample, and the assignment all read the cache.
+        # Pass n_centroids explicitly to keep construction action-free.
+        corpus = _corpus_cache = persist_tracked(
+            corpus.select(F.col(id_col), F.col(vec_col))
+        )
         n_centroids = auto_centroid_count(corpus.count())
     if centroids == "kmeans":
         # Keep the training sample comfortably larger than k when the
@@ -983,23 +976,21 @@ def semantic_dedup(
         raise ValueError(
             f"centroids must be 'kmeans' or 'sample', got {centroids!r}"
         )
-    assigned = _assign(corpus, vec_col, cents=cent_vecs).select(
-        F.col(id_col),
-        F.col(vec_col).alias("__v"),
-        _norm(F.col(vec_col)).alias("__n"),
-        F.col("__cell").alias("cluster_id"),
+    assigned = persist_tracked(
+        _assign(corpus, vec_col, cents=cent_vecs).select(
+            F.col(id_col),
+            F.col(vec_col).alias("__v"),
+            _norm(F.col(vec_col)).alias("__n"),
+            F.col("__cell").alias("cluster_id"),
+        )
     )
-    if persist_assignment:
-        from polars_nexpresso_spark.functions.dedup import _persist_blocking
-
-        assigned = _persist_blocking(assigned)
-        if _corpus_cache is not None:
-            # The (id, vec) projection cache served the count, the
-            # centroid sample, and the assignment build; once the
-            # assignment itself is cached it is dead weight — release
-            # it rather than hold two copies of the vector corpus.
-            assigned.count()  # materialize before dropping the upstream
-            _corpus_cache.unpersist()
+    if _corpus_cache is not None:
+        # The (id, vec) projection cache served the count, the centroid
+        # sample, and the assignment build; once the assignment itself is
+        # cached it is dead weight — release it rather than hold two
+        # copies of the vector corpus.
+        assigned.count()  # materialize before dropping the upstream
+        _corpus_cache.unpersist()
     a = assigned.select(
         F.col(id_col).alias("__ida"),
         F.col("__v").alias("__va"),

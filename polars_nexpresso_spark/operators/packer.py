@@ -40,8 +40,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-import uuid
 from collections.abc import Callable, Mapping, Sequence
 from typing import Literal
 
@@ -73,6 +71,7 @@ from polars_nexpresso_spark.plans.spec import (
     build_metadata,
 )
 from polars_nexpresso_spark.plans.stats import plan_size_bytes
+from polars_nexpresso_spark.sources.io import scratch_dir
 
 
 def _struct_key_comparator(key_fields: Sequence[str]) -> Callable[[Column, Column], Column]:
@@ -762,7 +761,9 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
         spills, so the default is expressed as
         ``repartition(partitions, root_keys)`` + the normal pack (one job, no
         K-pass re-reads). ``defer=False`` reproduces the disk-to-disk mode
-        with a parquet checkpoint.
+        with a parquet checkpoint. Its sink, and ``bounded=True``'s, is
+        ``tmp_dir``, or else a new directory under the system temp dir
+        that is deleted when the JVM exits.
 
         Child-order caveat for PATH sources: a parquet directory has no
         defined row order (equal-size files pack into scan partitions in
@@ -819,9 +820,7 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
         packed = self.pack(df, to_level, extra_columns=extra_columns)
         if defer:
             return packed
-        target = tmp_dir or os.path.join(
-            tempfile.gettempdir(), f"pns_pack_{uuid.uuid4().hex}"
-        )
+        target = tmp_dir or scratch_dir(packed.sparkSession, "pns_pack")
         packed.write.mode("overwrite").parquet(target)
         return packed.sparkSession.read.parquet(target)
 
@@ -871,9 +870,7 @@ class HierarchicalPacker(CrossLevelMixin, IntrospectionMixin):
                 f"present in the input"
             )
         session = df.sparkSession
-        base = tmp_dir or os.path.join(
-            tempfile.gettempdir(), f"pns_bounded_{uuid.uuid4().hex}"
-        )
+        base = tmp_dir or scratch_dir(session, "pns_bounded")
         target = os.path.join(base, "packed")
         bucket = F.pmod(F.xxhash64(*[qcol(k) for k in root_keys]), F.lit(partitions))
 

@@ -17,6 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from polars_nexpresso_spark.functions._caching import overlap
 from polars_nexpresso_spark.functions.dedup import (
     decontaminate,
     decontaminate_stream,
@@ -343,13 +344,7 @@ def q_robust_dedup_unicode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(read_table(spark, sf_dir, "documents"))
-    # persist_shingles: the exploded-shingle subtree feeds three shuffles;
-    # caching it (MEMORY_AND_DISK, spills) measured 1.72s vs 2.11s
-    # cold-cache at sf0.1. The cache is ~tokenized-corpus-sized — at
-    # 100 TB keep it on when executor storage allows, else pay recompute.
-    return ngram_jaccard_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.8, persist_shingles=True
-    )
+    return ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.8)
 
 
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -912,13 +907,11 @@ def q_ref_distill(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10)
     docs = spread(read_table(spark, sf_dir, "documents"))
 
-    # r14 (guide §2.6 — overlap independent jobs): the triplet branch
-    # (IVF shortlist → CE rerank → distillation pins) and the cluster
-    # branch (MinHash pairs → connected components) are independent until
-    # the final join, yet both run EAGER jobs during construction (the
-    # pins and the star rounds). Building them from two driver
-    # threads overlaps those job chains — each branch's internals and
-    # results are exactly as before; failures propagate via result().
+    # The triplet branch (IVF shortlist → CE rerank → distillation pins)
+    # and the cluster branch (MinHash pairs → connected components) are
+    # independent until the final join, yet both run EAGER jobs during
+    # construction (the pins and the star rounds). Built by overlap(),
+    # those job chains run at once; a failing branch cancels the other.
     def _build_triplets() -> DataFrame:
         shortlist = ivf_ann_topk(
             emb, queries, k=20, n_centroids=16, n_probe=6
@@ -935,13 +928,7 @@ def q_ref_distill(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return dedup_clusters(docs, pairs, "doc_id")
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_trip = pool.submit(_build_triplets)
-        f_clusters = pool.submit(_build_clusters)
-        trip = f_trip.result()
-        clusters = f_clusters.result()
+    trip, clusters = overlap(spark, _build_triplets, _build_clusters)
     split = hash_split(clusters, "cluster_id").select(
         "doc_id", "cluster_id", "split"
     )
@@ -4551,9 +4538,7 @@ def q_dedup_pair_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = spread(read_table(spark, sf_dir, "documents"))
-    truth = ngram_jaccard_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.8, persist_shingles=True
-    )
+    truth = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.8)
     cand = simhash_pairs(docs, "text", "doc_id", max_hamming=3)
     return dedup_pair_recall(truth, cand)
 
@@ -5524,57 +5509,22 @@ def q_curriculum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     and reorders nothing. (The file-ORDER half of the contract — read
     sequence == pos sequence with no sort — is pinned separately in
     test_sources.py; the oracle compare is order-insensitive by
-    design.) The scratch dir is keyed by (sf name, pid): same-process
-    reruns (bench warmup+timed) overwrite in place, while concurrent
-    processes on the same sf (parallel CI, overlapping bench/driver
-    runs) get disjoint paths instead of racing reader-vs-overwriter
-    (r10 advice)."""
-    import tempfile
-    import time
+    design.) The scratch dir is new per call and deleted at JVM exit."""
     from pathlib import Path as _P
 
     from polars_nexpresso_spark.functions.sampling import (
         curriculum_shards,
     )
-    from polars_nexpresso_spark.sources.io import write_curriculum
+    from polars_nexpresso_spark.sources.io import scratch_dir, write_curriculum
 
     docs = spread(read_table(spark, sf_dir, "documents"))
     plan = curriculum_shards(
         docs, "n_chars", "doc_id", n_stages=3, n_shards=4
     )
-    # Scavenge scratch dirs left by DEAD processes before writing our
-    # own: the returned DataFrame lazily re-reads `out`, so this
-    # process cannot rmtree its own dir (the driver collects after we
-    # return) — but pid-keyed dirs from exited runs would otherwise
-    # accumulate forever on long-lived CI/bench hosts (r11 advice).
-    # Live pids keep their dirs, preserving the concurrent-process
-    # isolation the pid key exists for.
-    import shutil
-
-    tmp = _P(tempfile.gettempdir())
-    prefix = f"pns_curriculum_replay_{_P(sf_dir).name}_"
-    stale_after = 6 * 3600  # pid-recycle / EPERM backstop (r12 advice)
-    for old in tmp.glob(f"{prefix}*"):
-        pid_part = old.name[len(prefix):]
-        if not pid_part.isdigit() or int(pid_part) == os.getpid():
-            continue
-        # Age backstop first: a recycled pid (or an EPERM hit on an
-        # unrelated process) would otherwise shadow a dead run's dir
-        # forever. No live run keeps its scratch dir for hours, so an
-        # old-enough dir is reclaimed regardless of what os.kill says.
-        try:
-            if time.time() - old.stat().st_mtime > stale_after:
-                shutil.rmtree(old, ignore_errors=True)
-                continue
-        except OSError:
-            pass
-        try:
-            os.kill(int(pid_part), 0)
-        except ProcessLookupError:
-            shutil.rmtree(old, ignore_errors=True)
-        except OSError:
-            pass  # pid exists but isn't ours (EPERM) — leave it
-    out = str(tmp / f"{prefix}{os.getpid()}")
+    # The returned frame lazily re-reads `out`, so the dir lives until
+    # the JVM exits; a fresh dir per call keeps concurrent processes and
+    # reruns from racing a reader against an overwriter.
+    out = scratch_dir(spark, f"pns_curriculum_replay_{_P(sf_dir).name}")
     write_curriculum(plan, out)
     back = spark.read.parquet(out)
     return back.select(

@@ -10,11 +10,28 @@ pushed down by Catalyst reach the scan.
 from __future__ import annotations
 
 import os
+import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polars_nexpresso_spark.plans.stats import plan_size_bytes
+
+def scratch_dir(session: SparkSession, prefix: str) -> str:
+    """A new ``<prefix>_<uuid>`` directory under the system temp dir,
+    deleted at JVM exit: a frame read back from it is lazy, so nothing
+    sooner can delete it (Spark Connect: no JVM handle, no cleanup)."""
+    path = os.path.join(tempfile.gettempdir(), f"{prefix}_{uuid.uuid4().hex}")
+    try:
+        p = session._jvm.org.apache.hadoop.fs.Path(path)
+        fs = p.getFileSystem(session._jsc.hadoopConfiguration())
+        fs.mkdirs(p)  # deleteOnExit registers existing paths only
+        fs.deleteOnExit(fs.makeQualified(p))
+    except AttributeError:  # Spark Connect: no JVM handle
+        pass
+    return path
+
 
 TABLES = (
     "region",

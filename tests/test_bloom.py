@@ -107,6 +107,21 @@ def test_bloom_probe_is_map_side(spark):
     assert "ArrowEvalPython" in plan
 
 
+def test_bloom_build_releases_its_cache_on_error(spark, monkeypatch):
+    """A failing bitmap collect still unpersists the distinct hash set."""
+
+    def fail(self):
+        raise RuntimeError("collect failed")
+
+    ref = _ref(spark)
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(type(ref), "toPandas", fail)
+    with pytest.raises(RuntimeError, match="collect failed"):
+        build_bloom_filter(ref, "text")
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_bloom_validation(spark):
     df = spark.createDataFrame([(1, "x")], ["doc_id", "text"])
     with pytest.raises(ValueError, match="not in DataFrame"):

@@ -717,6 +717,29 @@ def test_bounded_pack_stages_under_a_uri_tmp_dir(spark, tmp_path, parquet_writes
     assert not (tmp_path / "stage").exists()
 
 
+@pytest.mark.parametrize("mode", ["checkpoint", "bounded"])
+def test_default_sink_is_deleted_on_exit(spark, mode):
+    """Without ``tmp_dir`` the sink is a new ``pns_*`` directory under the
+    system temp dir registered with Hadoop ``deleteOnExit``: the returned
+    frame reads it lazily, so only JVM exit can delete it."""
+    import shutil
+    from urllib.parse import urlparse
+
+    df = _sort_edge_frame(spark)
+    packer = HierarchicalPacker(_SORT_SPEC)
+    got = packer.pack_streaming(
+        df, "item", partitions=2, defer=False, bounded=mode == "bounded"
+    )
+    part = got.inputFiles()[0]
+    sink = part[: part.index("/", part.index("/pns_") + 1)]
+    path = spark._jvm.org.apache.hadoop.fs.Path(sink)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    try:
+        assert fs.cancelDeleteOnExit(path)
+    finally:
+        shutil.rmtree(urlparse(sink).path, ignore_errors=True)
+
+
 def _full_gc_count(spark) -> int:
     management = spark.sparkContext._jvm.java.lang.management
     beans = management.ManagementFactory.getGarbageCollectorMXBeans()

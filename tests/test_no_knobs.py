@@ -22,20 +22,39 @@ def test_package_defines_no_conf_or_env_knobs():
     assert not found, "\n".join(found)
 
 
+def _public_function_params():
+    """``(where, parameter names)`` of every public function and method in
+    the package."""
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.FunctionDef) or node.name.startswith("_"):
+                continue
+            args = node.args
+            names = {a.arg for a in args.posonlyargs + args.args + args.kwonlyargs}
+            yield f"{path.relative_to(PACKAGE)}:{node.name}", names
+
+
 def test_no_engine_switches_on_public_functions():
     """Engines are picked by corpus size (``similarity._assign``), not by
     an ``assign=`` switch. ``ivfpq_ann_topk`` keeps its ``assign`` only
     because the repository benchmark's corpus_prep workload
     (``perfbench/workloads.py:276``) still passes ``assign="expr"``."""
-    allowed = {"similarity.py:ivfpq_ann_topk"}
-    found = []
-    for path in sorted((PACKAGE / "functions").glob("*.py")):
-        for node in ast.parse(path.read_text()).body:
-            if not isinstance(node, ast.FunctionDef) or node.name.startswith("_"):
-                continue
-            args = node.args
-            names = {a.arg for a in args.posonlyargs + args.args + args.kwonlyargs}
-            where = f"{path.name}:{node.name}"
-            if "assign" in names and where not in allowed:
-                found.append(where)
+    allowed = {"functions/similarity.py:ivfpq_ann_topk"}
+    found = [
+        where
+        for where, names in _public_function_params()
+        if where.startswith("functions/") and "assign" in names and where not in allowed
+    ]
+    assert not found, "\n".join(found)
+
+
+def test_no_cache_switches_on_public_functions():
+    """Whether an operator caches an intermediate is the operator's measured
+    decision (``_caching.persist_tracked``), not a ``persist_*`` option."""
+    found = [
+        f"{where}({name})"
+        for where, names in _public_function_params()
+        for name in sorted(names)
+        if name.startswith("persist_")
+    ]
     assert not found, "\n".join(found)

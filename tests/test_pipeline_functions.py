@@ -2452,9 +2452,8 @@ def test_auto_centroid_count_scales_with_corpus(spark):
 def test_semantic_dedup_persists_assignment_once(spark):
     """The centroid-assignment table is cached before the self-join:
     the a/b branches and the keep-join all read InMemoryTableScan
-    instead of recomputing the k-way nearest-cell sort ~3x (same
-    exchange-reuse gap hamming_pairs' persist_chunks documents).
-    persist_assignment=False opts out (and is cache-free)."""
+    instead of recomputing the k-way nearest-cell sort ~3x (the same
+    exchange-reuse gap hamming_pairs caches its chunk table against)."""
     from polars_nexpresso_spark.functions.dedup import (
         release_blocking_caches,
     )
@@ -2465,19 +2464,10 @@ def test_semantic_dedup_persists_assignment_once(spark):
         ["vec_id", "embedding"],
     )
     try:
-        # Opt-out plan FIRST: once the default variant persists the
-        # assignment, Spark's CacheManager substitutes the cached
-        # relation into any later matching plan fragment, so checking
-        # the opt-out after it would see InMemoryTableScan regardless.
-        off = semantic_dedup(
-            emb, n_centroids=2, threshold=0.99, persist_assignment=False
-        )
-        plan_off = off._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" not in plan_off
         df = semantic_dedup(emb, n_centroids=2, threshold=0.99)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan
-        assert df.count() == off.count() == 6
+        assert df.count() == 6
     finally:
         release_blocking_caches()
 
