@@ -10,22 +10,18 @@ cross-level operators and the LLM-pipeline extension catalog. Results are
 forced with the ``noop`` datasource sink so the full plan (including list
 collection) executes without driver materialization skew.
 
-Isolation protocol (round 8): by DEFAULT each query group runs in fresh
-python+JVM children, because rounds 5-7 proved shared-session per-query
-numbers swing ±25% with run ordering / JIT warmth — the committed seal
-and the driver's own run kept disagreeing on which queries "regressed".
-Round 9 (VERDICT r08 items 2+7) split the protocol in two tiers: FULL
-queries (headline pack family, new/touched paths, past seal-flag
-minters) run once in EACH of SPARK_GRAFT_SEAL_RUNS (default 3) fresh
-JVMs per group and seal as the median ACROSS JVMs — a single JVM's
-JIT/ordering state can no longer mint a >=1.3x flag — while SPOT
-queries (SEAL_SPOT: stable across two consecutive sealed rounds within
-the 1.3x band, untouched code paths) keep the r8 one-JVM
-warmup+median-of-3, holding total wall-clock at the r8 level despite
-the 3x protocol. Per-query {median, min, max, runs} land in
-BENCH_DETAILS.json "query_stats". Set SPARK_GRAFT_ISOLATED=0 to run
-everything in this process (the pre-r08 shared-session mode, faster
-for iteration).
+Protocol: each query group runs in ONE fresh python+JVM child, so a
+query's number does not depend on what ran before it in a shared session.
+Inside the child every query gets 1 warm-up run, then the median of 3
+timed runs. Per-query {median, min, max, runs} land in
+BENCH_DETAILS.json "query_stats".
+
+Environment: SPARK_GRAFT_SF_DIR (scale dir), SPARK_GRAFT_CPUS (local[N]),
+SPARK_GRAFT_GROUPS (comma-separated subset of GROUPS; a subset run skips
+the RSS probes and leaves BENCH_DETAILS.json alone), SPARK_GRAFT_SEAL_EXTRAS=1
+(also run the ANN dial grid and the scale probes) and
+SPARK_GRAFT_BENCH_DEADLINE (seconds after which the optional post-group
+stages are skipped, default 3000).
 """
 
 from __future__ import annotations
@@ -51,6 +47,14 @@ from polars_nexpresso_spark.sources.io import (  # noqa: E402
     read_table,
     spread,
 )
+
+WARMUP = 1  # untimed runs per query before the timed ones
+REPEAT = 3  # timed runs per query; the headline takes their median
+GROUP_TIMEOUT_SEC = 2400  # one group child
+HEAP_CAP = "800m"  # driver heap of the capped RSS probes
+# Deliberately slower memory modes: benched for their ratio rows but left
+# out of the headline total.
+SLOW_MODES = frozenset({"pack_streaming_bounded", "pack_heap_capped"})
 
 
 def force(df) -> None:
@@ -115,7 +119,6 @@ def _rss_probe(op: str, sf_dir: str) -> None:
     runtime's RSS watermark otherwise tracks allocation churn, not working
     set, which is why the uncapped pack and the bounded bucket loop measure
     alike in a fresh process."""
-    heap_cap = os.environ.get("SPARK_GRAFT_HEAP_CAP", "800m")
     extra = {}
     if op.startswith("pack_heap_capped"):
         # The capped CONFIGURATION bounds every JVM memory region, not just
@@ -124,7 +127,7 @@ def _rss_probe(op: str, sf_dir: str) -> None:
         # configuration bound". Measured at sf0.1: heap-only cap floors at
         # ~1060 MB RSS; with the non-heap regions bounded too, ~980 MB.
         extra = {
-            "spark.driver.memory": heap_cap,
+            "spark.driver.memory": HEAP_CAP,
             "spark.driver.extraJavaOptions": (
                 "-XX:MaxDirectMemorySize=192m -XX:ReservedCodeCacheSize=96m "
                 "-XX:MaxMetaspaceSize=192m -Xss512k"
@@ -215,121 +218,23 @@ def _isolated_rss(sf_dir: str) -> tuple[dict[str, float], dict[str, float]]:
 
 
 # ---------------------------------------------------------------------------
-# Bench groups. Each group runs in ONE fresh JVM (default) or back-to-back
-# in the parent session (SPARK_GRAFT_ISOLATED=0). Groups are subsystem-
+# Bench groups. Each group runs in ONE fresh JVM. Groups are subsystem-
 # shaped so cached inputs amortize within a group without leaking warmth
 # across subsystems.
 # ---------------------------------------------------------------------------
 
 
-# Seal subset rule (round 9, VERDICT r08 item 7): queries benched in BOTH
-# the r7 and r8 SEALED artifacts whose ratio stayed within the 1.3x noise
-# band, with code paths untouched this round, are SPOT-CHECKED — they run
-# in ONE fresh JVM (1 warmup + in-JVM median-of-3, the r8 protocol).
-# Everything else — the headline pack family, queries new or code-touched
-# this round, and any query that has ever minted a >=1.3x seal flag —
-# runs FULL: once in EACH of the SPARK_GRAFT_SEAL_RUNS (default 3) fresh
-# JVMs per group, sealed as the median across JVMs (VERDICT r08 item 2:
-# a single JVM's run order / JIT state can no longer mint a flag). New
-# queries default to FULL (absent from this set); promote a query here
-# only after two consecutive sealed rounds inside the noise band — or,
-# second clause, after moving OUT of the band in the IMPROVEMENT
-# direction with the driver's own artifact confirming the gain (the r8
-# verdict verified those as genuine; only regression-direction movers
-# must keep re-proving themselves).
-SEAL_SPOT = frozenset({
-    "ann_recall", "apply_mix", "asof_attribution",
-    "asof_attribution_sharded", "audio_near_dup", "boilerplate_tokens",
-    "bpe_pipeline", "cap_per_source", "chunk_documents", "clean_ingest",
-    "contamination_report", "corpus_diff", "corpus_report", "cosine_topk",
-    "cosine_topk_int8", "decontaminate_stream", "dsir_weights",
-    "dup_window_frac", "enrich_stats", "epoch_plan",
-    "exact_substring_dedup", "fixed_boilerplate", "gumbel_topk",
-    "hard_negatives", "hard_negatives_ann", "hard_negatives_ivfpq",
-    "image_near_dup", "intradoc_dedup", "ivfpq_ann_topk", "ivfpq_rerank",
-    "leakage_free_split", "lm_score_stream", "lsh_ann_topk", "minhash_lsh",
-    "nb_quality", "nb_quality_stream", "pack_heap_capped",
-    "pack_parent_dominant", "pack_parent_heavy_aggregate",
-    "pack_split_join_parent_heavy", "pack_streaming_bounded",
-    "pq_ann_topk", "quality_buckets", "quality_percentiles", "redact_pii",
-    "ref_dedup", "ref_dedup_stream", "repeat_upsample", "sequence_pack",
-    "source_mix", "strip_markup", "temperature_mix", "text_stats",
-    "tfidf_keywords", "token_budget", "token_shift", "top_events_salted",
-    "truncate_tokens", "vocab_topk",
-    # r8->r9 two-consecutive-sealed-rounds promotions (VERDICT r09 item
-    # 4; ratios from the r8 seal vs the r9 driver/BENCH_DETAILS seal:
-    # bloom_dedup 1.22x, dedup_index 1.26x, decontaminate_bloom 0.99x —
-    # all inside the 1.3x band both rounds). bm25_index read 1.72x r9 vs
-    # r8, outside the band in the regression direction, so it stays FULL
-    # and keeps re-proving itself; containment_keepset likewise stays
-    # FULL pending its r10 like-for-like re-read (VERDICT r09 item 3).
-    "bloom_dedup", "dedup_index", "decontaminate_bloom",
-    # r7->r8 improvement-direction movers (second promotion clause;
-    # headline pack-family names stay FULL regardless)
-    "any_child", "bm25_topk", "chunk_dedup", "cosine_topk_pandas",
-    "dedup_best_keep", "dedup_clusters", "embedding_dedup",
-    "fuzzy_name_pairs", "interval_views", "ivf_ann_topk", "label_centroids",
-    "language_id", "lm_score", "multihop_count", "multimodal_video",
-    "ngram_jaccard", "project_embeddings", "quality_filter",
-    "semantic_dedup", "session_pack", "simhash_pairs", "source_overlap",
-    "token_fingerprint", "unicode_nfc", "windowed_pack",
-    # r10->r11 two-consecutive-sealed-rounds promotions (VERDICT r11
-    # item 2: the driver's 3000 s budget must regain the RSS probes;
-    # ratios are r11 seal / r10 seal, all inside the 1.3x band):
-    # bm25_route 1.28, containment_keepset 0.96, containment_pairs
-    # 1.15, curriculum_shards 1.21, dedup_index_stream 0.95,
-    # dedup_pair_recall 1.13, exact_dedup 1.13, lexical_diversity 0.95,
-    # novelty_frac 0.77, oov_annotate 1.09, oov_rate 1.14, pmi_bigrams
-    # 1.18, quality_calibrate 1.18, soft_dedup_sample 1.11,
-    # soft_dedup_weights 1.25, tokenizer_train_envelope 1.03,
-    # unigram_pipeline 1.21, write_ordered 1.20, write_sharded 1.22.
-    # The pack-family names (pack/roundtrip/unpack/... 0.94-1.16) also
-    # qualify on the numbers but stay FULL per the standing headline
-    # rule above — the vs-baseline gate rides on their cross-JVM
-    # medians. Still FULL: r11-flagged movers (knn_label 2.44,
-    # knn_label_ann 3.02, embedding_drift 1.89, mmr_per_query 2.07,
-    # cluster_purity 2.17, diversity_sample 2.20, promote_sum 1.76,
-    # bm25_index 1.30, decontaminate_fraction 1.32, embedding_outliers
-    # 1.48, encoding_quality 1.63, mmr_diversity_eval 0.77x after a
-    # flagged r10, write_curriculum 1.44, write_zordered 1.46),
-    # code-touched char_entropy (rewritten r11 — needs two seals at the
-    # new code), and the r11-new robust_dedup / ref_dedup_robust /
-    # mmr_retrieval_eval (one seal each).
-    "bm25_route", "containment_keepset", "containment_pairs",
-    "curriculum_shards", "dedup_index_stream", "dedup_pair_recall",
-    "exact_dedup", "lexical_diversity", "novelty_frac", "oov_annotate",
-    "oov_rate", "pmi_bigrams", "quality_calibrate", "soft_dedup_sample",
-    "soft_dedup_weights", "tokenizer_train_envelope", "unigram_pipeline",
-    "write_ordered", "write_sharded",
-})
-
-
-def _make_bench(spark, timings, peaks, errors, runs_out=None,
-                child_idx=0, n_children=1):
-    """Build the per-query measurement closure: warmup runs, then
-    median-of-N, with a per-query JVM peak-RSS watermark reset.
-
-    Multi-child seal protocol: when the parent spawns ``n_children``
-    fresh JVMs per group, SPOT queries (stable paths, see SEAL_SPOT)
-    run only in child 0 with the classic in-JVM median-of-3, while
-    FULL queries run once per child — the parent takes the median
-    across the children's single runs."""
-    warmup = int(os.environ.get("SPARK_GRAFT_WARMUP", "1"))
-    repeat_default = int(os.environ.get("SPARK_GRAFT_REPEAT", "3"))
+def _make_bench(spark, timings, peaks, errors, runs_out):
+    """Build the per-query measurement closure: WARMUP runs, then the
+    median of REPEAT timed runs, with a per-query JVM peak-RSS watermark
+    reset. The timed runs land in ``runs_out``."""
     jvm_pid = _find_jvm_pid()
 
     def bench(name: str, fn) -> None:
-        if child_idx > 0 and name in SEAL_SPOT:
-            return  # spot queries measure in child 0 only
-        repeat = (
-            repeat_default
-            if (n_children <= 1 or name in SEAL_SPOT)
-            else 1
-        )
         # Per-query failure isolation: one broken query must not zero the
         # whole round's bench evidence — record the error and keep going.
         try:
-            for _ in range(warmup):
+            for _ in range(WARMUP):
                 fn()
             if jvm_pid is not None:
                 # Release retained heap first so the per-query watermark
@@ -340,15 +245,14 @@ def _make_bench(spark, timings, peaks, errors, runs_out=None,
                     pass
                 _reset_peak_rss(jvm_pid)
             runs = []
-            for _ in range(repeat):
+            for _ in range(REPEAT):
                 start = time.perf_counter()
                 fn()
                 runs.append(time.perf_counter() - start)
         except Exception as e:  # noqa: BLE001
             errors[name] = f"{type(e).__name__}: {e}"[:500]
             return
-        if runs_out is not None:
-            runs_out[name] = [round(r, 4) for r in runs]
+        runs_out[name] = [round(r, 4) for r in runs]
         runs.sort()
         timings[name] = round(runs[len(runs) // 2], 3)
         if jvm_pid is not None:
@@ -487,6 +391,15 @@ def _group_pack(spark, sf_dir: str, bench) -> None:
     flat.unpersist()
 
 
+_group_pack.names = (
+    "pack", "pack_no_child_order", "pack_streaming", "pack_streaming_bounded",
+    "pack_split_join", "pack_parent_heavy", "pack_parent_heavy_aggregate",
+    "pack_split_join_parent_heavy", "pack_parent_dominant",
+    "pack_split_join_parent_dominant", "unpack", "roundtrip",
+    "pack_deep_4level",
+)
+
+
 def _supplier_lineitem_spec():
     from polars_nexpresso_spark import HierarchySpec, LevelSpec
 
@@ -590,7 +503,7 @@ def _registry_group(names: tuple[str, ...]):
                 q = QUERIES[name]
                 bench(name, lambda q=q: force(q(spark, sf_dir)))
 
-    run.names = names  # seal protocol: parent checks for FULL queries
+    run.names = names
     return run
 
 
@@ -700,11 +613,7 @@ def _group_io_write(spark, sf_dir: str, bench) -> dict:
                 pass
             extras[name] = rec
         try:
-            # Guard on the path existing: SPOT-promoted writers run in
-            # child 0 only, so children 1+ never materialize their
-            # dirs — the span read would PATH_NOT_FOUND (r12). main()
-            # merges extras per key across children, so child 0's
-            # span_frac survives.
+            # A writer that failed left no dir to read spans from.
             if Path(paths["write_zordered"]).exists():
                 extras["write_zordered"]["span_frac"] = {
                     "l_orderkey": _span_frac(
@@ -727,6 +636,11 @@ def _group_io_write(spark, sf_dir: str, bench) -> dict:
         return extras
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+_group_io_write.names = (
+    "write_sharded", "write_ordered", "write_zordered", "write_curriculum",
+)
 
 
 # Group membership is subsystem-shaped; every name except the pack-family
@@ -1050,14 +964,10 @@ def _scale_probe(
         fn()
         return round(time.perf_counter() - start, 3)
 
-    warmup = int(os.environ.get("SPARK_GRAFT_WARMUP", "1"))
-
     def _big_time(name: str, fn) -> float | None:
         # The group medians are fresh-JVM warm medians; reuse them as the
-        # big-side time. Under SPARK_GRAFT_WARMUP=0 (quick local runs)
-        # those medians include first-run codegen and would corrupt the
-        # exponent — re-measure warm, as when a group child failed.
-        t = timings.get(name) if warmup >= 1 else None
+        # big-side time. Re-measure warm when a group child failed.
+        t = timings.get(name)
         if t is not None:
             return t
         try:
@@ -1230,8 +1140,8 @@ def _scale_probe(
         # first(payload) per key map-side, so the shuffle carries
         # ~keys x partitions payloads — not x children — which is
         # the very dedup split_join exists to do by hand in the
-        # reference's engine. See split_join_analysis in the
-        # details sidecar.
+        # reference's engine. See docs/benchmarks.md, "Why the
+        # parent-dominant ratio plateaus".
         from polars_nexpresso_spark import HierarchySpec, LevelSpec
 
         img_spec = HierarchySpec.from_levels(
@@ -1293,13 +1203,7 @@ def _scale_probe(
 # ---------------------------------------------------------------------------
 
 
-def _run_child_group(
-    group: str,
-    sf_dir: str,
-    timings_path: str | None,
-    child_idx: int = 0,
-    n_children: int = 1,
-) -> None:
+def _run_child_group(group: str, sf_dir: str, timings_path: str | None) -> None:
     """Child mode: run ONE group in this fresh JVM, print a JSON line."""
     spark = get_spark(app_name=f"pns-bench-{group}")
     spark.sparkContext.setLogLevel("ERROR")
@@ -1308,10 +1212,7 @@ def _run_child_group(
     errors: dict[str, str] = {}
     extras: dict = {}
     runs: dict[str, list[float]] = {}
-    bench = _make_bench(
-        spark, timings, peaks, errors, runs_out=runs,
-        child_idx=child_idx, n_children=n_children,
-    )
+    bench = _make_bench(spark, timings, peaks, errors, runs)
     # Group-level catch: a failure in a runner's SETUP (not inside a
     # bench()-measured query) must still emit this child's JSON line —
     # otherwise every already-measured median in the group is lost.
@@ -1333,7 +1234,6 @@ def _run_child_group(
         errors[f"group_{group}"] = f"{type(e).__name__}: {e}"[:500]
     print(json.dumps({
         "group": group,
-        "timings": timings,
         "peaks": peaks,
         "errors": errors,
         "extras": extras,
@@ -1341,17 +1241,8 @@ def _run_child_group(
     }))
 
 
-def _spawn_group(
-    group: str,
-    sf_dir: str,
-    timings_path: str | None = None,
-    child_idx: int = 0,
-    n_children: int = 1,
-) -> dict:
-    cmd = [
-        sys.executable, __file__, "--group", group,
-        "--child-idx", str(child_idx), "--n-children", str(n_children),
-    ]
+def _spawn_group(group: str, sf_dir: str, timings_path: str | None = None) -> dict:
+    cmd = [sys.executable, __file__, "--group", group]
     if timings_path:
         cmd += ["--timings", timings_path]
     try:
@@ -1359,7 +1250,7 @@ def _spawn_group(
             cmd,
             capture_output=True,
             text=True,
-            timeout=int(os.environ.get("SPARK_GRAFT_GROUP_TIMEOUT", "2400")),
+            timeout=GROUP_TIMEOUT_SEC,
             env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
         )
     except subprocess.TimeoutExpired:
@@ -1375,46 +1266,6 @@ def _spawn_group(
         "group": group,
         "errors": {group: (proc.stderr or "no output").strip()[-400:]},
     }
-
-
-# ---------------------------------------------------------------------------
-# Gate-instrument hardening (round 13, VERDICT r12 item 1). The r12 driver
-# record breached the 2x pack gate (3.078 s = 2.04x vs BASELINE.md 1.51 s)
-# on an engine the interleaved A/B proved bit-identical in speed to its r9
-# self (current/r9 = 1.008, docs/benchmarks.md "Round-12 pack-drift
-# adjudication") — the same-day host oscillates between ~2.6 s and ~3.9 s
-# regimes within hours, so a single median-of-3 in one host window is a
-# lottery ticket. Two instrument fixes, both pinned by
-# tests/test_bench_instrument.py:
-#   (a) the headline line now carries per-query `queries_min` (min across
-#       the fresh-JVM children) next to the median — the min samples the
-#       fast host regime, so the driver record itself contains the number
-#       that adjudicates a host window;
-#   (b) when the pack group's cross-JVM median lands in a suspect window
-#       (>1.5x the committed seal, or within 5% of the 2x-vs-baseline
-#       gate), bench.py AUTO-RERUNS the pack group in fresh JVMs — the
-#       same-day re-seal protocol the r12 builder executed by hand
-#       (first-seal 3.196 -> re-seal 2.77) — and adopts the per-query min
-#       of the two medians, recording first/reseal/adopted in the
-#       headline's `pack_reseal` field so the driver record
-#       self-adjudicates instead of shipping one host window's draw.
-PACK_BASELINE_SEC = 1.51  # BASELINE.md pack (reference benchmarks/README.md:125)
-
-
-def _pack_reseal_trigger(
-    pack_median: float | None,
-    sealed_pack: float | None,
-    baseline: float = PACK_BASELINE_SEC,
-) -> bool:
-    """True when the pack median is in a suspect host window: >1.5x the
-    committed seal's pack (the r12 chunk_documents standard for
-    driver-vs-seal disagreement), or at >=1.9x baseline (within 5% of
-    the 2x gate — breach-imminent even if the seal itself drifted)."""
-    if pack_median is None:
-        return False
-    if sealed_pack and pack_median > 1.5 * float(sealed_pack):
-        return True
-    return pack_median > 1.9 * baseline
 
 
 # Code whose behavior the sealed ann_recall_at_k / scale_probe grids in
@@ -1473,7 +1324,12 @@ def _carry_sealed_grids(
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
-    isolated = os.environ.get("SPARK_GRAFT_ISOLATED", "1") != "0"
+    only = os.environ.get("SPARK_GRAFT_GROUPS")  # comma-separated subset
+    # The ANN dial grid (~20 cells x warm+timed runs) and the scale-probe
+    # sweep only run on request: a default run must reach the RSS probes
+    # inside its deadline. Default runs carry the committed grids forward.
+    seal_extras = os.environ.get("SPARK_GRAFT_SEAL_EXTRAS", "0") == "1"
+    deadline = float(os.environ.get("SPARK_GRAFT_BENCH_DEADLINE", "3000"))
 
     timings: dict[str, float] = {}
     peaks: dict[str, float] = {}
@@ -1482,262 +1338,94 @@ def main() -> None:
     scale_probe: dict[str, dict] = {}
     query_stats: dict[str, dict] = {}
     io_write_extras: dict[str, dict] = {}
-    run_scale = os.environ.get("SPARK_GRAFT_SCALE_PROBE", "1") != "0"
     rss_isolated: dict[str, float] = {}
-    rss_attempted = False
-    # Committed seal, read BEFORE this run can overwrite it: the pack
-    # auto-reseal trigger compares against its pack median, and default
-    # runs carry its sealed grids forward (r13 instrument hardening).
+    # Committed seal, read BEFORE this run can overwrite it: default runs
+    # carry its sealed grids forward.
     prev_seal: dict | None = None
     try:
         prev_seal = json.loads((REPO / "BENCH_DETAILS.json").read_text())
     except (OSError, json.JSONDecodeError):
         prev_seal = None
-    sealed_pack_prev = (prev_seal or {}).get("queries", {}).get("pack")
-    pack_reseal: dict = {}
-    # The ANN dial grid (~20 cells x warm+timed runs) and the 54-query
-    # scale-probe sweep are BUILDER-SEAL-ONLY stages since round 12
-    # (VERDICT r11 item 2): the driver's 3000 s budget could no longer
-    # fit the 132-query suite plus both sweeps plus the RSS probes, so
-    # its record kept losing the RSS telemetry — the judge-priority
-    # artifact. The builder's sealed run sets SPARK_GRAFT_SEAL_EXTRAS=1
-    # (deadline 5400 s) and commits the grids in BENCH_DETAILS.json;
-    # the driver's default run skips them and always reaches RSS.
-    seal_extras = os.environ.get("SPARK_GRAFT_SEAL_EXTRAS", "0") == "1"
 
-    if isolated:
-        # ONE fresh JVM per group: per-query numbers no longer depend on
-        # what ran before them in a shared session, so the committed seal
-        # and the driver's own run converge (r07 verdict item 2).
-        #
-        # The run is TRUNCATION-SAFE: a cumulative partial headline line
-        # prints after every group (the driver keeps a tail of stdout and
-        # parses the LAST headline, so a kill mid-run still leaves a
-        # parseable artifact covering everything completed), and the
-        # optional probe stages are skipped past SPARK_GRAFT_BENCH_DEADLINE
-        # seconds so the final full headline still gets emitted under an
-        # outer timeout.
-        bench_start = time.monotonic()
-        deadline = float(
-            os.environ.get("SPARK_GRAFT_BENCH_DEADLINE", "3000")
+    # The run is TRUNCATION-SAFE: a cumulative partial headline line
+    # prints after every group (a reader that keeps a tail of stdout
+    # parses the LAST headline, so a kill mid-run still leaves a parseable
+    # record of everything completed), and the optional post-group stages
+    # are skipped past the deadline so the final headline still gets
+    # emitted under an outer timeout.
+    bench_start = time.monotonic()
+
+    def _total() -> float:
+        # The engine's fast paths; the slow memory modes' per-query
+        # numbers stay in the JSON.
+        return round(
+            sum(v for k, v in timings.items() if k not in SLOW_MODES), 3
         )
 
-        def _emit_partial(stage: str) -> None:
-            slow = {"pack_streaming_bounded", "pack_heap_capped"}
-            print(json.dumps({
-                "metric": "pns_bench_total",
-                "partial": True,
-                "after_stage": stage,
-                "value": round(
-                    sum(v for k, v in timings.items() if k not in slow), 3
-                ),
-                "unit": "sec",
-                "queries": timings,
-                "errors": errors,
-                "sf": sf,
-            }), flush=True)
+    def _emit_partial(stage: str) -> None:
+        print(json.dumps({
+            "metric": "pns_bench_total",
+            "partial": True,
+            "after_stage": stage,
+            "value": _total(),
+            "unit": "sec",
+            "queries": timings,
+            "errors": errors,
+            "sf": sf,
+        }), flush=True)
 
-        def _over_deadline(stage: str) -> bool:
-            if time.monotonic() - bench_start <= deadline:
-                return False
-            errors[f"skipped_{stage}"] = (
-                f"bench deadline {deadline:.0f}s exceeded at "
-                f"{time.monotonic() - bench_start:.0f}s"
-            )
-            return True
+    def _over_deadline(stage: str) -> bool:
+        if time.monotonic() - bench_start <= deadline:
+            return False
+        errors[f"skipped_{stage}"] = (
+            f"bench deadline {deadline:.0f}s exceeded at "
+            f"{time.monotonic() - bench_start:.0f}s"
+        )
+        return True
 
-        only = os.environ.get("SPARK_GRAFT_GROUPS")  # testing escape hatch
-        seal_runs = max(1, int(os.environ.get("SPARK_GRAFT_SEAL_RUNS", "3")))
-
-        def _run_group_children(
-            group: str, n_children: int
-        ) -> dict[str, list[float]]:
-            """Spawn the group's fresh-JVM children and merge their runs."""
-            group_runs: dict[str, list[float]] = {}
-            for cidx in range(n_children):
-                rec = _spawn_group(
-                    group, sf_dir, child_idx=cidx, n_children=n_children
-                )
-                # Merge per key: SPOT-promoted writers materialize (and
-                # compute span_frac) in child 0 only, so a last-child-
-                # wins assignment would drop them (r12).
-                for wq, rec_w in rec.get("extras", {}).get(
-                    "io_write", {}
-                ).items():
-                    merged = io_write_extras.setdefault(wq, {})
-                    for wk, wv in rec_w.items():
-                        merged.setdefault(wk, wv)
-                for qname, rlist in rec.get("runs", {}).items():
-                    group_runs.setdefault(qname, []).extend(rlist)
-                for qname, pk in rec.get("peaks", {}).items():
-                    peaks[qname] = max(peaks.get(qname, 0.0), pk)
-                errors.update(rec.get("errors", {}))
-                # fall back to the child's own medians for queries that
-                # reported a timing but (older child) no runs list
-                for qname, tv in rec.get("timings", {}).items():
-                    group_runs.setdefault(qname, [tv])
-            return group_runs
-
-        def _seal(group_runs: dict[str, list[float]], n_children: int,
-                  suffix: str = "") -> None:
-            for qname, rlist in group_runs.items():
-                rlist.sort()
-                timings[qname] = round(rlist[len(rlist) // 2], 3)
-                query_stats[qname] = {
-                    "median": round(rlist[len(rlist) // 2], 3),
-                    "min": round(rlist[0], 3),
-                    "max": round(rlist[-1], 3),
-                    "runs": rlist,
-                    "protocol": (
-                        "spot_1jvm" if qname in SEAL_SPOT
-                        else f"full_{n_children}jvm"
-                    ) + suffix,
-                }
-
-        for group in GROUPS:
-            if only and group not in only.split(","):
-                continue
-            # SEAL_SPOT-only groups need no extra children (children > 0
-            # would measure nothing); groups with at least one FULL query
-            # spawn seal_runs fresh JVMs and the medians cross children.
-            names = getattr(GROUPS[group], "names", None)
-            has_full = (
-                True if names is None
-                else any(n not in SEAL_SPOT for n in names)
-            )
-            n_children = seal_runs if has_full else 1
-            group_runs = _run_group_children(group, n_children)
-            _seal(group_runs, n_children)
-            # Auto-reseal (see _pack_reseal_trigger): when the gate-bearing
-            # pack median samples a suspect host window, rerun the whole
-            # pack group in fresh JVMs and adopt the per-query min of the
-            # two medians — the by-hand r12 protocol, now in the
-            # instrument so the DRIVER record self-adjudicates.
-            if (
-                group == "pack"
-                and abs(sf - 0.1) < 1e-9  # thresholds are gate-SF absolute
-                and os.environ.get("SPARK_GRAFT_PACK_RESEAL", "1") != "0"
-                and _pack_reseal_trigger(timings.get("pack"), sealed_pack_prev)
-                and not _over_deadline("pack_reseal")
-            ):
-                first_medians = {
-                    q: timings[q] for q in group_runs if q in timings
-                }
-                reseal_runs = _run_group_children("pack", n_children)
-                merged_runs = {
-                    q: sorted(group_runs.get(q, []) + r)
-                    for q, r in reseal_runs.items()
-                }
-                _seal(merged_runs, n_children, suffix="+reseal")
-                adopted: dict[str, float] = {}
-                for q, rlist in reseal_runs.items():
-                    rlist = sorted(rlist)
-                    reseal_med = round(rlist[len(rlist) // 2], 3)
-                    first = first_medians.get(q, reseal_med)
-                    adopted[q] = min(first, reseal_med)
-                    timings[q] = adopted[q]
-                    if q in query_stats:
-                        query_stats[q]["median"] = adopted[q]
-                pack_reseal = {
-                    "triggered": True,
-                    "trigger": {
-                        "pack_first_median": first_medians.get("pack"),
-                        "sealed_pack_ref": sealed_pack_prev,
-                        "rule": "pack > 1.5x committed seal or > 1.9x "
-                        f"baseline ({PACK_BASELINE_SEC}s)",
-                    },
-                    "first": first_medians,
-                    "reseal": {
-                        q: round(sorted(r)[len(r) // 2], 3)
-                        for q, r in reseal_runs.items()
-                    },
-                    "adopted": adopted,
-                    "policy": "min(first_median, reseal_median) per "
-                    "pack-group query — the min samples the fast host "
-                    "regime the A/B adjudication proved is the engine's "
-                    "real speed",
-                }
-            _emit_partial(group)
-        # children report rows/s from their own single run; re-derive it
-        # from the sealed cross-JVM median so the two numbers agree
-        for qname, rec_w in io_write_extras.items():
-            t = timings.get(qname)
-            if t and rec_w.get("rows"):
-                rec_w["rows_per_sec"] = int(rec_w["rows"] / t)
-        # RSS first among the post-group stages: it is the telemetry the
-        # judge grades (bounded_rss_ratio vs BASELINE.md), so it must
-        # land even when a slow host eats the remaining budget.
-        if os.environ.get("SPARK_GRAFT_RSS_ISOLATED", "1") != "0" and (
-            not _over_deadline("rss_isolated")
-        ):
-            rss_attempted = True
-            try:
-                rss_isolated, probe_secs = _isolated_rss(sf_dir)
-                # Single-shot capped-heap time (no warm median exists).
-                if "pack_heap_capped" in probe_secs:
-                    timings["pack_heap_capped"] = probe_secs[
-                        "pack_heap_capped"
-                    ]
-            except Exception:  # noqa: BLE001 — bench must emit its line
-                rss_isolated = {}
-        else:
-            rss_attempted = True  # explicitly disabled or out of budget
-        if seal_extras and not _over_deadline("ann_dial"):
-            rec = _spawn_group("ann_dial", sf_dir)
-            ann_dial = rec.get("extras", {}).get("ann_recall_at_k", {})
-            errors.update(rec.get("errors", {}))
-        if seal_extras and run_scale and not _over_deadline("scale_probe"):
-            with tempfile.NamedTemporaryFile(
-                "w", suffix=".json", delete=False
-            ) as tf:
-                json.dump(timings, tf)
-                timings_path = tf.name
-            rec = _spawn_group("scale_probe", sf_dir, timings_path)
-            scale_probe = rec.get("extras", {}).get("scale_probe", {})
-            errors.update(rec.get("errors", {}))
-            os.unlink(timings_path)
-    else:
-        spark = get_spark(app_name="pns-bench")
-        spark.sparkContext.setLogLevel("ERROR")
-        bench = _make_bench(spark, timings, peaks, errors)
-        only = os.environ.get("SPARK_GRAFT_GROUPS")  # testing escape hatch
-        for group, runner in GROUPS.items():
-            if only and group not in only.split(","):
-                continue
-            try:
-                out = runner(spark, sf_dir, bench)
-                if group == "io_write" and out:
-                    io_write_extras = out
-            except Exception as e:  # noqa: BLE001
-                errors[group] = f"{type(e).__name__}: {e}"[:500]
-        if seal_extras and not only:
-            ann_dial = _ann_dial(spark, sf_dir, errors)
-            if run_scale:
-                scale_probe = _scale_probe(spark, sf_dir, timings, errors)
-
-    # Headline total = the engine's fast paths. Deliberately-slower memory
-    # modes (bounded bucket loop, capped-heap probe) are benched for their
-    # ratio rows but excluded from the round-over-round total; their
-    # per-query numbers stay in the JSON.
-    slow_modes = {"pack_streaming_bounded", "pack_heap_capped"}
-    total = round(
-        sum(v for k, v in timings.items() if k not in slow_modes), 3
-    )
-
-    # Fresh-process peak RSS for the memory-bounded mode (reference
-    # methodology); warm-JVM watermarks can't isolate it. The isolated
-    # path already ran this (before the optional seal-extra stages);
-    # this covers the shared-session path.
-    if not rss_attempted and os.environ.get(
-        "SPARK_GRAFT_RSS_ISOLATED", "1"
-    ) != "0":
+    for group in GROUPS:
+        if only and group not in only.split(","):
+            continue
+        rec = _spawn_group(group, sf_dir)
+        io_write_extras.update(rec.get("extras", {}).get("io_write", {}))
+        peaks.update(rec.get("peaks", {}))
+        errors.update(rec.get("errors", {}))
+        for qname, rlist in rec.get("runs", {}).items():
+            rlist = sorted(rlist)
+            timings[qname] = round(rlist[len(rlist) // 2], 3)
+            query_stats[qname] = {
+                "median": timings[qname],
+                "min": round(rlist[0], 3),
+                "max": round(rlist[-1], 3),
+                "runs": rlist,
+            }
+        _emit_partial(group)
+    # RSS first among the post-group stages: bounded_rss_ratio is the
+    # headline memory claim, so it must land even when a slow host eats
+    # the remaining budget. Fresh-process peak RSS per op (the reference
+    # methodology); warm-JVM watermarks cannot isolate it.
+    if not only and not _over_deadline("rss_isolated"):
         try:
             rss_isolated, probe_secs = _isolated_rss(sf_dir)
-            # Single-shot capped-heap time (no warm median exists for it).
+            # Single-shot capped-heap time (no warm median exists).
             if "pack_heap_capped" in probe_secs:
                 timings["pack_heap_capped"] = probe_secs["pack_heap_capped"]
-        except Exception:  # noqa: BLE001 — bench must still emit its line
+        except Exception:  # noqa: BLE001 — bench must emit its line
             rss_isolated = {}
+    if seal_extras and not _over_deadline("ann_dial"):
+        rec = _spawn_group("ann_dial", sf_dir)
+        ann_dial = rec.get("extras", {}).get("ann_recall_at_k", {})
+        errors.update(rec.get("errors", {}))
+    if seal_extras and not _over_deadline("scale_probe"):
+        with tempfile.NamedTemporaryFile(
+            "w", suffix=".json", delete=False
+        ) as tf:
+            json.dump(timings, tf)
+            timings_path = tf.name
+        rec = _spawn_group("scale_probe", sf_dir, timings_path)
+        scale_probe = rec.get("extras", {}).get("scale_probe", {})
+        errors.update(rec.get("errors", {}))
+        os.unlink(timings_path)
 
     # The headline memory-bounding claim (BASELINE.md band 0.42-0.50x):
     # the SAME one-shot pack completes under a hard 800 MB driver heap by
@@ -1783,7 +1471,7 @@ def main() -> None:
             )
 
     # Sign fresh sealed grids with the code hash; otherwise carry the
-    # committed grids forward, flagging staleness (r13, ADVICE r12 item 3).
+    # committed grids forward, flagging staleness.
     grid_hash = _grid_code_hash()
     if ann_dial or scale_probe:
         grids_meta: dict = {"code_hash": grid_hash, "sealed_extras": True}
@@ -1796,21 +1484,16 @@ def main() -> None:
 
     headline = {
         "metric": "pns_bench_total",
-        "value": total,
+        "value": _total(),
         "unit": "sec",
         "queries": timings,
-        # min across the fresh-JVM children (equals the in-JVM min for
-        # SPOT queries): the fast-host-regime sample that adjudicates a
-        # suspect median without leaving the driver record (r13).
-        "queries_min": {
-            q: s["min"] for q, s in query_stats.items() if "min" in s
-        },
-        **({"pack_reseal": pack_reseal} if pack_reseal else {}),
-        "total_excludes": sorted(slow_modes & set(timings)),
+        # Per-query min of the timed runs: the fast-host-regime sample
+        # that adjudicates a suspect median without leaving the record.
+        "queries_min": {q: s["min"] for q, s in query_stats.items()},
+        "total_excludes": sorted(SLOW_MODES & set(timings)),
         "bounded_rss_ratio": bounded_rss.get(
             "ratio_4x", bounded_rss.get("ratio")
         ),
-        "isolated": isolated,
         "sf": sf,
     }
     details = {
@@ -1824,102 +1507,42 @@ def main() -> None:
         # that re-published the committed seal's grids (staleness, if
         # any, is in errors["stale_sealed_grids"]).
         "sealed_grids_meta": grids_meta,
-        "pack_reseal": pack_reseal,
         "bounded_rss": bounded_rss,
-        # Round 9 (VERDICT r08 items 2+7): per-query median/min/max with
-        # the raw runs. FULL queries (headline pack family, new/touched
-        # paths, past seal-flag minters) run once in EACH of 3 fresh JVMs
-        # — the median crosses JVMs, so one JVM's JIT/ordering state can
-        # no longer mint a >=1.3x flag. SPOT queries (stable across the
-        # r7+r8 seals within the 1.3x band, untouched paths) keep the r8
-        # one-JVM median-of-3, holding total wall-clock at the r8 level
-        # despite the 3x protocol; the SEAL_SPOT set and its promotion
-        # rule live next to its definition in bench.py.
+        # Per-query median/min/max with the raw timed runs.
         "query_stats": query_stats,
-        # Write-path visibility (VERDICT r09 item 5): rows/s, files
-        # written, and the z-order both-column file-span locality for
-        # the four materializing writers; timings ride `queries`.
+        # Write-path visibility: rows/s, files written, and the z-order
+        # both-column file-span locality for the four materializing
+        # writers; timings ride `queries`.
         "io_write": io_write_extras,
-        # Since round 8 the DEFAULT protocol is fresh-JVM-per-group
-        # (1 warmup + median-of-3 inside each child), closing the r07
-        # seal-vs-driver gap: rounds 5-7 kept flagging rotating sets of
-        # untouched queries because shared-session numbers swing ±25%
-        # with run ordering / JIT warmth (r07: four consecutive runs,
-        # comparable-subset totals 0.96x-1.24x, flag sets fully rotated;
-        # isolated pack_split_join median 1.057s vs shared readings
-        # 1.41-1.86s). Per-query fresh-JVM re-isolation
-        # (scripts/isolate_query.py) remains the protocol for any delta
-        # that still looks real across rounds.
         "protocol": {
-            "mode": "isolated" if isolated else "shared-session",
-            "unit": "fresh python+JVM children per group; FULL queries: "
-            "1 warmup + 1 run in each of SPARK_GRAFT_SEAL_RUNS (3) "
-            "children, median across children; SPOT queries "
-            "(SEAL_SPOT): 1 warmup + median-of-3 in child 0 only",
+            "unit": f"one fresh python+JVM child per group; {WARMUP} "
+            f"warm-up, then the median of {REPEAT} timed runs per query; "
+            "pack_heap_capped is the single-shot capped RSS probe",
             "seal_extras": (
                 "ran (SPARK_GRAFT_SEAL_EXTRAS=1)" if seal_extras
-                else "skipped: ann_recall_at_k + scale_probe are "
-                "builder-seal-only stages since r12 so the default-"
-                "budget run always reaches the RSS probes; the sealed "
-                "grids live in the committed BENCH_DETAILS.json"
+                else "skipped: ann_recall_at_k + scale_probe run only "
+                "on request so a default run always reaches the RSS "
+                "probes; the sealed grids live in the committed "
+                "BENCH_DETAILS.json"
             ),
             "groups": {
-                g: sorted(n for n in timings if _group_of(g, n))
+                g: sorted(n for n in timings if n in GROUPS[g].names)
                 for g in GROUPS
             },
         },
-        # pack_heap_capped r05 anomaly (6.93->21.62s): re-probed in r06 3x
-        # fresh -> 5.54/5.57/5.88s at 944-997 MB RSS. The probe runs
-        # deliberately at the edge of its 800 MB cap, so a contended host
-        # tips it into GC churn — the r05 21.6s was one such transient.
-        "heap_capped_reprobe": {
-            "runs_sec": [5.544, 5.567, 5.876],
-            "peak_rss_mb": [944.5, 997.0, 978.2],
-            "verdict": "r05's 21.6s was host-contention GC churn at the "
-            "cap edge; current numbers beat r04 (6.93s)",
-        },
-        # Why the split_join parent-dominant ratio plateaus near 0.5-0.65x
-        # on Spark instead of approaching the reference's 0.11x — measured,
-        # round 5. (1) The 4x probe refutes the fixed-floor theory: both
-        # sides scale roughly with data, so amortization does not shrink
-        # the ratio. (2) The decisive experiment is the ref-shape probe
-        # (the reference's own 64-children/16384-px config, incompressible
-        # payload): plain pack ~= split_join there (ratio ~1), because
-        # Catalyst's PARTIAL aggregation already applies first(payload)
-        # per key map-side — the shuffle carries ~keys x partitions
-        # payload copies, not x children. That map-side payload dedup is
-        # exactly what the reference's split_join does by hand; on Spark
-        # the plain path subsumes it (same conclusion as pack_streaming
-        # vs the shuffle). (3) split_join still wins 0.5x at 1x / 0.65x
-        # at 4x on the supplier shape (600 children/parent, wide rows):
-        # there first() over heavy array attrs forces sort-based
-        # aggregation and the win is avoiding the wide in-partition sort,
-        # not shuffle volume. The remaining ratio is structural-pack +
-        # one dim payload scan — both data-proportional, both necessary.
-        "split_join_analysis": {
-            "supplier_shape_ratio": {"1x": "~0.50", "4x": "~0.65"},
-            "ref_shape_ratio": "~1.0 (plain pack already map-side-dedups "
-            "the payload via partial aggregation)",
-            "conclusion": "the reference's 0.11x measures its OWN plain "
-            "pack's pathology; Spark's plain pack does not exhibit it, "
-            "so the honest comparison is absolute seconds, where both "
-            "strategies beat the reference at like-for-like data shapes",
-        },
     }
-    # Full-fidelity sidecar, committed with the round evidence.
-    # SPARK_GRAFT_WRITE_DETAILS=0 keeps iteration runs (group subsets,
-    # shared-session mode) from clobbering the sealed round artifact.
-    if os.environ.get("SPARK_GRAFT_WRITE_DETAILS", "1") != "0":
+    # Full-fidelity sidecar, committed with the round evidence. A group
+    # subset run never overwrites it.
+    if not only:
         try:
             (REPO / "BENCH_DETAILS.json").write_text(
                 json.dumps({**headline, **details}, indent=2) + "\n"
             )
         except OSError:
             pass
-    # One JSON object per line, details first, compact headline LAST: the
-    # driver records a bounded tail of stdout, so whatever window it
-    # captures always ENDS with the parseable summary line (round 3's
-    # single giant line had its head — the headline fields — truncated).
+    # One JSON object per line, details first, compact headline LAST: a
+    # reader that keeps a bounded tail of stdout always captures the
+    # parseable summary line.
     for key in (
         "peak_rss_mb",
         "peak_rss_mb_isolated",
@@ -1927,64 +1550,21 @@ def main() -> None:
         "scale_probe",
         "ann_recall_at_k",
         "sealed_grids_meta",
-        "pack_reseal",
         "bounded_rss",
         "protocol",
-        "heap_capped_reprobe",
-        "split_join_analysis",
     ):
         print(json.dumps({"detail": key, key: details[key]}))
     print(json.dumps(headline))
 
 
-_GROUP_NAMES: dict[str, str] = {}
-
-
-def _group_of(group: str, name: str) -> bool:
-    if not _GROUP_NAMES:
-        for g, runner in GROUPS.items():
-            if hasattr(runner, "__closure__") and runner.__closure__:
-                for cell in runner.__closure__:
-                    if isinstance(cell.cell_contents, tuple):
-                        for n in cell.cell_contents:
-                            _GROUP_NAMES[n] = g
-        for n in (
-            "pack", "pack_no_child_order", "pack_streaming",
-            "pack_streaming_bounded", "pack_split_join", "pack_parent_heavy",
-            "pack_parent_heavy_aggregate", "pack_split_join_parent_heavy",
-            "pack_parent_dominant", "pack_split_join_parent_dominant",
-            "unpack", "roundtrip", "pack_deep_4level", "pack_heap_capped",
-        ):
-            _GROUP_NAMES[n] = "pack"
-    return _GROUP_NAMES.get(name) == group
-
-
 if __name__ == "__main__":
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if len(sys.argv) >= 3 and sys.argv[1] == "--rss-probe":
-        _rss_probe(
-            sys.argv[2],
-            os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-        )
+        _rss_probe(sys.argv[2], sf_dir)
     elif len(sys.argv) >= 3 and sys.argv[1] == "--group":
         tp = None
         if "--timings" in sys.argv:
             tp = sys.argv[sys.argv.index("--timings") + 1]
-        cidx = (
-            int(sys.argv[sys.argv.index("--child-idx") + 1])
-            if "--child-idx" in sys.argv
-            else 0
-        )
-        nch = (
-            int(sys.argv[sys.argv.index("--n-children") + 1])
-            if "--n-children" in sys.argv
-            else 1
-        )
-        _run_child_group(
-            sys.argv[2],
-            os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-            tp,
-            child_idx=cidx,
-            n_children=nch,
-        )
+        _run_child_group(sys.argv[2], sf_dir, tp)
     else:
         main()

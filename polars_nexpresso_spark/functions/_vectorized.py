@@ -71,46 +71,6 @@ def pandas_member_overlap(sorted_values):
     return overlaps
 
 
-def pandas_member_mask(sorted_values):
-    """UDF factory: per-ELEMENT membership mask — for a row's long-array
-    column, an array<boolean> marking which elements are in
-    ``sorted_values`` (sorted numpy int64, held in the closure). Same
-    flattened one-searchsorted-per-batch shape as
-    :func:`pandas_member_overlap`, but returning the element-wise mask
-    instead of a row-level any() — the broadcast boilerplate filter
-    needs to know WHICH lines hit. NULL arrays yield NULL."""
-    ref = np.asarray(sorted_values, dtype=np.int64)
-
-    @pandas_udf("array<boolean>")
-    def mask(arrs: pd.Series) -> pd.Series:
-        out: list = [None] * len(arrs)
-        rows = [
-            (i, np.asarray(hs, dtype=np.int64))
-            for i, hs in enumerate(arrs)
-            if hs is not None
-        ]
-        if ref.size == 0:
-            for i, a in rows:
-                out[i] = [False] * len(a)
-            return pd.Series(out)
-        nonempty = [(i, a) for i, a in rows if a.size > 0]
-        for i, a in rows:
-            if a.size == 0:
-                out[i] = []
-        if nonempty:
-            lens = np.array([a.size for _, a in nonempty])
-            flat = np.concatenate([a for _, a in nonempty])
-            idx = np.searchsorted(ref, flat)
-            idx[idx == ref.size] = ref.size - 1
-            hits = ref[idx] == flat
-            bounds = np.cumsum(lens)[:-1]
-            for (i, _), seg in zip(nonempty, np.split(hits, bounds)):
-                out[i] = seg.tolist()
-        return pd.Series(out)
-
-    return mask
-
-
 def pandas_keep_lines(boiler_lines):
     """UDF factory: filter a string-array column against a fixed line
     set (frozenset in the closure) — the large-set branch of

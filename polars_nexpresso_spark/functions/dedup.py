@@ -877,8 +877,6 @@ def remove_boilerplate_lines(
     min_docs: int | None = 3,
     min_doc_frac: float | None = None,
     delimiter: str = "\n",
-    strategy: str = "join",
-    max_broadcast_lines: int = 4_000_000,
 ) -> DataFrame:
     """Strip cross-corpus boilerplate LINES: any line whose exact text
     occurs in at least ``min_docs`` DISTINCT documents (or, with
@@ -912,17 +910,10 @@ def remove_boilerplate_lines(
     the text, down from the three full-text shuffles of a
     text-keyed-join + collect_list-reassembly plan. Documents whose
     every line is boilerplate survive with empty ``clean_text`` (left
-    join keeps every input row).
-
-    ``strategy="broadcast"`` goes further for the common case where the
-    surviving boilerplate set is small: the boiler hashes are collected
-    once into a sorted dictionary (guarded by ``max_broadcast_lines``)
-    and the removal becomes a stateless map-side array filter — ZERO
-    text movement, no explode, no reassembly; only the narrow counting
-    shuffle remains. Same rows either way (equivalence is pinned by
-    tests); the threshold computation itself needs the full corpus, so
-    for streams use :func:`remove_fixed_boilerplate` with a
-    precomputed line set.
+    join keeps every input row). When the boilerplate set is small,
+    AQE broadcasts it at runtime and the anti-join runs map-side. The
+    threshold computation itself needs the full corpus, so for streams
+    use :func:`remove_fixed_boilerplate` with a precomputed line set.
 
     Returns ``(id_col, clean_text, n_kept, n_removed)``.
     """
@@ -937,10 +928,6 @@ def remove_boilerplate_lines(
         raise ValueError(f"min_docs must be >= 1: {min_docs}")
     if not delimiter:
         raise ValueError("delimiter must be a non-empty literal string")
-    if strategy not in ("join", "broadcast"):
-        raise ValueError(
-            f"strategy must be 'join' or 'broadcast', got {strategy!r}"
-        )
     txt = F.coalesce(F.col(text_col), F.lit(""))
     split_lines = F.split(txt, _re.escape(delimiter))
     line_hashes = F.transform(split_lines, lambda s: F.xxhash64(s))
@@ -971,49 +958,6 @@ def remove_boilerplate_lines(
         split_lines.alias("__arr"),
         F.size(split_lines).cast("long").alias("__total"),
     )
-
-    if strategy == "broadcast":
-        import numpy as np
-
-        from polars_nexpresso_spark.functions._vectorized import (
-            pandas_member_mask,
-        )
-
-        # limit(cap+1) BEFORE collecting: the guard must fire from a
-        # bounded transfer, not after a pathological corpus's full hash
-        # table has already landed on the driver (same shape as
-        # remove_fixed_boilerplate's guard).
-        pdf = boiler.limit(max_broadcast_lines + 1).toPandas()
-        if len(pdf) > max_broadcast_lines:
-            raise ValueError(
-                f"boilerplate set exceeds "
-                f"max_broadcast_lines={max_broadcast_lines}; use "
-                "strategy='join' for boiler sets this large"
-            )
-        boiler_sorted = np.sort(pdf["__h"].to_numpy(dtype=np.int64))
-        # Same asNondeterministic plan pin as decontaminate_stream: keep
-        # the probe above upstream exchanges (the mask is pure).
-        mask_udf = pandas_member_mask(boiler_sorted).asNondeterministic()
-        masked = src.withColumn(
-            "__mask",
-            mask_udf(F.transform(F.col("__arr"), lambda s: F.xxhash64(s))),
-        )
-        kept_arr = F.filter(
-            F.zip_with(
-                F.col("__arr"),
-                F.col("__mask"),
-                lambda l, m: F.when(~m, l),
-            ),
-            lambda x: x.isNotNull(),
-        )
-        return masked.select(
-            id_col,
-            F.concat_ws(delimiter, kept_arr).alias("clean_text"),
-            F.size(kept_arr).cast("long").alias("n_kept"),
-            (F.col("__total") - F.size(kept_arr)).cast("long").alias(
-                "n_removed"
-            ),
-        )
 
     kept_pos = (
         exploded.join(boiler, on="__h", how="left_anti")
@@ -1496,7 +1440,6 @@ def dedup_against_reference(
     ref: DataFrame,
     text_col: str,
     *,
-    strategy: str = "join",
     canon: str = "exact",
 ) -> DataFrame:
     """Incremental-ingest dedup: drop rows of ``df`` whose normalized
@@ -1511,23 +1454,19 @@ def dedup_against_reference(
     NULL-text rows always survive (no content to match — pinned by
     keying the anti-join on a NULL fingerprint, which equals nothing).
 
-    Scale shapes (``strategy``):
-
-    - ``"join"`` (default): LEFT ANTI join on ``xxhash64`` of the
-      normalized text — the reference reduces to one distinct 8-byte
-      hash column (narrow partial-agg shuffle); the new batch shuffles
-      once keyed by the hash. Right at any reference size.
-    - ``"broadcast"``: the distinct reference hashes broadcast and the
-      anti-join is map-side — ZERO movement of the new batch. Right
-      when the reference fingerprint set fits executor memory (~8 bytes
-      x distinct docs; up to ~10^8 fingerprints). For streams use
-      :func:`dedup_against_reference_stream`, which adds an explicit
-      size guard and needs no join at all.
+    Scale shape: LEFT ANTI join on ``xxhash64`` of the normalized text
+    — the reference reduces to one distinct 8-byte hash column (narrow
+    partial-agg shuffle). When Catalyst knows the reference is small
+    (e.g. it was read from storage), it broadcasts the fingerprint set:
+    the anti-join is map-side and the new batch does not move. When the
+    size is unknown, AQE switches to the same broadcast at runtime,
+    after the new batch's shuffle stage; a large reference makes the new
+    batch shuffle once, keyed by the hash. For streams use
+    :func:`dedup_against_reference_stream`, which adds an explicit size
+    guard and needs no join at all.
 
     Returns surviving ``df`` rows, schema unchanged.
     """
-    if strategy not in ("join", "broadcast"):
-        raise ValueError(f"unknown strategy: {strategy!r}")
     if text_col not in df.columns or text_col not in ref.columns:
         raise ValueError(f"both frames need column {text_col!r}")
     basis = _ref_dedup_basis(canon)
@@ -1542,8 +1481,6 @@ def dedup_against_reference(
         .filter(F.col("__fp").isNotNull())
         .distinct()
     )
-    if strategy == "broadcast":
-        ref_fps = F.broadcast(ref_fps)
     return (
         df.withColumn("__fp", fp(F.col(text_col)))
         .join(ref_fps, on="__fp", how="left_anti")

@@ -638,19 +638,23 @@ def lsh_ann_topk(
     )
 
 
+# Widest embedding label_centroids aggregates with one column-indexed sum
+# per dimension; wider ones go through posexplode (same results).
+_MAX_EXPR_DIMS = 1024
+
+
 def label_centroids(
     df: DataFrame,
     *,
     vec_col: str = "embedding",
     label_col: str = "label",
     dim: int,
-    max_expr_dims: int = 1024,
 ) -> DataFrame:
     """Per-label embedding centroid (element-wise mean), one output row per
     ``(label, dim_idx)`` — the IVF-training / dataset-cartography building
     block.
 
-    Shape at scale: up to ``max_expr_dims`` dimensions, ``dim``
+    Shape at scale: up to ``_MAX_EXPR_DIMS`` dimensions, ``dim``
     column-indexed ``sum`` aggregates plus a count in ONE hash aggregation
     — partial aggregation happens map-side, so the shuffle carries
     ``n_labels × (dim + 1)`` doubles, not the corpus, and nothing is ever
@@ -664,7 +668,7 @@ def label_centroids(
     Rounded to 6 decimals as part of the contract (summation order differs
     between engines).
     """
-    if dim <= max_expr_dims:
+    if dim <= _MAX_EXPR_DIMS:
         # r13 (guide §3.3): each aggregate/mean is one parsed SQL string
         # instead of ~4 py4j Column calls — same GetArrayItem + cast +
         # sum tree, same round(sum/count, 6) arithmetic (Spark SQL `[]`
@@ -2459,7 +2463,6 @@ def embedding_drift(
     vec_col: str = "embedding",
     label_col: str = "label",
     dim: int,
-    max_expr_dims: int = 1024,
 ) -> DataFrame:
     """Distribution-drift report between two corpus slices in embedding
     space: per label, the cosine between the slices' centroids and the
@@ -2481,13 +2484,9 @@ def embedding_drift(
     cosine rounded to 6 (NULL when either centroid is the zero
     vector), shift (L2) rounded to 6.
     """
-    ca = label_centroids(
-        a, vec_col=vec_col, label_col=label_col, dim=dim,
-        max_expr_dims=max_expr_dims,
-    )
+    ca = label_centroids(a, vec_col=vec_col, label_col=label_col, dim=dim)
     cb = label_centroids(
-        b, vec_col=vec_col, label_col=label_col, dim=dim,
-        max_expr_dims=max_expr_dims,
+        b, vec_col=vec_col, label_col=label_col, dim=dim
     ).withColumnRenamed("centroid", "__cb")
     joined = ca.join(cb, on=["label", "dim"])
     stats = joined.groupBy("label").agg(

@@ -9,10 +9,10 @@ the full ``BENCH_DETAILS.json`` sidecar.
 
 Host noise between runs is roughly ±15% per query (docs/benchmarks.md),
 so the default flag threshold is 1.25x AND an absolute floor of 0.15 s —
-sub-150 ms queries are JVM-jitter territory regardless of ratio. Flagged
-rows are candidates for the fresh-JVM isolation protocol recorded in
-BENCH_DETAILS' ``regression_isolation`` (run each flagged query alone,
-warmup + median-of-3, before believing a shared-session delta).
+sub-150 ms queries are JVM-jitter territory regardless of ratio. Re-read
+a flagged row with ``scripts/ab_probe.py`` (the query alone in a fresh
+JVM, warm-up + median-of-3; ``--base`` for an interleaved A/B) before
+believing the delta.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Phase-split probe: where does a query's wall time go?
 
-One fresh python+JVM per query (the isolate_query protocol), splitting
+One fresh python+JVM per query (the ab_probe.py protocol), splitting
 each run into the three phases the optimization guide cares about:
 
 - construct: calling the registered query function (Python + py4j +

@@ -1,9 +1,9 @@
-"""Pins for the round-13 bench gate-instrument hardening (VERDICT r12
-item 1 + ADVICE r12 item 3). No SparkSession needed — these pin the pure
-decision logic bench.py's isolated runner calls:
+"""Pins for bench.py's measurement protocol and its sealed-grid
+provenance. No SparkSession needed:
 
-- ``_pack_reseal_trigger``: when does a pack median mint an automatic
-  same-run re-seal (the by-hand r12 protocol moved into the instrument)?
+- ``_make_bench``: every query gets WARMUP untimed runs, then REPEAT
+  timed runs whose median is its number.
+- bench.py reads exactly five ``SPARK_GRAFT_*`` settings.
 - ``_grid_code_hash`` / ``_carry_sealed_grids``: sealed ann/scale grids
   are signed with a code hash and carried forward by default runs, with
   staleness flagged instead of silently trusted or wiped.
@@ -12,6 +12,7 @@ decision logic bench.py's isolated runner calls:
 from __future__ import annotations
 
 import importlib.util
+import re
 import sys
 from pathlib import Path
 
@@ -28,33 +29,42 @@ def _bench():
     return mod
 
 
-class TestPackResealTrigger:
-    def test_r12_driver_breach_triggers(self):
-        # The exact r12 failure: driver pack 3.078 s vs committed seal
-        # 2.77 s — only 1.11x the seal, but 2.04x baseline (over the 2x
-        # gate). The baseline clause must catch it.
-        assert _bench()._pack_reseal_trigger(3.078, 2.77) is True
-
-    def test_seal_consistent_reading_is_quiet(self):
-        # The r12 committed seal itself (2.77 s = 1.83x baseline): inside
-        # the gate margin and 1.0x the seal — no reseal churn.
-        assert _bench()._pack_reseal_trigger(2.77, 2.77) is False
-
-    def test_seal_drift_clause(self):
-        # A reading >1.5x the committed seal triggers even when the
-        # absolute number is under the gate margin (a fast-seal regime
-        # makes the relative clause the sensitive one).
-        assert _bench()._pack_reseal_trigger(2.3, 1.5) is True
-        assert _bench()._pack_reseal_trigger(2.2, 1.5) is False
-
-    def test_no_seal_falls_back_to_baseline_margin(self):
+class TestProtocol:
+    def test_one_warmup_then_median_of_three(self, monkeypatch):
         b = _bench()
-        # 1.9x * 1.51 = 2.869
-        assert b._pack_reseal_trigger(2.87, None) is True
-        assert b._pack_reseal_trigger(2.86, None) is False
+        monkeypatch.setattr(b, "_find_jvm_pid", lambda: None)
+        calls = []
+        timings, peaks, errors, runs = {}, {}, {}, {}
+        bench = b._make_bench(None, timings, peaks, errors, runs)
+        bench("q", lambda: calls.append("q"))
+        bench("r", lambda: calls.append("r"))
+        assert calls == ["q"] * 4 + ["r"] * 4
+        assert {name: len(r) for name, r in runs.items()} == {"q": 3, "r": 3}
+        assert timings["q"] == sorted(runs["q"])[1]
+        assert not errors and not peaks
 
-    def test_missing_pack_median_is_quiet(self):
-        assert _bench()._pack_reseal_trigger(None, 2.77) is False
+    def test_failing_query_records_its_error(self, monkeypatch):
+        b = _bench()
+        monkeypatch.setattr(b, "_find_jvm_pid", lambda: None)
+        timings, errors, runs = {}, {}, {}
+        bench = b._make_bench(None, timings, {}, errors, runs)
+
+        def boom():
+            raise ValueError("bad input")
+
+        bench("q", boom)
+        assert errors == {"q": "ValueError: bad input"}
+        assert not timings and not runs
+
+    def test_reads_exactly_the_kept_settings(self):
+        names = set(re.findall(r"SPARK_GRAFT_\w+", (REPO / "bench.py").read_text()))
+        assert names == {
+            "SPARK_GRAFT_SF_DIR",
+            "SPARK_GRAFT_CPUS",
+            "SPARK_GRAFT_GROUPS",
+            "SPARK_GRAFT_SEAL_EXTRAS",
+            "SPARK_GRAFT_BENCH_DEADLINE",
+        }, sorted(names)
 
 
 class TestSealedGridProvenance:

@@ -269,16 +269,13 @@ def _new_and_ref(spark):
 
 def test_dedup_against_reference_content_level(spark):
     new, ref = _new_and_ref(spark)
-    for strategy in ("join", "broadcast"):
-        kept = {
-            r["doc_id"]
-            for r in dedup_against_reference(
-                new, ref, "text", strategy=strategy
-            ).collect()
-        }
-        # 2 drops as a normalization variant, 5 as an exact copy;
-        # NULL text always survives (even with NULL text in the ref).
-        assert kept == {1, 3, 4}, strategy
+    kept = {
+        r["doc_id"]
+        for r in dedup_against_reference(new, ref, "text").collect()
+    }
+    # 2 drops as a normalization variant, 5 as an exact copy;
+    # NULL text always survives (even with NULL text in the ref).
+    assert kept == {1, 3, 4}
 
 
 def test_dedup_against_reference_robust_canon(spark):
@@ -372,8 +369,6 @@ def test_dedup_against_reference_stream_on_actual_stream(spark):
 
 def test_dedup_against_reference_guards(spark):
     new, ref = _new_and_ref(spark)
-    with pytest.raises(ValueError, match="unknown strategy"):
-        dedup_against_reference(new, ref, "text", strategy="bloom")
     with pytest.raises(ValueError, match="need column"):
         dedup_against_reference(new.drop("text"), ref, "text")
     with pytest.raises(ValueError, match="max_ref_fingerprints"):
@@ -383,15 +378,28 @@ def test_dedup_against_reference_guards(spark):
 
 
 def test_dedup_against_reference_plan_shapes(spark):
+    """The default call's plans. A reference read from storage has a size
+    Catalyst knows, so its small fingerprint set is broadcast in the
+    static plan: a LeftAnti BroadcastHashJoin, and the new batch is never
+    shuffled. A reference of unknown size (a local ``createDataFrame``)
+    gets no static broadcast; AQE turns its join into the same
+    BroadcastHashJoin at runtime, after the new batch's shuffle stage."""
+    from polars_nexpresso_spark.sources.io import read_table
+
     new, ref = _new_and_ref(spark)
+    stored_ref = read_table(spark, "/root/testdata/sf0.001", "documents")
     bplan = (
-        dedup_against_reference(new, ref, "text", strategy="broadcast")
+        dedup_against_reference(new, stored_ref, "text")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "BroadcastHashJoin" in bplan and "LeftAnti" in bplan
     assert "SortMergeJoin" not in bplan
+    out = dedup_against_reference(new, ref, "text")
+    out.collect()
+    final = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in final and "LeftAnti" in final
     # the stream probe is join-free and shuffle-free
     splan = (
         dedup_against_reference_stream(new, ref, "text")

@@ -6,6 +6,7 @@ import math
 
 from pyspark.sql import functions as F
 
+from polars_nexpresso_spark.functions import similarity
 from polars_nexpresso_spark.functions.similarity import label_centroids
 from polars_nexpresso_spark.functions.text import tfidf_keywords, vocab_topk
 
@@ -117,8 +118,10 @@ def test_group_percentiles_approx_mode_close(spark):
         assert abs(exact[c] - approx[c]) / max(exact[c], 1.0) < 0.02
 
 
-def test_label_centroids_explode_fallback_matches_expr_path(spark):
-    """Above max_expr_dims the implementation switches to the exploded
+def test_label_centroids_explode_fallback_matches_expr_path(
+    spark, monkeypatch
+):
+    """Above _MAX_EXPR_DIMS the implementation switches to the exploded
     aggregation; both paths must produce identical (label, dim, centroid)
     rows."""
     import random
@@ -133,9 +136,10 @@ def test_label_centroids_explode_fallback_matches_expr_path(spark):
         (r["label"], r["dim"]): r["centroid"]
         for r in label_centroids(df, dim=8).collect()
     }
+    monkeypatch.setattr(similarity, "_MAX_EXPR_DIMS", 4)
     b = {
         (r["label"], r["dim"]): r["centroid"]
-        for r in label_centroids(df, dim=8, max_expr_dims=4).collect()
+        for r in label_centroids(df, dim=8).collect()
     }
     assert a == b
 

@@ -58,3 +58,16 @@ def test_no_cache_switches_on_public_functions():
         if name.startswith("persist_")
     ]
     assert not found, "\n".join(found)
+
+
+def test_no_same_result_switches_on_public_functions():
+    """Options that pick between two plans with the same result are the
+    engine's decision: Catalyst and AQE choose the join strategy, and the
+    widest expression-aggregated embedding is a module constant."""
+    found = [
+        f"{where}({name})"
+        for where, names in _public_function_params()
+        if where.startswith("functions/")
+        for name in sorted(names & {"strategy", "max_expr_dims"})
+    ]
+    assert not found, "\n".join(found)

@@ -2144,9 +2144,9 @@ def test_hamming_pairs_validates(spark):
 
 
 def test_remove_boilerplate_strategies_equivalent(spark):
-    """join and broadcast strategies produce identical rows, including
-    all-boiler docs (empty clean_text) and NULL text (counts as empty,
-    never negative counts)."""
+    """Catalyst's broadcast and shuffle join strategies for the boiler
+    anti-join produce identical rows, including all-boiler docs (empty
+    clean_text) and NULL text (counts as empty, never negative counts)."""
     from polars_nexpresso_spark.functions.dedup import (
         remove_boilerplate_lines,
     )
@@ -2161,23 +2161,26 @@ def test_remove_boilerplate_strategies_equivalent(spark):
         ],
         "doc_id long, text string",
     )
-    expect = {
-        r["doc_id"]: (r["clean_text"], r["n_kept"], r["n_removed"])
-        for r in remove_boilerplate_lines(
-            df, "text", "doc_id", min_docs=3
-        ).collect()
-    }
+
+    def rows():
+        return {
+            r["doc_id"]: (r["clean_text"], r["n_kept"], r["n_removed"])
+            for r in remove_boilerplate_lines(
+                df, "text", "doc_id", min_docs=3
+            ).collect()
+        }
+
+    expect = rows()
     assert expect[1] == ("real one", 1, 2)
     assert expect[3] == ("", 0, 2)  # every line boiler -> survives empty
     assert expect[4] == ("", 1, 0)  # NULL text == "" -> one empty line
     assert expect[5] == ("unique doc", 1, 0)
-    got = {
-        r["doc_id"]: (r["clean_text"], r["n_kept"], r["n_removed"])
-        for r in remove_boilerplate_lines(
-            df, "text", "doc_id", min_docs=3, strategy="broadcast"
-        ).collect()
-    }
-    assert got == expect
+    conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert rows() == expect
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", conf)
 
 
 def test_remove_boilerplate_join_shuffles_hashes_not_text(spark):
@@ -2202,6 +2205,11 @@ def test_remove_boilerplate_join_shuffles_hashes_not_text(spark):
 
 
 def test_remove_boilerplate_broadcast_guard(spark):
+    """The boiler set is never collected to the driver. AQE broadcasts a
+    small set at runtime into a map-side anti-join (the static plan
+    cannot size an exploded aggregate); above the broadcast threshold the
+    same anti-join stays a shuffle. Engine switches are not options:
+    ``strategy=`` is gone."""
     import pytest as _pytest
 
     from polars_nexpresso_spark.functions.dedup import (
@@ -2211,13 +2219,26 @@ def test_remove_boilerplate_broadcast_guard(spark):
     df = spark.createDataFrame(
         [(1, "a\nb"), (2, "a\nc")], "doc_id long, text string"
     )
-    with _pytest.raises(ValueError, match="max_broadcast_lines"):
-        remove_boilerplate_lines(
-            df, "text", "doc_id", min_docs=2, strategy="broadcast",
-            max_broadcast_lines=0,
-        )
-    with _pytest.raises(ValueError, match="strategy"):
-        remove_boilerplate_lines(df, "text", "doc_id", strategy="nope")
+
+    def plan():
+        out = remove_boilerplate_lines(df, "text", "doc_id", min_docs=2)
+        assert {r["doc_id"]: r["clean_text"] for r in out.collect()} == {
+            1: "b",
+            2: "c",
+        }
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    small = plan()
+    assert "BroadcastHashJoin" in small and "LeftAnti" in small
+    conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        large = plan()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", conf)
+    assert "BroadcastHashJoin" not in large and "LeftAnti" in large
+    with _pytest.raises(TypeError, match="strategy"):
+        remove_boilerplate_lines(df, "text", "doc_id", strategy="join")
 
 
 def test_remove_fixed_boilerplate_expr_and_pandas_paths(spark):
