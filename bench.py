@@ -686,7 +686,7 @@ GROUPS: dict[str, object] = {
         "unigram_pipeline", "tokenizer_train_envelope",
     )),
     "embeddings": _registry_group((
-        "cosine_topk", "cosine_topk_pandas", "cosine_topk_int8",
+        "cosine_topk", "cosine_topk_int8",
         "lsh_ann_topk", "ivf_ann_topk", "label_centroids",
         "project_embeddings", "multimodal_video", "embedding_outliers",
         "knn_label", "knn_label_ann", "diversity_sample",

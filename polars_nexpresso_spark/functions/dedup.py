@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from polars_nexpresso_spark.functions.similarity import _cosine, _norm
 from polars_nexpresso_spark.functions.text import (
     tokens,
     doc_fingerprint,
@@ -480,41 +481,28 @@ def embedding_cosine_pairs(
     (e.g. a cluster label or LSH bucket) to avoid the full n² cross join; a
     null ``block_col`` compares everything (only for small inputs).
 
-    Returns ``(id_a, id_b, cosine)`` with ``id_a < id_b``.
+    Returns ``(id_a, id_b, cosine)`` with ``id_a < id_b``; the cosine is
+    ``similarity._cosine``'s, so a zero vector scores 0.
     """
-    norm = F.sqrt(
-        F.aggregate(
-            F.col(vec_col), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x
-        )
-    )
     base = df.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
-        norm.alias("__norm"),
+        _norm(F.col(vec_col)).alias("__norm"),
         *( [F.col(block_col).alias("__blk")] if block_col else [F.lit(0).alias("__blk")] ),
     )
-    left = base.select(
-        F.col("__id").alias("id_a"),
-        F.col("__v").alias("__va"),
-        F.col("__norm").alias("__na"),
-        "__blk",
+    left, right = (
+        base.select(
+            F.col("__id").alias(f"id_{s}"),
+            F.col("__v").alias(f"__v{s}"),
+            F.col("__norm").alias(f"__n{s}"),
+            "__blk",
+        )
+        for s in "ab"
     )
-    right = base.select(
-        F.col("__id").alias("id_b"),
-        F.col("__v").alias("__vb"),
-        F.col("__norm").alias("__nb"),
-        "__blk",
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("__va"), F.col("__vb"), lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cosine = F.round(dot / (F.col("__na") * F.col("__nb")), 6)
     return (
         left.join(right, on="__blk")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cosine)
+        .withColumn("cosine", _cosine("__va", "__vb", "__na", "__nb"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

@@ -1,10 +1,14 @@
 """Similarity search over embedding columns (``array<float>``).
 
-- :func:`cosine_topk` — exact brute-force top-k: the baseline. Query set is
-  broadcast (it is small by construction); scoring is a map-side
-  ``zip_with``/``aggregate`` dot product in codegen; top-k per query via a
-  window over (query, score). At 100 TB the corpus stays partitioned and
-  never shuffles — only the per-query candidate rows move.
+- :func:`cosine_topk` — exact brute-force top-k: the baseline. The query
+  set rides the closure of an Arrow-batched NumPy kernel, one kernel
+  stage per ``_MAX_QUERIES`` queries; each corpus batch scores every
+  query of a block in one matmul and keeps its own top-k per query, and
+  a window over (query, score) picks the global top-k. The corpus never
+  shuffles — only the per-query candidate rows move.
+- The SQL scorers (LSH, IVF, re-rank, pair and list metrics) all take
+  their cosine from :func:`_cosine` and their top-k from
+  :func:`_topk_window`.
 - :func:`lsh_ann_topk` — random-hyperplane LSH: deterministic pseudo-random
   hyperplanes (seeded, md5-derived), bucket on the sign bit-vector, search
   only within buckets up to Hamming distance ``multiprobe`` from the
@@ -52,37 +56,27 @@ def _norm(v):
     )
 
 
-def _two_phase_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Exact per-query top-k without shuffling the full scored set.
+def _safe(norm):
+    """``norm`` with 0 clamped to 1.0, so a zero vector has cosine 0 with
+    everything instead of dividing by zero (under ANSI mode, Spark 4's
+    default, a division by 0.0 raises). Other norms pass through
+    unchanged."""
+    return F.when(norm == 0.0, F.lit(1.0)).otherwise(norm)
 
-    Phase A groups on (query, input partition) and keeps only k rows per
-    group — the shuffle then carries ≤ k·n_partitions rows per query
-    instead of the whole scored corpus; phase B merges. Sorting uses the
-    struct's lexicographic order (−cosine asc, neighbor asc) — exactly the
-    deterministic (cosine desc, neighbor_id asc) tie-break, no comparator.
-    """
-    pair = F.struct(
-        (-F.col("cosine")).alias("__negc"), F.col("neighbor_id").alias("__nid")
-    )
-    partial = (
-        scored.withColumn("__part", F.spark_partition_id())
-        .groupBy("query_id", "__part")
-        .agg(F.slice(F.array_sort(F.collect_list(pair)), 1, k).alias("__top"))
-    )
-    merged = partial.groupBy("query_id").agg(
-        F.slice(F.array_sort(F.flatten(F.collect_list(F.col("__top")))), 1, k).alias(
-            "__top"
-        )
-    )
-    exploded = merged.select(
-        "query_id", F.posexplode(F.col("__top")).alias("__pos", "__pair")
-    )
-    return exploded.select(
-        "query_id",
-        F.col("__pair.__nid").alias("neighbor_id"),
-        (-F.col("__pair.__negc")).alias("cosine"),
-        (F.col("__pos") + 1).cast("bigint").alias("rank"),
-    )
+
+def _cosine(a: str, b: str, na: str, nb: str):
+    """The SQL cosine score of the vector columns ``a``/``b`` with their
+    :func:`_norm` columns ``na``/``nb``: ``round(<a, b> / (|a|·|b|), 6)``.
+    The norms clamp here, at score time (:func:`_safe`), so the persisted
+    search indexes keep their plain norms."""
+    a, b, na, nb = (F.col(c) for c in (a, b, na, nb))
+    return F.round(_dot(a, b) / (_safe(na) * _safe(nb)), 6)
+
+
+# Most query vectors one kernel stage holds in its closure. A larger
+# query set runs as one stage per block of this many queries, and their
+# candidates union before the one top-k window.
+_MAX_QUERIES = 10_000
 
 
 def cosine_topk(
@@ -96,124 +90,132 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k nearest corpus vectors per query vector by cosine.
 
-    The query set is broadcast, scoring is map-side, and ranking is an
-    exact two-phase top-k — the corpus never shuffles and the only exchange
-    carries ≤ k rows per (query, partition).
+    The query set is collected when the frame is built and rides the
+    closure of an Arrow-batched NumPy kernel over the corpus
+    (:func:`_cosine_kernel`), one kernel stage per ``_MAX_QUERIES``
+    queries. The corpus never shuffles; the one exchange carries ≤ k rows
+    per (query, corpus batch).
 
     Returns ``(query_id, neighbor_id, cosine, rank)`` with a deterministic
-    (cosine desc, neighbor_id asc) tie-break.
+    (cosine desc, neighbor_id asc) tie-break; both id columns keep the
+    input id type. Rows with a null id or vector are skipped on both
+    sides, and a zero vector has cosine 0 with everything.
     """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        _norm(F.col(vec_col)).alias("__cn"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        _norm(F.col(vec_col)).alias("__qn"),
-    )
-    joined = c.crossJoin(F.broadcast(q))
-    if exclude_self:
-        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = joined.withColumn(
-        "cosine",
-        F.round(_dot(F.col("__cv"), F.col("__qv")) / (F.col("__cn") * F.col("__qn")), 6),
-    )
-    return _two_phase_topk(scored, k)
+    q = queries.select(F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qv"))
+    return _cosine_kernel(corpus, q, id_col, vec_col, k, exclude_self)
 
 
-def cosine_topk_pandas(
+def _cosine_kernel(
     corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    exclude_self: bool = True,
-    max_queries: int = 10_000,
+    q: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    exclude_self: bool,
 ) -> DataFrame:
-    """Exact cosine top-k via an Arrow-batched numpy fast path.
+    """Exact cosine top-k of the query frame ``q`` — ``(__qid, __qv)``,
+    optionally with ``__excl``, an array of ids that query must not
+    return — against ``corpus``.
 
-    Same contract and results as :func:`cosine_topk`, different engine: the
-    (small, bounded) query set is collected into a normalized numpy matrix
-    held in the UDF closure; each corpus Arrow batch computes ALL
-    query-similarities in one BLAS matmul and keeps only its per-batch
-    top-k per query, so the exchange carries ≤ k·n_batches rows per query —
-    the map-side-combine shape. The array-expression dot product in
-    :func:`cosine_topk` runs interpreted (outside whole-stage codegen),
-    which at high dimension or large |queries| makes this path ~the same
-    plan with a 10×+ cheaper inner loop.
-
-    Exact: per-batch top-k then global top-k over the union is the global
-    top-k. Ids must be integral (LongType output).
+    ``q`` is collected and cut into blocks of at most ``_MAX_QUERIES``
+    rows; each block scans the corpus in one ``mapInPandas`` stage
+    (:func:`_block_kernel`) that emits its own per-batch top-k per query.
+    The window over the union of the blocks' candidates then picks the
+    global top-k, which is exact.
     """
+    from functools import reduce
+
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    rows = q.where(F.col("__qid").isNotNull() & F.col("__qv").isNotNull()).collect()
+    c = corpus.select(
+        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
+    ).where(F.col("__id").isNotNull() & F.col("__v").isNotNull())
+    schema = StructType(
+        [
+            StructField("query_id", q.schema["__qid"].dataType),
+            StructField("neighbor_id", c.schema["__id"].dataType),
+            StructField("cosine", DoubleType()),
+        ]
+    )
+    blocks = [
+        rows[i : i + _MAX_QUERIES] for i in range(0, len(rows), _MAX_QUERIES)
+    ]
+    candidates = reduce(
+        DataFrame.union,
+        [
+            c.mapInPandas(_block_kernel(b, exclude_self, k), schema=schema)
+            for b in blocks or [[]]
+        ],
+    )
+    return _topk_window(candidates, k, "cosine")
+
+
+def _block_kernel(rows: list, exclude_self: bool, k: int):
+    """The ``mapInPandas`` function of one query block: ``rows`` become
+    unit float64 query rows, and each corpus Arrow batch scores all of
+    them in one BLAS matmul (in chunks of at most 2²² scores),
+    rounds to 6 decimals and keeps its own top-k per query by (cosine
+    desc, id asc), ranking ids of any orderable type through their
+    order-preserving codes in the batch. The returned function references
+    no package-level name, so executors need not import the package."""
     import numpy as np
 
-    q_rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
-    if not q_rows:
-        raise ValueError("queries is empty")
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"cosine_topk_pandas collects the query set to the driver; got "
-            f"{len(q_rows)} queries > max_queries={max_queries}. Raise the "
-            "cap only if the driver can hold them — or use the LSH/IVF path."
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    qn = np.linalg.norm(qm, axis=1, keepdims=True)
-    qn[qn == 0.0] = 1.0
-    qm = qm / qn
+    q_ids = np.asarray([r["__qid"] for r in rows])
+    qm = np.array([r["__qv"] for r in rows], dtype=np.float64)
+    qm = _unit_rows(qm) if rows else qm
+    # (query index, id) pairs to skip: the query itself and its __excl ids.
+    ex_q, ex_id = [], []
+    for j, r in enumerate(rows):
+        drop = list(r.asDict().get("__excl") or [])
+        drop += [r["__qid"]] if exclude_self else []
+        ex_q += [j] * len(drop)
+        ex_id += drop
 
-    def gen(batches):
+    def kernel(batches):
         import pandas as pd
 
+        excluded = pd.DataFrame({"id": ex_id, "q": ex_q})
         for pdf in batches:
-            if pdf.empty:
+            n = len(pdf)
+            if not n or not q_ids.size:
                 continue
-            ids = pdf["__id"].to_numpy(dtype=np.int64)
-            cm = np.stack(pdf["__v"].to_list()).astype(np.float64)
+            ids = pdf["__id"].to_numpy()
+            codes = np.unique(ids, return_inverse=True)[1]
+            cm = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
             cn = np.linalg.norm(cm, axis=1, keepdims=True)
             cn[cn == 0.0] = 1.0
-            sims = np.round((cm / cn) @ qm.T, 6)  # (batch, n_queries)
-            out_q, out_n, out_c = [], [], []
-            for j in range(q_ids.size):
-                col = sims[:, j]
-                nid = ids
-                if exclude_self:
-                    keep = nid != q_ids[j]
-                    col, nid = col[keep], nid[keep]
-                if nid.size == 0:
-                    continue
-                # (−cosine, neighbor_id) ascending = the deterministic
-                # (cosine desc, id asc) tie-break; lexsort keys are
-                # last-key-primary.
-                order = np.lexsort((nid, -col))[:k]
-                out_q.append(np.full(order.size, q_ids[j]))
-                out_n.append(nid[order])
-                out_c.append(col[order])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cosine": np.concatenate(out_c),
-                }
-            )
+            unit = cm / cn
+            hit_row = hit_q = np.empty(0, dtype=np.int64)
+            if ex_q:
+                hit = pd.DataFrame({"id": ids, "row": np.arange(n)}).merge(
+                    excluded, on="id"
+                )
+                hit_row, hit_q = hit["row"].to_numpy(), hit["q"].to_numpy()
+            step = max(1, (1 << 22) // n)
+            for q0 in range(0, q_ids.size, step):
+                # (batch, block) scores; + 0.0 turns -0.0 into 0.0.
+                s = np.round(unit @ qm[q0 : q0 + step].T, 6) + 0.0
+                in_block = (hit_q >= q0) & (hit_q < q0 + step)
+                s[hit_row[in_block], hit_q[in_block] - q0] = -np.inf
+                keep = s > -np.inf  # also drops NaN scores
+                if n > k >= 1:
+                    kth = np.partition(s, n - k, axis=0)[n - k]
+                    keep &= ~(s < kth)  # every tie of the k-th score stays
+                qi, ri = np.nonzero(keep.T)
+                order = np.lexsort((codes[ri], -s[ri, qi], qi))
+                qi, ri = qi[order], ri[order]
+                top = np.arange(qi.size) - np.searchsorted(qi, qi) < k
+                qi, ri = qi[top], ri[top]
+                yield pd.DataFrame(
+                    {
+                        "query_id": q_ids[q0 + qi],
+                        "neighbor_id": ids[ri],
+                        "cosine": s[ri, qi],
+                    }
+                )
 
-    candidates = corpus.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-    ).mapInPandas(gen, schema="query_id long, neighbor_id long, cosine double")
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return kernel
 
 
 def _hyperplanes(num_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
@@ -415,6 +417,38 @@ def _kmeans_centroids(
     )
 
 
+def _coarse_centroids(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_centroids: int,
+    centroids: str,
+    *,
+    sample_size: int = 1024,
+) -> list[list[float]]:
+    """The coarse quantizer ``centroids`` names: ``"kmeans"``
+    (:func:`_kmeans_centroids`) or ``"sample"``, the first
+    ``n_centroids`` raw corpus vectors in md5 id order (cheaper, lower
+    recall)."""
+    if centroids == "kmeans":
+        return _kmeans_centroids(
+            corpus, id_col, vec_col, n_centroids, sample_size=sample_size
+        )
+    if centroids != "sample":
+        raise ValueError(
+            f"centroids must be 'kmeans' or 'sample', got {centroids!r}"
+        )
+    return [
+        list(r["cv"])
+        for r in corpus.select(
+            F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
+        )
+        .orderBy(_sample_key_expr(F.col("cid")), F.col("cid"))
+        .limit(n_centroids)
+        .collect()
+    ]
+
+
 def kmeans_centroids_local(
     parquet_path: str,
     id_col: str = "vec_id",
@@ -486,21 +520,7 @@ def ivf_ann_topk(
     on an unchanged corpus skip the assignment and scan the cache;
     ``release_blocking_caches()`` drops it.
     """
-    if centroids == "kmeans":
-        cent_vecs = _kmeans_centroids(corpus, id_col, vec_col, n_centroids)
-    elif centroids == "sample":
-        cent_vecs = [
-            list(r["cv"])
-            for r in corpus.select(
-                F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-            )
-            .orderBy(_sample_key_expr(F.col("cid")), F.col("cid"))
-            .limit(n_centroids)
-            .collect()
-        ]
-    else:
-        raise ValueError(f"centroids must be 'kmeans' or 'sample', got {centroids!r}")
-
+    cent_vecs = _coarse_centroids(corpus, id_col, vec_col, n_centroids, centroids)
     arrow = _arrow_assign(corpus)
     c = _search_index(
         corpus,
@@ -521,21 +541,8 @@ def ivf_ann_topk(
     joined = c.join(F.broadcast(q), on="__cell")
     if exclude_self:
         joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = joined.withColumn(
-        "cosine",
-        F.round(
-            _dot(F.col("__cv"), F.col("__qv")) / (F.col("__cn") * F.col("__qn")),
-            6,
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    scored = joined.withColumn("cosine", _cosine("__cv", "__qv", "__cn", "__qn"))
+    return _topk_window(scored, k, "cosine")
 
 
 def lsh_ann_topk(
@@ -622,20 +629,9 @@ def lsh_ann_topk(
     if exclude_self:
         joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
     scored = joined.withColumn(
-        "cosine",
-        F.round(
-            _dot(F.col("__cv"), F.col("__qv")) / (F.col("__cn") * F.col("__qn")),
-            6,
-        ),
+        "cosine", _cosine("__cv", "__qv", "__cn", "__qn")
     ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk_window(scored, k, "cosine")
 
 
 # Widest embedding label_centroids aggregates with one column-indexed sum
@@ -767,8 +763,8 @@ def cosine_topk_int8(
     INTEGER arithmetic (dot product and squared norms of the codes —
     cosine is scale-invariant so the per-vector scales cancel), followed
     by one double division — bit-reproducible, so even this approximate
-    engine has an exact DuckDB oracle. Same plan shape as the float
-    path: queries broadcast, scoring map-side, exact two-phase top-k.
+    engine has an exact DuckDB oracle. Queries broadcast, scoring is
+    map-side, and the top-k is the per-query window.
 
     Returns ``(query_id, neighbor_id, cosine_q, rank)`` where
     ``cosine_q`` is the quantized-space cosine (within ~1e-2 of the
@@ -777,9 +773,9 @@ def cosine_topk_int8(
     qc = quantize_embeddings(corpus, id_col=id_col, vec_col=vec_col)
     qq = quantize_embeddings(queries, id_col=id_col, vec_col=vec_col)
 
-    def _inorm(col):
+    def _idot(u, v):
         return F.aggregate(
-            F.zip_with(col, col, lambda a, b: (a * b).cast("bigint")),
+            F.zip_with(u, v, lambda a, b: (a * b).cast("bigint")),
             F.lit(0).cast("bigint"),
             lambda acc, x: acc + x,
         )
@@ -787,38 +783,25 @@ def cosine_topk_int8(
     c = qc.select(
         F.col(id_col).alias("neighbor_id"),
         F.col("qvec").alias("__cv"),
-        _inorm(F.col("qvec")).alias("__cn2"),
+        _idot(F.col("qvec"), F.col("qvec")).alias("__cn2"),
     )
     q = qq.select(
         F.col(id_col).alias("query_id"),
         F.col("qvec").alias("__qv"),
-        _inorm(F.col("qvec")).alias("__qn2"),
+        _idot(F.col("qvec"), F.col("qvec")).alias("__qn2"),
     )
     joined = c.crossJoin(F.broadcast(q))
     if exclude_self:
         joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    idot = F.aggregate(
-        F.zip_with(
-            F.col("__cv"), F.col("__qv"), lambda a, b: (a * b).cast("bigint")
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
     scored = joined.withColumn(
         "cosine_q",
         F.round(
-            idot / F.sqrt(F.col("__cn2").cast("double") * F.col("__qn2")),
+            _idot(F.col("__cv"), F.col("__qv"))
+            / F.sqrt(F.col("__cn2").cast("double") * F.col("__qn2")),
             6,
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_q").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_q", "rank")
-    )
+    return _topk_window(scored, k, "cosine_q")
 
 
 def rademacher_matrix(
@@ -917,8 +900,9 @@ def semantic_dedup(
     sample as :func:`ivf_ann_topk`; cell assignment is map-side (parsed
     SQL below a planned corpus size of 2 MiB, the Arrow kernel above it,
     see :func:`_assign`); the quadratic similarity test is CONFINED to
-    within-cluster pairs by an equi-join on the cell id — the SemDeDup
-    trick — so cost is sum(cluster_size^2), not corpus^2. Grow
+    within-cluster pairs — :func:`~polars_nexpresso_spark.functions.dedup.
+    embedding_cosine_pairs` blocked on the cell id, the SemDeDup trick —
+    so cost is sum(cluster_size^2), not corpus^2. Grow
     ``n_centroids`` with the corpus (clusters of ~1-10k vectors keep the
     pair stage linear-ish);
     no driver-side loop, no global sort. A pathologically hot cluster
@@ -933,7 +917,7 @@ def semantic_dedup(
     cheap corpus count via :func:`auto_centroid_count` (~4k vectors per
     cell), so the operator stays linear-ish as the corpus grows without
     retuning; pass an explicit value to pin it. The assignment table is
-    cached before the self-join — the differently-aliased a/b branches
+    cached before the pair stage's self-join — its a/b branches
     and the final keep-join do not unify under exchange reuse, so
     uncached the ``n_centroids``-way nearest-cell sort expression would
     evaluate ~3× per run (the same recompute shape ``hamming_pairs``
@@ -955,36 +939,17 @@ def semantic_dedup(
             corpus.select(F.col(id_col), F.col(vec_col))
         )
         n_centroids = auto_centroid_count(corpus.count())
-    if centroids == "kmeans":
-        # Keep the training sample comfortably larger than k when the
-        # auto default scales up (Lloyd's needs >1 point per cell to
-        # split dense regions).
-        cent_vecs = _kmeans_centroids(
-            corpus,
-            id_col,
-            vec_col,
-            n_centroids,
-            sample_size=max(1024, 4 * n_centroids),
-        )
-    elif centroids == "sample":
-        cent_vecs = [
-            list(r["cv"])
-            for r in corpus.select(
-                F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-            )
-            .orderBy(_sample_key_expr(F.col("cid")), F.col("cid"))
-            .limit(n_centroids)
-            .collect()
-        ]
-    else:
-        raise ValueError(
-            f"centroids must be 'kmeans' or 'sample', got {centroids!r}"
-        )
+    # Keep the k-means training sample comfortably larger than k when the
+    # auto default scales up (Lloyd's needs >1 point per cell to split
+    # dense regions).
+    cent_vecs = _coarse_centroids(
+        corpus, id_col, vec_col, n_centroids, centroids,
+        sample_size=max(1024, 4 * n_centroids),
+    )
     assigned = persist_tracked(
         _assign(corpus, vec_col, cents=cent_vecs).select(
             F.col(id_col),
             F.col(vec_col).alias("__v"),
-            _norm(F.col(vec_col)).alias("__n"),
             F.col("__cell").alias("cluster_id"),
         )
     )
@@ -995,27 +960,14 @@ def semantic_dedup(
         # copies of the vector corpus.
         assigned.count()  # materialize before dropping the upstream
         _corpus_cache.unpersist()
-    a = assigned.select(
-        F.col(id_col).alias("__ida"),
-        F.col("__v").alias("__va"),
-        F.col("__n").alias("__na"),
-        "cluster_id",
-    )
-    b = assigned.select(
-        F.col(id_col).alias("__idb"),
-        F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nb"),
-        "cluster_id",
-    )
-    cos = F.round(
-        _dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
-        6,
-    )
+    # dedup.py imports this module, so the pair stage is imported here.
+    from polars_nexpresso_spark.functions.dedup import embedding_cosine_pairs
+
     dropped = (
-        a.join(b, on="cluster_id")
-        .filter(F.col("__ida") > F.col("__idb"))
-        .filter(cos >= F.lit(float(threshold)))
-        .select(F.col("__ida").alias(id_col))
+        embedding_cosine_pairs(
+            assigned, "__v", id_col, threshold=threshold, block_col="cluster_id"
+        )
+        .select(F.col("id_b").alias(id_col))
         .distinct()
         .withColumn("__drop", F.lit(True))
     )
@@ -1057,13 +1009,10 @@ def mine_hard_negatives(
     query itself is always excluded.
 
     ``engine="exact"`` (default, the correctness baseline) scans the
-    full corpus: same contract as :func:`cosine_topk`, which it extends
-    — the query set broadcasts, the corpus NEVER shuffles, the only
-    exchange carries ≤ k rows per (query, partition) via the exact
-    two-phase top-k, and the positive sets ride the query broadcast as
-    per-query id arrays (one small aggregation over the labels table),
-    so the exclusion is a map-side ``array_contains`` filter, not a
-    join against the scored corpus.
+    full corpus with :func:`cosine_topk`'s kernel: the corpus NEVER
+    shuffles, and each query's positive ids (one small aggregation over
+    the labels table) are collected with its vector as the kernel's
+    per-query exclusion set, not joined against the scored corpus.
 
     ``engine="ivf"`` is the 100 TB path: candidates come from
     :func:`ivf_ann_topk` (the candidate join touches ~n_probe/
@@ -1097,79 +1046,38 @@ def mine_hard_negatives(
     pos_sets = positives.groupBy(
         F.col(query_id_col).alias("query_id")
     ).agg(F.collect_set(F.col(doc_id_col)).alias("__pos"))
-    if engine == "ivfpq":
-        cand = ivfpq_ann_topk(
-            corpus,
-            queries,
-            id_col=id_col,
-            vec_col=vec_col,
-            k=k + max_positives,
-            n_centroids=n_centroids,
-            n_probe=n_probe,
-            m=m,
-            n_codes=n_codes,
-        )
-        filtered = (
-            cand.join(F.broadcast(pos_sets), on="query_id", how="left")
-            .withColumn("__pos", F.coalesce("__pos", F.array()))
-            .filter(~F.array_contains(F.col("__pos"), F.col("neighbor_id")))
-        )
-        return exact_rerank(
-            filtered, corpus, queries, k=k, id_col=id_col, vec_col=vec_col
-        )
-    if engine == "ivf":
-        cand = ivf_ann_topk(
-            corpus,
-            queries,
-            id_col=id_col,
-            vec_col=vec_col,
-            k=k + max_positives,
-            n_centroids=n_centroids,
-            n_probe=n_probe,
-        )
-        filtered = (
-            cand.join(F.broadcast(pos_sets), on="query_id", how="left")
-            .withColumn("__pos", F.coalesce("__pos", F.array()))
-            .filter(~F.array_contains(F.col("__pos"), F.col("neighbor_id")))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            filtered.withColumn(
-                "rank", F.row_number().over(w).cast("bigint")
-            )
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank")
-        )
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            _norm(F.col(vec_col)).alias("__qn"),
-        )
-        .join(pos_sets, on="query_id", how="left")
-        .withColumn("__pos", F.coalesce("__pos", F.array()))
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        _norm(F.col(vec_col)).alias("__cn"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .filter(~F.array_contains(F.col("__pos"), F.col("neighbor_id")))
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("__cv"), F.col("__qv"))
-                / (F.col("__cn") * F.col("__qn")),
-                6,
+    if engine == "exact":
+        q = queries.select(
+            F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qv")
+        ).join(
+            pos_sets.select(
+                F.col("query_id").alias("__qid"), F.col("__pos").alias("__excl")
             ),
+            on="__qid",
+            how="left",
         )
+        return _cosine_kernel(corpus, q, id_col, vec_col, k, True)
+    ann = dict(
+        id_col=id_col,
+        vec_col=vec_col,
+        k=k + max_positives,
+        n_centroids=n_centroids,
+        n_probe=n_probe,
     )
-    return _two_phase_topk(scored, k)
+    if engine == "ivf":
+        cand = ivf_ann_topk(corpus, queries, **ann)
+    else:
+        cand = ivfpq_ann_topk(corpus, queries, m=m, n_codes=n_codes, **ann)
+    filtered = (
+        cand.join(F.broadcast(pos_sets), on="query_id", how="left")
+        .withColumn("__pos", F.coalesce("__pos", F.array()))
+        .filter(~F.array_contains(F.col("__pos"), F.col("neighbor_id")))
+    )
+    if engine == "ivf":
+        return _topk_window(filtered, k, "cosine")
+    return exact_rerank(
+        filtered, corpus, queries, k=k, id_col=id_col, vec_col=vec_col
+    )
 
 
 # --- product quantization ----------------------------------------------------
@@ -1252,10 +1160,7 @@ def _chat(cent_vecs) -> list[list[float]]:
     not magnitudes."""
     import numpy as np
 
-    C = np.asarray(cent_vecs, dtype=np.float64)
-    n = np.sqrt((C * C).sum(axis=1, keepdims=True))
-    n[n == 0.0] = 1.0
-    return [[float(x) for x in row] for row in C / n]
+    return _unit_rows(np.asarray(cent_vecs, dtype=np.float64)).tolist()
 
 
 def _pq_train_sample(
@@ -1327,10 +1232,8 @@ def _pq_unit(vec_col):
     # (the hof_reeval_risks rake).
     from polars_nexpresso_spark.functions.text import let_bound
 
-    n = _norm(vec_col)
-    safe = F.when(n == 0.0, F.lit(1.0)).otherwise(n)
     return let_bound(
-        F.struct(vec_col.alias("v"), safe.alias("s")),
+        F.struct(vec_col.alias("v"), _safe(_norm(vec_col)).alias("s")),
         lambda p: F.transform(p["v"], lambda x: x.cast("double") / p["s"]),
     )
 
@@ -1918,12 +1821,7 @@ def exact_rerank(
         _norm(F.col(vec_col)).alias("__qn"),
     )
     scored = fetched.join(F.broadcast(q), on="query_id").withColumn(
-        "cosine",
-        F.round(
-            _dot(F.col("__cv"), F.col("__qv"))
-            / (F.col("__cn") * F.col("__qn")),
-            6,
-        ),
+        "cosine", _cosine("__cv", "__qv", "__cn", "__qn")
     )
     return _topk_window(scored, k, "cosine")
 
@@ -2115,10 +2013,10 @@ def knn_label(
 
     Neighbors come from :func:`cosine_topk` (exact, deterministic
     ``(cosine desc, neighbor_id asc)`` tie-break, cosine rounded to 6),
-    so the prediction inherits its scale shape: the QUERY set is the
-    broadcast side and the labeled corpus never shuffles — the only
-    exchanges carry ≤ k rows per (query, partition), then the
-    neighbor-id-keyed label join moves k·|queries| three-column rows.
+    so the prediction inherits its scale shape: the query set rides the
+    kernel and the labeled corpus never shuffles — the k·|queries|
+    neighbor rows broadcast into the label lookup, and the two exchanges
+    carry ≤ k rows per (query, corpus batch) and the looked-up votes.
     The vote is one partial-agg count per (query, label); the winner is
     elected by ``(votes desc, label asc)`` — a total order, so the
     prediction is unique and replayable in SQL. ``engine="ivf"`` is the
@@ -2138,29 +2036,29 @@ def knn_label(
         raise ValueError(f"k must be >= 1: {k}")
     if label_col not in labeled.columns:
         raise ValueError(f"column {label_col!r} not in labeled frame")
+    labels = labeled.select(
+        F.col(id_col).alias("neighbor_id"), F.col(label_col).alias("__lbl")
+    )
     if engine == "exact":
         nn = cosine_topk(
             labeled, queries, id_col=id_col, vec_col=vec_col, k=k,
             exclude_self=True,
+        )
+        # At most k neighbor rows per query broadcast, the labeled corpus
+        # streams unshuffled, and one query-keyed exchange serves both
+        # vote aggregations.
+        joined = labels.join(F.broadcast(nn), on="neighbor_id").repartition(
+            "query_id"
         )
     elif engine == "ivf":
         nn = ivf_ann_topk(
             labeled, queries, id_col=id_col, vec_col=vec_col, k=k,
             exclude_self=True, **engine_opts,
         )
+        joined = nn.join(labels, on="neighbor_id")
     else:
         raise ValueError(f"engine must be 'exact' or 'ivf': {engine!r}")
-    votes = (
-        nn.join(
-            labeled.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(label_col).alias("__lbl"),
-            ),
-            on="neighbor_id",
-        )
-        .groupBy("query_id", "__lbl")
-        .agg(F.count("*").alias("__n"))
-    )
+    votes = joined.groupBy("query_id", "__lbl").agg(F.count("*").alias("__n"))
     election_key = F.struct(
         (-F.col("__n")).alias("__negn"), F.col("__lbl").alias("__l")
     )
@@ -2563,9 +2461,6 @@ def intra_list_similarity(
     ):
         if col not in frame.columns:
             raise ValueError(f"column {col!r} not in {name}: {frame.columns}")
-    safe_norm = F.when(
-        _norm(F.col(vec_col)) == 0.0, F.lit(1.0)
-    ).otherwise(_norm(F.col(vec_col)))
     lists = (
         ranked.select(query_id_col, id_col)
         .dropDuplicates([query_id_col, id_col])
@@ -2573,29 +2468,22 @@ def intra_list_similarity(
             vectors.select(
                 F.col(id_col),
                 F.col(vec_col).alias("__v"),
-                safe_norm.alias("__n"),
+                _norm(F.col(vec_col)).alias("__n"),
             ),
             on=id_col,
         )
     )
-    a = lists.select(
-        F.col(query_id_col),
-        F.col(id_col).alias("__ida"),
-        F.col("__v").alias("__va"),
-        F.col("__n").alias("__na"),
-    )
-    b = lists.select(
-        F.col(query_id_col),
-        F.col(id_col).alias("__idb"),
-        F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nb"),
+    a, b = (
+        lists.select(
+            F.col(query_id_col),
+            F.col(id_col).alias(f"__id{s}"),
+            F.col("__v").alias(f"__v{s}"),
+            F.col("__n").alias(f"__n{s}"),
+        )
+        for s in "ab"
     )
     pairs = a.join(b, on=query_id_col).filter(F.col("__ida") < F.col("__idb"))
-    cos = F.round(
-        _dot(F.col("__va"), F.col("__vb"))
-        / (F.col("__na") * F.col("__nb")),
-        6,
-    )
+    cos = _cosine("__va", "__vb", "__na", "__nb")
     counts = lists.groupBy(query_id_col).agg(
         F.count("*").cast("bigint").alias("n_items")
     )

@@ -36,7 +36,6 @@ from polars_nexpresso_spark.functions.sampling import (
 )
 from polars_nexpresso_spark.functions.similarity import (
     cosine_topk,
-    cosine_topk_pandas,
     ivf_ann_topk,
     lsh_ann_topk,
 )
@@ -488,20 +487,12 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(emb, queries, k=5)
 
 
-def q_cosine_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same exact top-k as ``cosine_topk`` on the numpy/Arrow fast path
-    (per-batch BLAS matmul + map-side partial top-k) — shares its oracle."""
-    emb = spread(read_table(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") < 10)
-    return cosine_topk_pandas(emb, queries, k=5)
-
-
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for contrastive retrieval training: per
     query, the top-5 most-similar corpus vectors whose label DIFFERS
     (same-label docs are the positives and are excluded). The positive
-    sets ride the query broadcast as id arrays; the corpus never
-    shuffles — same two-phase top-k contract as ``cosine_topk``."""
+    sets ride the cosine_topk kernel with the query vectors as per-query
+    exclusion sets; the corpus never shuffles."""
     from polars_nexpresso_spark.functions.similarity import (
         mine_hard_negatives,
     )
@@ -1657,7 +1648,6 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "simhash_pairs": q_simhash_pairs,
     "embedding_dedup": q_embedding_dedup,
     "cosine_topk": q_cosine_topk,
-    "cosine_topk_pandas": q_cosine_topk_pandas,
     "lsh_ann_topk": q_lsh_ann_topk,
     "ivf_ann_topk": q_ivf_ann_topk,
     "multimodal_features": q_multimodal_features,
@@ -2245,23 +2235,6 @@ PIPELINE_ORACLE_SQL: dict[str, str] = {
                (ROUND(nf / 10.0, 6))::DOUBLE AS duration_sec,
                ROUND(mp, 6) AS mean_pixel
         FROM px
-    """,
-    # The numpy fast path computes the identical exact result (pinned by
-    # tests/test_ann_recall.py::test_cosine_topk_pandas_matches_expr), so it
-    # shares the brute-force oracle verbatim.
-    "cosine_topk_pandas": """
-        SELECT query_id, neighbor_id, cosine, rank FROM (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                 ROUND(list_cosine_similarity(c.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS cosine,
-                 ROW_NUMBER() OVER (
-                   PARTITION BY q.vec_id
-                   ORDER BY ROUND(list_cosine_similarity(c.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6)
-                            DESC, c.vec_id ASC
-                 ) AS rank
-          FROM embeddings c
-          CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 10) q
-          WHERE c.vec_id != q.vec_id
-        ) WHERE rank <= 5
     """,
     # Exact: the pigeonhole chunk blocking is exhaustive at radius 3, so the
     # Spark output equals this brute-force self-join over the (bit-exact,

@@ -1359,7 +1359,6 @@ _MULTIPLY_PROVEN_TAIL = [
     "simhash_pairs",
     "embedding_dedup",
     "cosine_topk",
-    "cosine_topk_pandas",
     "ivf_ann_topk",
     "multimodal_features",
     "multimodal_audio",

@@ -181,27 +181,110 @@ def test_ann_recall_on_clustered_corpus(clustered_emb):
     assert ivf_recall >= 0.9, f"IVF clustered recall@{K}: {ivf_recall:.3f} < 0.9"
 
 
-def test_cosine_topk_pandas_matches_expr(emb_and_exact):
-    """The numpy fast path is result-identical to the array-expression path
-    (same scores to 6 decimals, same deterministic tie-break, same ranks)."""
-    from polars_nexpresso_spark.functions.similarity import cosine_topk_pandas
+def _brute_topk(ids, vecs, query_ids, k, exclude_self):
+    """float64 NumPy brute force of the cosine_topk contract: per query,
+    ``round(<c, q> / (|c|·|q|), 6)`` over every corpus row, ranked by
+    (cosine desc, id asc)."""
+    import numpy as np
 
-    emb, queries, exact = emb_and_exact
-    fast = cosine_topk_pandas(emb, queries, k=K)
-    exp = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in exact.collect()
-    }
+    X = np.asarray(vecs, dtype=np.float64)
+    norms = np.linalg.norm(X, axis=1)
+    pos = {v: i for i, v in enumerate(ids)}
+    out = {}
+    for q in query_ids:
+        qv = X[pos[q]]
+        cos = np.round(X @ qv / (norms * np.linalg.norm(qv)), 6)
+        ranked = sorted(
+            (-c, i) for i, c in zip(ids, cos) if not (exclude_self and i == q)
+        )[:k]
+        for rank, (negc, i) in enumerate(ranked, 1):
+            out[(q, rank)] = (i, -negc)
+    return out
+
+
+@pytest.mark.parametrize(
+    "k,exclude_self", [(5, True), (5, False), (1000, True)],
+    ids=["k5", "k5-with-self", "k-above-corpus"],
+)
+def test_cosine_topk_matches_numpy_brute_force(spark, k, exclude_self):
+    """cosine_topk against a float64 NumPy brute force over a corpus split
+    into several Arrow batches: the same ids, ranks and scores. Vectors
+    duplicated under other ids tie exactly and must rank by id asc;
+    ``exclude_self=False`` returns the query itself; k above the corpus
+    size returns the whole corpus."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    vecs = [
+        [float(x) for x in v]
+        for v in rng.normal(size=(200, 16)).astype(np.float32)
+    ]
+    ids = list(range(100, 300))
+    # Copies of vectors 103 and 150 under lower and higher ids.
+    for dup_id, src in ((5, 103), (400, 103), (7, 150), (900, 150)):
+        ids.append(dup_id)
+        vecs.append(vecs[src - 100])
+    corpus = spark.createDataFrame(
+        list(zip(ids, vecs)), "vec_id long, embedding array<float>"
+    ).repartition(3)
+    query_ids = [103, 150, 107]
     got = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in fast.collect()
+        for r in cosine_topk(
+            corpus,
+            corpus.filter(F.col("vec_id").isin(query_ids)),
+            k=k,
+            exclude_self=exclude_self,
+        ).collect()
     }
-    assert set(exp) == set(got)
-    for key, (nid, cos) in exp.items():
-        g_nid, g_cos = got[key]
-        assert g_nid == nid, (key, nid, g_nid)
-        assert abs(g_cos - cos) < 2e-6, (key, cos, g_cos)
+    assert got == _brute_topk(ids, vecs, query_ids, k, exclude_self)
 
+
+
+def test_cosine_topk_query_blocks(spark, monkeypatch):
+    """A query set above ``_MAX_QUERIES`` runs as one kernel stage per
+    block of queries, and the blocks' candidates union before the one
+    top-k window: the same rows as the brute force, for cosine_topk and
+    for mine_hard_negatives' per-query exclusion sets."""
+    import numpy as np
+
+    from polars_nexpresso_spark.functions import similarity
+    from polars_nexpresso_spark.functions.similarity import (
+        mine_hard_negatives,
+    )
+
+    monkeypatch.setattr(similarity, "_MAX_QUERIES", 3)
+    rng = np.random.default_rng(11)
+    vecs = [
+        [float(x) for x in v]
+        for v in rng.normal(size=(120, 8)).astype(np.float32)
+    ]
+    ids = list(range(120))
+    corpus = spark.createDataFrame(
+        list(zip(ids, vecs)), "vec_id long, embedding array<float>"
+    ).repartition(3)
+    query_ids = list(range(0, 100, 10))  # 10 queries: blocks of 3, 3, 3, 1
+    queries = corpus.filter(F.col("vec_id").isin(query_ids))
+    out = cosine_topk(corpus, queries, k=4)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.split("== Initial Plan ==")[-1].count("MapInPandas") == 4
+    got = {
+        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
+        for r in out.collect()
+    }
+    assert got == _brute_topk(ids, vecs, query_ids, 4, True)
+
+    # Each query's positives are its brute-force top-2: the mined
+    # negatives are the brute force's ranks 3-5.
+    exp = _brute_topk(ids, vecs, query_ids, 5, True)
+    positives = spark.createDataFrame(
+        [(q, exp[(q, r)][0]) for q in query_ids for r in (1, 2)],
+        "query_id long, doc_id long",
+    )
+    mined = mine_hard_negatives(corpus, queries, positives, k=3).collect()
+    assert {(r["query_id"], r["rank"]): r["neighbor_id"] for r in mined} == {
+        (q, r - 2): exp[(q, r)][0] for q in query_ids for r in (3, 4, 5)
+    }
 
 def test_quantize_embeddings_codes_and_scale(spark):
     from polars_nexpresso_spark.functions.similarity import (

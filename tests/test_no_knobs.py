@@ -71,3 +71,15 @@ def test_no_same_result_switches_on_public_functions():
         for name in sorted(names & {"strategy", "max_expr_dims"})
     ]
     assert not found, "\n".join(found)
+
+
+def test_no_pandas_twins_of_public_functions():
+    """One engine per operator: no public ``functions/`` name ends in
+    ``_pandas`` beside an expression twin (``cosine_topk`` runs its NumPy
+    kernel itself)."""
+    found = [
+        where
+        for where, _ in _public_function_params()
+        if where.startswith("functions/") and where.endswith("_pandas")
+    ]
+    assert not found, "\n".join(found)

@@ -249,9 +249,9 @@ def test_knn_label_majority_vote_and_ties(spark):
 
 
 def test_knn_label_corpus_never_shuffles(spark):
-    """cosine_topk's scale contract survives the label join: no
-    Exchange upstream of the labeled corpus scan (queries broadcast;
-    the only exchanges carry per-partition top-k and vote partials)."""
+    """cosine_topk's scale contract survives the label join: the
+    k-bounded neighbor rows broadcast into the label lookup, so the
+    labeled corpus streams unshuffled."""
     from polars_nexpresso_spark.functions.similarity import knn_label
 
     labeled = spark.createDataFrame(
@@ -261,12 +261,32 @@ def test_knn_label_corpus_never_shuffles(spark):
     queries = spark.createDataFrame(
         [(100, [1.0, 1.0])], "vec_id long, embedding array<float>"
     )
-    plan = (
-        knn_label(labeled, queries, k=3)
-        ._jdf.queryExecution().executedPlan().toString()
+    def walk(node):
+        yield node
+        children = node.children()
+        for i in range(children.size()):
+            yield from walk(children.apply(i))
+
+    def names(node):
+        return [n.nodeName() for n in walk(node)]
+
+    plan = knn_label(labeled, queries, k=3)._jdf.queryExecution().executedPlan()
+    plan = getattr(plan, "executedPlan", lambda: plan)()  # AQE's current plan
+    joins = [n for n in walk(plan) if n.nodeName() == "BroadcastHashJoin"]
+    assert len(joins) == 1, names(plan)
+    join = joins[0]
+    build = 0 if join.buildSide().toString() == "BuildLeft" else 1
+    nn_side = join.children().apply(build)
+    corpus_side = join.children().apply(1 - build)
+    # The broadcast side is cosine_topk's output: the kernel stage sits
+    # under the BroadcastExchange.
+    assert names(nn_side)[0] == "BroadcastExchange", names(nn_side)
+    assert "MapInPandas" in names(nn_side)
+    # The labeled corpus reaches the join with no Exchange above its scan.
+    assert not any("Exchange" in n for n in names(corpus_side)), names(
+        corpus_side
     )
-    assert "BroadcastExchange" in plan  # the query side
-    assert "CartesianProduct" not in plan
+    assert "CartesianProduct" not in names(plan)
 
 
 # ------------------------------------------------- round-9: diversity_sample

@@ -65,13 +65,22 @@ def test_minhash_scan_reads_two_columns(spark):
 
 
 def test_cosine_topk_broadcasts_queries(spark):
+    """The query set rides the kernel's closure: the corpus is scanned
+    once, by one MapInPandas, with no join of any kind, and the one
+    exchange is the per-query window over at most k rows per (query,
+    corpus batch)."""
     from pyspark.sql import functions as F
 
     from polars_nexpresso_spark.functions.similarity import cosine_topk
 
     emb = read_table(spark, SF, "embeddings")
-    p = plan(cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=3))
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p
+    df = cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=3)
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert p.count("FileScan parquet") == 1
+    assert p.count("MapInPandas") == 1
+    assert p.count("Exchange") == 1
+    assert p.count("Exchange hashpartitioning(query_id") == 1
+    assert "Join" not in p
     assert "BatchEvalPython" not in p
 
 
@@ -422,10 +431,10 @@ def test_round7_operator_shuffle_budgets(spark):
     fan-in, removal-position agg, doc reassembly join).
     temperature_mix = 1 (the per-source agg; its whole-frame window
     runs on the #sources planning table — pinned bounded in
-    test_catalog_unpartitioned_windows_are_bounded). hard_negatives'
-    BroadcastNestedLoopJoin is the deliberate broadcast-queries
-    cross-score (same contract as cosine_topk) — everything else must
-    stay warning-free, and no operator may touch row-Python."""
+    test_catalog_unpartitioned_windows_are_bounded). hard_negatives =
+    cosine_topk's kernel: one Arrow stage and its top-k window.
+    Everything else must stay warning-free, and no operator may touch
+    row-Python."""
     import __spark_entry__ as em
 
     from polars_nexpresso_spark.plans.audit import scale_report
@@ -438,7 +447,7 @@ def test_round7_operator_shuffle_budgets(spark):
         "dedup_best_keep": (2, 0),
         "exact_substring_dedup": (3, 0),
         "temperature_mix": (1, 0),
-        "hard_negatives": (4, 0),
+        "hard_negatives": (1, 1),
         # ANN engine: candidate join + bounded re-rank past the
         # checkpoint; kmeans assignment is Arrow-batched by design.
         "hard_negatives_ann": (2, 4),
@@ -452,8 +461,7 @@ def test_round7_operator_shuffle_budgets(spark):
             w
             for w in rep["warnings"]
             if not (
-                name in ("hard_negatives", "temperature_mix")
-                and w.startswith(benign)
+                name == "temperature_mix" and w.startswith(benign)
             )
         ]
         assert hard_warnings == [], (name, hard_warnings)
@@ -549,17 +557,14 @@ def test_round7_session3_operator_shuffle_budgets(spark):
         "ivfpq_rerank": (2, 0),
         # + the positive-set collect_set agg; still zero warnings
         "hard_negatives_ivfpq": (3, 0),
-        # exact side = cosine_topk's two-phase top-k (several bounded
-        # exchanges) + the cascade's two windows + the recall join/agg
-        # on eval-set frames; the nested-loop is the exact scorer's
-        # broadcast query cross — its documented contract
-        "ann_recall": (7, 0),
+        # exact side = cosine_topk's kernel and its window + the
+        # cascade's two windows + the recall join/agg on eval-set frames
+        "ann_recall": (5, 1),
     }
     benign = {
         "token_shift": ("nested-loop-join", "window-without-partitionBy"),
         "apply_mix": ("window-without-partitionBy",),
         "pq_ann_topk": ("nested-loop-join",),
-        "ann_recall": ("nested-loop-join",),
     }
     for name, (max_exchanges, python_stages) in budgets.items():
         rep = scale_report(qs[name](spark, sf))
@@ -756,9 +761,8 @@ def test_round9_operator_shuffle_budgets(spark):
     chain — ZERO exchanges, zero Python. dedup_index_stream is the
     stream probe's whole point: ZERO exchanges, two Arrow stages (the
     fp membership search and the band-dictionary probe). knn_label = 2
-    exchanges (per-partition top-k partials + vote agg); its
-    nested-loop join is cosine_topk's CONTRACT — the broadcast query
-    cross join every exact scorer pays. diversity_sample = 1 exchange
+    exchanges (cosine_topk's top-k window + the query-keyed vote) and
+    cosine_topk's one Arrow stage. diversity_sample = 1 exchange
     (the cell-keyed cap window) + the Arrow cell-assignment stage.
     oov_rate = 4 PLAN-TEXT exchanges over a persisted Zipf-small count
     table — the counts agg appears under BOTH InMemoryTableScan
@@ -777,12 +781,12 @@ def test_round9_operator_shuffle_budgets(spark):
     budgets = {
         "lexical_diversity": (0, 0),
         "dedup_index_stream": (0, 2),
-        "knn_label": (2, 0),
+        "knn_label": (2, 1),
         "diversity_sample": (1, 1),
         "oov_rate": (4, 0),
         "curriculum_shards": (1, 0),
     }
-    broadcast_by_contract = ("knn_label", "curriculum_shards")
+    broadcast_by_contract = ("curriculum_shards",)
     for name, (max_exchanges, python_stages) in budgets.items():
         rep = scale_report(qs[name](spark, sf))
         hard_warnings = [
@@ -811,9 +815,8 @@ def test_mmr_per_query_one_exchange_per_side(spark):
     exactly one exchange per input side and FlatMapGroupsInPandas
     consumes the join output with NO extra exchange. In the registry
     query the candidate side additionally carries cosine_topk's
-    shortlist plumbing; budget: 2 hash exchanges, 1 python stage (the
-    grouped kernel), and the only nested-loop join is cosine_topk's
-    broadcast-query contract."""
+    shortlist; budget: 2 hash exchanges, 2 python stages (cosine_topk's
+    kernel and the grouped MMR kernel), no warnings."""
     import __spark_entry__ as em
 
     from polars_nexpresso_spark.plans.audit import scale_report
@@ -821,12 +824,9 @@ def test_mmr_per_query_one_exchange_per_side(spark):
     rep = scale_report(
         em.queries()["mmr_per_query"](spark, "/root/testdata/sf0.001")
     )
-    hard = [
-        w for w in rep["warnings"] if not w.startswith("nested-loop-join")
-    ]
-    assert hard == [], hard
+    assert rep["warnings"] == [], rep["warnings"]
     assert rep["exchanges"] <= 2, rep["exchanges"]
-    assert rep["python_stages"] <= 1, rep["python_stages"]
+    assert rep["python_stages"] <= 2, rep["python_stages"]
     # the bare operator (no shortlist upstream): join + groupBy share
     # one partitioning; FlatMapGroupsInPandas sits directly on the join
     import re
@@ -855,12 +855,10 @@ def test_round10_gate_and_eval_shuffle_budgets(spark):
     per-source window). char_entropy / encoding_quality /
     curriculum_replay(read side) = pure map-side, ZERO exchanges.
     mmr_diversity_eval is an EVAL op composing two shortlist builds
-    (cosine_topk's broadcast-query contract — the nested-loop warning
-    is that contract) with two intra-list self-joins: its exchanges all
-    carry k-BOUNDED shortlist rows (n_queries x 20 at most), never the
-    corpus — the corpus-scale cosine scoring stays map-side; budget 16
-    exchanges / 3 Arrow stages pins today's shape against silent
-    regressions."""
+    (cosine_topk's kernel) with two intra-list self-joins: its exchanges
+    all carry k-BOUNDED shortlist rows (n_queries x 20 at most), never
+    the corpus — the corpus-scale cosine scoring stays map-side; the
+    budget pins today's shape against silent regressions."""
     import __spark_entry__ as em
 
     from polars_nexpresso_spark.plans.audit import scale_report
@@ -874,7 +872,15 @@ def test_round10_gate_and_eval_shuffle_budgets(spark):
         # 16 -> 18 in r11: intra_list_similarity now de-duplicates
         # (query, id) rows before pairing (r10 advice) — one extra
         # k-bounded exchange per eval side, still never the corpus.
-        "mmr_diversity_eval": (18, 3),
+        # 3 -> 9 with cosine_topk's kernel: its one Arrow stage prints
+        # once in each of the six branches that read the shortlist. After
+        # a collect at sf0.001 the final plan runs it twice (the MMR
+        # branch's window carries an inferred query filter and limit 20,
+        # the rank <= 8 readers share one limit-8 exchange, the other
+        # readers reuse exchanges above them); the old SQL scorer ran
+        # once. Interleaved fresh-process runs at sf0.1, local[4] on 4
+        # vCPUs (scripts/ab_probe.py, 6 pairs): 4.11 -> 3.83 s median.
+        "mmr_diversity_eval": (18, 9),
         # r11 composed cascade (IVF shortlists -> MMR -> intra-list):
         # every exchange carries n_queries x <= 20 shortlist rows; the
         # python_stages count is plan-STRING occurrences — the shared
@@ -890,15 +896,7 @@ def test_round10_gate_and_eval_shuffle_budgets(spark):
     }
     for name, (max_exchanges, python_stages) in budgets.items():
         rep = scale_report(qs[name](spark, sf))
-        hard = [
-            w
-            for w in rep["warnings"]
-            if not (
-                name == "mmr_diversity_eval"
-                and w.startswith("nested-loop-join")
-            )
-        ]
-        assert hard == [], (name, hard)
+        assert rep["warnings"] == [], (name, rep["warnings"])
         assert rep["exchanges"] <= max_exchanges, (name, rep["exchanges"])
         assert rep["python_stages"] <= python_stages, (
             name, rep["python_stages"],
