@@ -763,8 +763,9 @@ def cosine_topk_int8(
     INTEGER arithmetic (dot product and squared norms of the codes —
     cosine is scale-invariant so the per-vector scales cancel), followed
     by one double division — bit-reproducible, so even this approximate
-    engine has an exact DuckDB oracle. Queries broadcast, scoring is
-    map-side, and the top-k is the per-query window.
+    engine has an exact DuckDB oracle. A zero norm product clamps to 1
+    (:func:`_safe`), so a zero vector scores 0. Queries broadcast,
+    scoring is map-side, and the top-k is the per-query window.
 
     Returns ``(query_id, neighbor_id, cosine_q, rank)`` where
     ``cosine_q`` is the quantized-space cosine (within ~1e-2 of the
@@ -797,7 +798,7 @@ def cosine_topk_int8(
         "cosine_q",
         F.round(
             _idot(F.col("__cv"), F.col("__qv"))
-            / F.sqrt(F.col("__cn2").cast("double") * F.col("__qn2")),
+            / F.sqrt(_safe(F.col("__cn2").cast("double") * F.col("__qn2"))),
             6,
         ),
     )

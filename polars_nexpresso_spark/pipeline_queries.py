@@ -2095,7 +2095,8 @@ PIPELINE_ORACLE_SQL: dict[str, str] = {
     """,
     # Int8 quantization replayed exactly: per-vector scale = max|x|/127,
     # ROUND-half-away codes (both engines), INTEGER dot/norms (exact in
-    # double at these magnitudes), one double division + round.
+    # double at these magnitudes), one double division + round; a zero
+    # vector's norm product clamps to 1, so it scores 0.
     "cosine_topk_int8": """
         WITH base AS (
           SELECT vec_id, embedding,
@@ -2117,20 +2118,23 @@ PIPELINE_ORACLE_SQL: dict[str, str] = {
           SELECT vec_id, qv,
                  list_sum(list_transform(qv, x -> x * x)) AS n2
           FROM qz
-        )
-        SELECT query_id, neighbor_id, cosine_q, rank FROM (
+        ),
+        scored AS (
           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                  ROUND(list_dot_product(c.qv, q.qv)
-                       / SQRT(c.n2::DOUBLE * q.n2), 6) AS cosine_q,
-                 ROW_NUMBER() OVER (
-                   PARTITION BY q.vec_id
-                   ORDER BY ROUND(list_dot_product(c.qv, q.qv)
-                                  / SQRT(c.n2::DOUBLE * q.n2), 6) DESC,
-                            c.vec_id ASC
-                 ) AS rank
+                       / SQRT(CASE WHEN c.n2 = 0 OR q.n2 = 0 THEN 1.0
+                                   ELSE c.n2::DOUBLE * q.n2 END), 6)
+                   AS cosine_q
           FROM n c
           CROSS JOIN (SELECT * FROM n WHERE vec_id < 10) q
           WHERE c.vec_id != q.vec_id
+        )
+        SELECT query_id, neighbor_id, cosine_q, rank FROM (
+          SELECT *, ROW_NUMBER() OVER (
+                      PARTITION BY query_id
+                      ORDER BY cosine_q DESC, neighbor_id ASC
+                    ) AS rank
+          FROM scored
         ) WHERE rank <= 5
     """,
     # Bigram LM scoring replayed exactly: same multiset bigrams (full-

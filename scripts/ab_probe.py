@@ -7,7 +7,10 @@
 Every measurement is ONE fresh python+JVM per (tree, query): 1 warm-up,
 then the median of 3 timed runs through the ``noop`` sink — the same
 protocol bench.py uses per group. The scale is ``$SPARK_GRAFT_SF_DIR``
-(default /root/testdata/sf0.1).
+(default /root/testdata/sf0.1). Each process also reports ``compiled``,
+the number of classes whole-stage codegen compiled during its three
+timed runs: after the warm-up a repeated query should compile next to
+nothing, so a rise there is a codegen-cache regression.
 
 Without ``--base`` each query runs once in this tree. With ``--base``
 the two trees alternate A/B/A/B in the same host window (two processes
@@ -45,13 +48,18 @@ spark.sparkContext.setLogLevel("ERROR")
 def run():
     q(spark, {sf_dir!r}).write.format("noop").mode("overwrite").save()
 
+def compiled():
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
 run()  # warm-up: codegen + shuffle-file warm
 runs = []
+c0 = compiled()
 for _ in range(3):
     t0 = time.perf_counter()
     run()
     runs.append(round(time.perf_counter() - t0, 3))
-print(json.dumps({{"runs": runs}}))
+print(json.dumps({{"runs": runs, "compiled": compiled() - c0}}))
 """
 
 
@@ -68,7 +76,8 @@ def measure(tree: str, name: str, sf_dir: str) -> dict:
     rec: dict = {"query": name, "tree": tree}
     for line in reversed(proc.stdout.strip().splitlines()):
         try:
-            rec["runs"] = json.loads(line)["runs"]
+            out = json.loads(line)
+            rec["runs"], rec["compiled"] = out["runs"], out["compiled"]
         except (json.JSONDecodeError, KeyError, TypeError):
             continue
         rec["median"] = statistics.median(rec["runs"])

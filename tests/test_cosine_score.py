@@ -52,6 +52,7 @@ def _zero_cases(df):
         "embedding_cosine_pairs": lambda: dedup.embedding_cosine_pairs(
             df, "embedding", "vec_id", threshold=-1.0
         ),
+        "cosine_topk_int8": lambda: sim.cosine_topk_int8(df, queries, k=5),
     }
 
 
@@ -65,6 +66,7 @@ def _zero_cases(df):
         "semantic_dedup",
         "mine_hard_negatives",
         "embedding_cosine_pairs",
+        "cosine_topk_int8",
     ],
 )
 def test_zero_vector_scores_zero(zero_frame, op):
@@ -82,9 +84,29 @@ def test_zero_vector_scores_zero(zero_frame, op):
     id_cols = ("id_a", "id_b") if op == "embedding_cosine_pairs" else (
         "query_id", "neighbor_id"
     )
+    score = "cosine_q" if op == "cosine_topk_int8" else "cosine"
     zero_rows = [r for r in rows if 0 in (r[id_cols[0]], r[id_cols[1]])]
     assert zero_rows
-    assert {r["cosine"] for r in zero_rows} == {0.0}
+    assert {r[score] for r in zero_rows} == {0.0}
+
+
+def test_cosine_topk_int8_zero_vector_matches_oracle(zero_frame, tmp_path):
+    """The registry's DuckDB oracle clamps the zero norm product the same
+    way, so the int8 scores stay hash-exact with a zero vector present."""
+    import duckdb
+
+    from polars_nexpresso_spark.pipeline_queries import PIPELINE_ORACLE_SQL
+
+    path = str(tmp_path / "embeddings.parquet")
+    zero_frame.toPandas().to_parquet(path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    want = sorted(con.execute(PIPELINE_ORACLE_SQL["cosine_topk_int8"]).fetchall())
+    got = sim.cosine_topk_int8(zero_frame, zero_frame.filter("vec_id < 10"), k=5)
+    got = sorted(tuple(r) for r in got.select(
+        "query_id", "neighbor_id", "cosine_q", "rank").collect())
+    assert [r for r in want if 0 in r[:2]]
+    assert got == want
 
 
 def test_cosine_topk_skips_null_vectors(spark):
